@@ -5,10 +5,11 @@
 Run from the root of a source checkout.  One invocation runs one workload
 in this process on ``local[N]`` (N = CPUs available to the process, shuffle
 partitions = N): it starts a Spark session, generates every input from the
-seed, sets up, warms up, then repeats the workload's operation for
-``--seconds`` and checks every output.  With ``--trace 1`` it then runs one
-more operation composed stage by stage under spans and reports the
-per-layer metrics instead of the end-to-end ones.
+seed, sets up, warms up (unless the workload's set-up already warms the
+session), then repeats the workload's operation for ``--seconds`` and at
+least ``min_ops`` times, and checks every output.  With ``--trace 1`` it
+then runs one more operation composed stage by stage under spans and
+reports the per-layer metrics instead of the end-to-end ones.
 
 Standard output: a human-readable table, one ``perfbench-context`` JSON
 line (seed, host load, raw per-repetition times, versions, every named
@@ -116,11 +117,11 @@ def stop_spark(spark) -> None:
             pass
 
 
-def attempt(wl) -> dict:
+def attempt(op) -> dict:
     """One operation; one that raises is a failed result, not a crash."""
     t0 = time.perf_counter()
     try:
-        r = wl.op()
+        r = op()
     except Exception as exc:
         r = {"ok": False, "error": f"{type(exc).__name__}: {exc}", "parts": {}, "steps": [],
              "checks": 1}
@@ -137,7 +138,7 @@ def run_ops(wl, seconds: float) -> list[dict]:
     ops = []
     deadline = time.perf_counter() + seconds
     while len(ops) < wl.min_ops or time.perf_counter() < deadline:
-        ops.append(attempt(wl))
+        ops.append(attempt(wl.op))
     return ops
 
 
@@ -216,16 +217,19 @@ def main(argv=None) -> int:
         wl.once()
         once_s = time.perf_counter() - t0
         t0 = time.perf_counter()
-        warm = attempt(wl)  # the warm-up's outputs are checked too
+        # the warm-up's outputs are checked too.  A traced run always warms
+        # up, so that the untraced and the traced operation it compares
+        # both run warm
+        warm = [attempt(wl.op)] if wl.warm_up or args.trace else []
         warm_s = time.perf_counter() - t0
         setup_s = session_s + _median(prep) + once_s + warm_s
         ctx["setup"] = {"session_s": session_s, "prepare_s": prep, "once_s": once_s,
                         "warmup_s": warm_s}
 
         ops = run_ops(wl, args.seconds)
-        attempted = sum(o["checks"] for o in [warm] + ops)
-        failed = sum(o["failed_checks"] for o in [warm] + ops)
-        errors = [str(o["error"])[:300] for o in [warm] + ops if o["failed_checks"]]
+        attempted = sum(o["checks"] for o in warm + ops)
+        failed = sum(o["failed_checks"] for o in warm + ops)
+        errors = [str(o["error"])[:300] for o in warm + ops if o["failed_checks"]]
         peak_mb = sampler.stop()
         gated, named = end_to_end(wl, ops, setup_s, peak_mb)
         named["error_rate"] = failed / attempted

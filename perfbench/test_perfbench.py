@@ -20,7 +20,13 @@ sys.path.insert(0, ROOT)
 
 from perfbench import gen  # noqa: E402
 from perfbench.layers import time_metric  # noqa: E402
-from perfbench.trace import Tracer, _first_quantity, steal_share, union_length  # noqa: E402
+from perfbench.trace import (  # noqa: E402
+    SparkLedger,
+    Tracer,
+    _first_quantity,
+    steal_share,
+    union_length,
+)
 
 
 def test_vectors_deterministic_per_seed():
@@ -70,6 +76,25 @@ def test_spans_nest_and_self_time_is_non_negative():
     assert agg["a.b"]["count"] == 2
     assert agg["root"]["self"] < agg["root"]["total"]
     assert time_metric("a.b") == "a.b_s" and time_metric("vote") == "vote.s"
+
+
+def test_recorded_spans_overlap_and_take_no_jobs():
+    tr = Tracer("t")
+    with tr.span("root") as root:
+        t0, w0 = time.perf_counter(), time.time()
+        time.sleep(0.03)
+        t1, w1 = time.perf_counter(), time.time()
+        a = tr.record("s.a", t0, t1, w0, w1)
+        b = tr.record("s.b", t0 + 0.01, t1, w0 + 0.01, w1)
+    assert a.parent == b.parent == root.id and a.overlapping and b.overlapping
+    selfs = tr.self_times()
+    assert selfs[a.id] == pytest.approx(t1 - t0)
+    assert selfs[root.id] == pytest.approx((root.end - root.start) - (t1 - t0))
+    # a job submitted while both ran, from a thread without a description,
+    # goes to the enclosing span
+    ledger = SparkLedger.__new__(SparkLedger)
+    ledger.jobs_since = lambda mark: [{"desc": None, "submit": w0 + 0.02}]
+    assert list(ledger.jobs_by_span(None, tr.spans)) == [root.id]
 
 
 def test_union_length_merges_overlaps():

@@ -54,6 +54,8 @@ class Span:
     wall_start: float
     end: float | None = None
     wall_end: float | None = None
+    #: ran side by side with its siblings (see ``Tracer.record``)
+    overlapping: bool = False
 
 
 class Tracer:
@@ -86,6 +88,17 @@ class Tracer:
             sp.end, sp.wall_end = time.perf_counter(), time.time()
             self._stack.pop()
             self._describe(parent)
+
+    def record(self, name: str, start: float, end: float, wall_start: float,
+               wall_end: float) -> Span:
+        """Add a finished span under the open one, for work that ran side by
+        side with other work (concurrent streaming queries).  Jobs are not
+        attributed to it by submission time; they stay on the open span."""
+        parent = self._stack[-1] if self._stack else None
+        sp = Span(len(self.spans), name, parent.id if parent else None, self.run_id,
+                  start, wall_start, end, wall_end, overlapping=True)
+        self.spans.append(sp)
+        return sp
 
     def self_times(self) -> dict[int, float]:
         """Span id -> duration minus the union of its children's intervals."""
@@ -259,7 +272,8 @@ class SparkLedger:
             if m:
                 out.setdefault(int(m.group(1)), []).append(j)
                 continue
-            inner = [s for s in spans if j["submit"] and s.wall_start <= j["submit"] <= s.wall_end]
+            inner = [s for s in spans if j["submit"] and not s.overlapping
+                     and s.wall_start <= j["submit"] <= s.wall_end]
             if inner:
                 out.setdefault(max(inner, key=lambda s: s.wall_start).id, []).append(j)
         return out

@@ -4,6 +4,11 @@ vectors are split into time-ordered micro-batch files and streamed with
 ``streaming/curation.py``; every store is then resolved and compared with
 its batch operator over the same rows (answers computed in set-up).
 
+The nine sinks run as nine streaming queries started together, as a
+deployment runs its curation streams side by side; the stores are then
+resolved one at a time.  ``pipeline_mix`` runs this pass after its
+queries, over its own events and documents tables.
+
 ``incremental_components`` is left out: at useful sizes it alone runs
 longer, and runs more jobs, than every other sink together."""
 
@@ -20,7 +25,7 @@ import pyarrow.parquet as pq
 from perfbench import gen
 
 SIZES = {
-    "small": dict(events=6000, docs=400, vectors=3000, batches=3),
+    "small": dict(events=6000, docs=300, vectors=1200, batches=2),
     "tiny": dict(events=600, docs=60, vectors=400, batches=2),
 }
 DIM = 64
@@ -64,12 +69,15 @@ def _files(path: str) -> int:
 
 class CurationStream:
     name = "curation_stream"
-    #: one operation is ~40 s of nine streams; one after the warm-up
     min_ops = 1
+    warm_up = True
 
     def __init__(self, spark, seed: int, work: str, size: str = "small"):
         self.spark, self.seed, self.work = spark, seed, work
         self.size = SIZES[size]
+        #: events and documents to stream instead of generated ones
+        #: (``pipeline_mix`` sets its own before ``prepare``)
+        self.tables: dict | None = None
         self.src = os.path.join(work, "stream-src")
         self.expected: dict = {}
         self.quality: dict = {}
@@ -79,8 +87,11 @@ class CurationStream:
     def inputs(self) -> dict[str, pa.Table]:
         s = self.size
         rng = gen.rng_for(self.seed, "stream")
-        ev = gen._events(rng, s["events"])
-        docs = gen._documents(rng, s["docs"]).select(["doc_id", "text"])
+        if self.tables is None:
+            ev, docs = gen._events(rng, s["events"]), gen._documents(rng, s["docs"])
+        else:
+            ev, docs = self.tables["events"], self.tables["documents"]
+        docs = docs.select(["doc_id", "text"])
         vec = _unit(gen.clustered_vectors(self.seed, s["vectors"], dim=DIM, comps=16))
         base = _unit(gen.clustered_vectors(self.seed + 1, s["vectors"], dim=DIM, comps=16))
         ids = pa.array(np.arange(s["vectors"], dtype=np.int64))
@@ -174,21 +185,38 @@ class CurationStream:
             return C.incremental_shingles(stream, store, ckpt)
         raise ValueError(sink)
 
-    def ingest(self, sink: str, root: str) -> list[float]:
-        """Run one sink's stream to completion; its trigger durations (s)."""
-        q = self.writer(sink, root).trigger(availableNow=True).start()
+    def ingest_all(self, base: str) -> tuple[dict, dict]:
+        """Start every sink's stream, then wait until all have ended.
+        Returns ({sink: (perf start, perf end, wall start, wall end, trigger
+        durations in s)}, {sink: error})."""
+        runs, errors, queries = {}, {}, {}
+        for sink in SINKS:
+            t, w = time.perf_counter(), time.time()
+            try:
+                queries[sink] = (self.writer(sink, os.path.join(base, sink))
+                                 .trigger(availableNow=True).start())
+                runs[sink] = [t, None, w, None, []]
+            except Exception as exc:
+                errors[sink] = f"{type(exc).__name__}: {str(exc)[:200]}"
+        pending = dict(queries)
         try:
-            q.awaitTermination()
+            while pending:
+                for sink, q in list(pending.items()):
+                    if not q.isActive:
+                        runs[sink][1], runs[sink][3] = time.perf_counter(), time.time()
+                        del pending[sink]
+                time.sleep(0.02)
+        finally:
+            for q in pending.values():
+                q.stop()
+        for sink, q in queries.items():
             if q.exception() is not None:
-                raise RuntimeError(str(q.exception()))
-            out = []
+                errors[sink] = str(q.exception())[:200]
             for p in q.recentProgress:
                 p = p if isinstance(p, dict) else p.jsonValue()
                 if p.get("numInputRows"):
-                    out.append(p["durationMs"]["triggerExecution"] / 1e3)
-            return out
-        finally:
-            q.stop()
+                    runs[sink][4].append(p["durationMs"]["triggerExecution"] / 1e3)
+        return {k: tuple(v) for k, v in runs.items()}, errors
 
     def resolve(self, sink: str, root: str):
         """The store's answer in the same form as ``self.expected[sink]``."""
@@ -230,41 +258,38 @@ class CurationStream:
 
     def op(self) -> dict:
         base = self._root()
-        triggers, ingest_s, resolve_s, errors = [], 0.0, 0.0, {}
         t0 = time.perf_counter()
-        for sink in SINKS:
-            i0 = time.perf_counter()
-            try:
-                triggers += self.ingest(sink, os.path.join(base, sink))
-            except Exception as exc:  # counted, reported, and the op goes on
-                errors[sink] = f"{type(exc).__name__}: {str(exc)[:200]}"
-            ingest_s += time.perf_counter() - i0
-        answers = {}
-        for sink in SINKS:
+        runs, errors = self.ingest_all(base)
+        ingest_s = time.perf_counter() - t0
+        answers, resolves = {}, []
+        for sink in runs:
             r0 = time.perf_counter()
             try:
                 answers[sink] = self.resolve(sink, os.path.join(base, sink))
-            except Exception as exc:
+            except Exception as exc:  # counted, reported, and the op goes on
                 errors.setdefault(sink, f"{type(exc).__name__}: {str(exc)[:200]}")
-            resolve_s += time.perf_counter() - r0
+            resolves.append(time.perf_counter() - r0)
         total = time.perf_counter() - t0
         for sink, answer in answers.items():
             if answer != self.expected[sink]:
                 errors.setdefault(sink, "resolved store differs from the batch operator")
+        triggers = [d for r in runs.values() for d in r[4]]
         return {"ok": not errors, "checks": len(SINKS), "failed_checks": len(errors),
                 "error": "; ".join(f"{k}: {v}" for k, v in errors.items()) or None,
-                "steps": triggers, "op_s": total,
-                "parts": {"stream_s": total, "ingest_s": ingest_s, "resolve_s": resolve_s,
+                "steps": triggers, "resolves": resolves, "op_s": total,
+                "parts": {"stream_s": total, "ingest_s": ingest_s, "resolve_s": sum(resolves),
                           "batch_p50_s": statistics.median(triggers) if triggers else 0.0}}
 
     def traced_op(self, tr) -> dict:
+        """The same pass.  Each sink's stream becomes a span over its run;
+        the streams overlap, so their jobs count on the enclosing span."""
         base = self._root()
-        counters, ok = {}, True
-        for sink in SINKS:
-            root = os.path.join(base, sink)
-            with tr.span(f"stream.{sink}_ingest"):
-                self.ingest(sink, root)
-            counters[f"stream.{sink}_store_files"] = _files(os.path.join(root, "store"))
+        counters = {}
+        runs, errors = self.ingest_all(base)
+        for sink, (t0, t1, w0, w1, _) in runs.items():
+            tr.record(f"stream.{sink}_ingest", t0, t1, w0, w1)
+            counters[f"stream.{sink}_store_files"] = _files(os.path.join(base, sink, "store"))
+        ok = not errors
         for sink in SINKS:
             with tr.span(f"stream.{sink}_resolve"):
                 ok = self.resolve(sink, os.path.join(base, sink)) == self.expected[sink] and ok
