@@ -248,6 +248,8 @@ class WatermarkAttacked(WatermarkClean):
 
     name = "wm_attacked"
     method = "lsh"
+    #: the first operation after the warm-up is still slower (JIT); the
+    #: median of three is not moved by it
     min_ops = 3
 
     def __init__(self, spark, seed: int, work: str, size: str = "small"):
