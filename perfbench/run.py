@@ -217,10 +217,7 @@ def main(argv=None) -> int:
         wl.once()
         once_s = time.perf_counter() - t0
         t0 = time.perf_counter()
-        # the warm-up's outputs are checked too.  A traced run always warms
-        # up, so that the untraced and the traced operation it compares
-        # both run warm
-        warm = [attempt(wl.op)] if wl.warm_up or args.trace else []
+        warm = [attempt(wl.op)] if wl.warm_up else []  # its outputs are checked too
         warm_s = time.perf_counter() - t0
         setup_s = session_s + _median(prep) + once_s + warm_s
         ctx["setup"] = {"session_s": session_s, "prepare_s": prep, "once_s": once_s,
