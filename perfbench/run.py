@@ -5,11 +5,11 @@
 Run from the root of a source checkout.  One invocation runs one workload
 in this process on ``local[N]`` (N = CPUs available to the process, shuffle
 partitions = N): it starts a Spark session, generates every input from the
-seed, sets up, warms up (unless the workload's set-up already warms the
-session), then repeats the workload's operation for ``--seconds`` and at
-least ``min_ops`` times, and checks every output.  With ``--trace 1`` it
-then runs one more operation composed stage by stage under spans and
-reports the per-layer metrics instead of the end-to-end ones.
+seed, sets up, warms up, then repeats the workload's operation for
+``--seconds`` and at least ``min_ops`` times, and checks every output.
+With ``--trace 1`` it times one operation instead, then runs one more
+composed stage by stage under spans and reports the per-layer metrics
+instead of the end-to-end ones.
 
 Standard output: a human-readable table, one ``perfbench-context`` JSON
 line (seed, host load, raw per-repetition times, versions, every named
@@ -132,12 +132,12 @@ def attempt(op) -> dict:
     return r
 
 
-def run_ops(wl, seconds: float) -> list[dict]:
-    """Repeat the operation until ``seconds`` have passed and at least the
-    workload's ``min_ops`` ran."""
+def run_ops(wl, seconds: float, min_ops: int) -> list[dict]:
+    """Repeat the operation until ``seconds`` have passed and at least
+    ``min_ops`` ran."""
     ops = []
     deadline = time.perf_counter() + seconds
-    while len(ops) < wl.min_ops or time.perf_counter() < deadline:
+    while len(ops) < min_ops or time.perf_counter() < deadline:
         ops.append(attempt(wl.op))
     return ops
 
@@ -145,13 +145,12 @@ def run_ops(wl, seconds: float) -> list[dict]:
 def end_to_end(wl, ops, setup_s: float, peak_mb: float) -> tuple[dict, dict]:
     """(metrics named in BENCHMARK.json, every named metric of the workload)."""
     good = [o for o in ops if o["ok"]] or ops
-    steps = [v for o in good for v in o["steps"]]
     named = {k: _median([o["parts"][k] for o in good if k in o["parts"]])
              for k in {k for o in good for k in o["parts"]}}
     named.update(wl.quality)
     gated = {
         "op_s": _median([o["op_s"] for o in good]),
-        "step_p50_s": _median(steps),
+        "step_p50_s": _median([_median(o["steps"]) for o in good]),
         "setup_s": setup_s,
         "peak_pss_mb": peak_mb,
     }
@@ -217,13 +216,15 @@ def main(argv=None) -> int:
         wl.once()
         once_s = time.perf_counter() - t0
         t0 = time.perf_counter()
-        warm = [attempt(wl.op)] if wl.warm_up else []  # its outputs are checked too
+        warm = [attempt(wl.warm)]  # its outputs are checked too
         warm_s = time.perf_counter() - t0
         setup_s = session_s + _median(prep) + once_s + warm_s
         ctx["setup"] = {"session_s": session_s, "prepare_s": prep, "once_s": once_s,
                         "warmup_s": warm_s}
 
-        ops = run_ops(wl, args.seconds)
+        # a traced run reports per-layer metrics only: one untraced
+        # operation is enough to give the tracing overhead
+        ops = run_ops(wl, args.seconds, 1 if args.trace else wl.min_ops)
         attempted = sum(o["checks"] for o in warm + ops)
         failed = sum(o["failed_checks"] for o in warm + ops)
         errors = [str(o["error"])[:300] for o in warm + ops if o["failed_checks"]]
