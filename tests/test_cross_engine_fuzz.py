@@ -223,3 +223,46 @@ def test_weighted_sampler_twins_agree(spark, fuzz_con, ids, key, k):
         ).fetchall()
     ]
     assert got == want, (key, k)
+
+
+def test_q5_half_cent_ties_round_alike(spark, tmp_path):
+    """q5 and its DuckDB twin round a planted exact half-cent revenue
+    half-up at any partitioning: NATION_0 is 4.275 + 8.265 + 9.595 =
+    22.135 and NATION_1 10.695 + 1.00 = 11.695.  Summed as doubles these
+    came out 22.134999999999998 and 11.694999999999999, one ulp-scale
+    error from the tie, and the cents then depended on summation order."""
+    from vectordb_watermark_spark.gallery import build_oracles, build_queries
+
+    tables = {
+        "region": ("r_regionkey INT", [(0,)]),
+        "nation": ("n_nationkey INT, n_name VARCHAR, n_regionkey INT",
+                   [(0, "NATION_0", 0), (1, "NATION_1", 0)]),
+        "customer": ("c_custkey INT, c_nationkey INT", [(0, 0), (1, 1)]),
+        "supplier": ("s_suppkey INT, s_nationkey INT", [(0, 0), (1, 1)]),
+        "orders": ("o_orderkey INT, o_custkey INT", [(1, 0), (2, 1), (3, 0)]),
+        "lineitem": (
+            "l_orderkey INT, l_suppkey INT, l_extendedprice DOUBLE, l_discount DOUBLE",
+            [(1, 0, 4.50, 0.05), (1, 0, 8.70, 0.05), (3, 0, 10.10, 0.05),
+             (2, 1, 11.50, 0.07), (2, 1, 1.00, 0.00)],
+        ),
+    }
+    con = duckdb.connect()
+    for name, (cols, rows) in tables.items():
+        path = tmp_path / f"{name}.parquet"
+        con.execute(f"CREATE TABLE t ({cols})")
+        con.executemany(f"INSERT INTO t VALUES ({', '.join('?' * len(rows[0]))})", rows)
+        con.execute(f"COPY t TO '{path}' (FORMAT PARQUET)")
+        con.execute(f"DROP TABLE t; CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
+    q5 = build_queries()["q5_nation_revenue"]
+    want = [("NATION_0", 22.14), ("NATION_1", 11.70)]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (1, 4):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            con.execute(f"SET threads = {n}")
+            got = sorted(tuple(r) for r in q5(spark, str(tmp_path)).collect())
+            twin = sorted(con.execute(build_oracles()["q5_nation_revenue"]).fetchall())
+            assert got == twin == want, n
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        con.close()

@@ -296,7 +296,7 @@ def test_sig_group_caches_bounded_registry(spark):
     )
 
 
-def test_sig_cache_key_digest_and_thread_safety(spark):
+def test_sig_cache_key_digest_and_thread_safety(spark, monkeypatch):
     """Cache-registry hardening (ADVICE r6): the registry key carries a
     sha256 digest of the CANONICALIZED plan alongside the 32-bit
     semanticHash, so two distinct plans cannot silently alias one registry
@@ -316,11 +316,14 @@ def test_sig_cache_key_digest_and_thread_safety(spark):
     assert k1 != k3 and k1[2] != k3[2], "distinct plans must differ in digest"
     assert len(k1) == 3 and len(k1[2]) == 64  # sha256 hex digest present
 
-    # concurrent register/release over lightweight fakes (fall back to the
-    # object-identity key): the OrderedDict must stay consistent and bounded
+    # concurrent register/release over lightweight fakes: they have no plan
+    # (an unreadable plan never enters the registry), so key them by
+    # identity here; the OrderedDict must stay consistent and bounded
     class _Fake:
         def unpersist(self):
             pass
+
+    monkeypatch.setattr(D, "_plan_cache_key", lambda g: ("fake", id(g), ""))
 
     D.release_signature_caches()
     errors = []
@@ -341,6 +344,32 @@ def test_sig_cache_key_digest_and_thread_safety(spark):
     assert not errors
     D.release_signature_caches()
     assert len(D._SIG_CACHES) == 0
+
+
+def test_sig_groups_unreadable_plan_never_registered(spark, monkeypatch):
+    """When the plan cannot be read the signature groups are computed but
+    never registered or served: two different corpora in sequence each get
+    their own groups, which an object-identity key could have mixed up
+    once Python recycled the first frame's id."""
+    import types
+
+    def unreadable(_):
+        raise RuntimeError("plan unavailable")
+
+    D.release_signature_caches()
+    monkeypatch.setattr(D, "hashlib", types.SimpleNamespace(sha256=unreadable))
+    assert D._plan_cache_key(spark.range(1)) is None
+    for texts in (["a b c d e", "a b c d e", "x y z w v"], ["p q r s t", "k l m n o"]):
+        df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+        groups = D._sig_groups(df, "doc_id", "text", D.N_MINHASH)
+        got = sorted(sorted(r["members"]) for r in groups.collect())
+        want = sorted(
+            sorted(r["members"])
+            for r in D.minhash_signatures(df).groupBy("sig")
+            .agg(F.collect_set("id").alias("members")).collect()
+        )
+        assert got == want
+        assert len(D._SIG_CACHES) == 0
 
 
 def test_minhash_pairs_repeated_id_distinct_groups_not_conflated(spark):

@@ -1165,62 +1165,76 @@ def test_ivf_writers_compose_on_one_index(spark, tmp_path):
         )
 
 
-def test_incremental_index_rebootstrap_preserves_append_seq(spark, tmp_path):
-    """Re-bootstrap over an existing vectors directory (ADVICE r5): if the
-    centroid table is lost on a previously-appended index (deleted, or the
+@pytest.mark.parametrize("sink", ["incremental_index", "incremental_pq_index"])
+def test_incremental_index_rebootstrap_preserves_append_seq(spark, tmp_path, sink):
+    """Re-bootstrap over an existing data directory (ADVICE r5): if the
+    trained tables are lost on a previously-appended index (deleted, or the
     swap crash window), the streaming bootstrap must NOT reset the append
-    sequence to 1 — that would route the next ivf_append_index into the
-    already-populated batch=append-1 partition, mixing new rows with stale
-    ones.  With the sidecar also lost, the sequence is re-derived from the
-    directory listing; with the sidecar surviving, it wins outright."""
+    sequence to 1 — that would route the next append into the
+    already-claimed append-1 tag, mixing new rows with stale ones or
+    failing with ConcurrentAppendError.  With the sidecar also lost, the
+    sequence is re-derived from the directory listing; with the sidecar
+    surviving, it wins outright.  The IVF index is batch-built, the IVF-PQ
+    one stream-built (its appends need the tagged layout)."""
     import shutil
 
     import numpy as np
 
+    from vectordb_watermark_spark.operators.pq import ivf_pq_append_index
     from vectordb_watermark_spark.operators.similarity import (
         _load_index_meta,
         ivf_append_index,
         ivf_write_index,
     )
-    from vectordb_watermark_spark.streaming.curation import incremental_index
+    from vectordb_watermark_spark.streaming import curation as C
 
     rng = np.random.default_rng(23)
     vecs = [(i, [float(round(x, 4)) for x in rng.standard_normal(12)])
             for i in range(60)]
-    idx = str(tmp_path / "ivf_reboot")
-    ivf_write_index(
-        spark.createDataFrame(vecs[:30], "id long, emb array<float>"),
-        idx, n_centroids=4, key="ivf",
-    )
-    ivf_append_index(
-        spark.createDataFrame(vecs[30:40], "id long, emb array<float>"), idx
-    )
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "id long, emb array<float>")
+
+    idx, src = str(tmp_path / "reboot"), tmp_path / "reboot_src"
+    src.mkdir()
+
+    def stream(rows, n):  # one new source file -> micro-batch n
+        stage = tmp_path / f"reboot_stage{n}"
+        frame(rows).coalesce(1).write.parquet(str(stage))
+        shutil.copy(next(stage.glob("part-*.parquet")), src / f"s{n}.parquet")
+        source = spark.readStream.schema("id long, emb array<float>").parquet(str(src))
+        ck = str(tmp_path / "reboot_ck")
+        if ivf:
+            w = C.incremental_index(source, idx, ck, n_centroids=4, key="ivf")
+        else:
+            w = C.incremental_pq_index(source, idx, str(tmp_path / "archive"), ck,
+                                       n_centroids=4, m=4, n_codes=8)
+        w.trigger(availableNow=True).start().awaitTermination(120)
+
+    ivf = sink == "incremental_index"
+    if ivf:
+        ivf_write_index(frame(vecs[:30]), idx, n_centroids=4, key="ivf")
+        append, data, trained = ivf_append_index, "vectors", "centroids"
+    else:
+        stream(vecs[:30], 0)
+        append, data, trained = ivf_pq_append_index, "codes", "pq_codebooks"
+    append(frame(vecs[30:40]), idx)
     assert _load_index_meta(spark, idx)["next_append_seq"] == 2
 
-    # lose BOTH the centroid table and the sidecar, then re-bootstrap
-    shutil.rmtree(f"{idx}/centroids")
+    # lose BOTH the trained table and the sidecar, then re-bootstrap
+    shutil.rmtree(f"{idx}/{trained}")
     shutil.rmtree(f"{idx}/index_meta")
-    src = tmp_path / "reboot_src"
-    src.mkdir()
-    stage = tmp_path / "reboot_stage"
-    spark.createDataFrame(vecs[40:50], "id long, emb array<float>").coalesce(1)\
-        .write.parquet(str(stage))
-    shutil.copy(next(stage.glob("part-*.parquet")), src / "s.parquet")
-    q = incremental_index(
-        spark.readStream.schema("id long, emb array<float>").parquet(str(src)),
-        idx, str(tmp_path / "reboot_ck"), n_centroids=4, key="ivf",
-    ).trigger(availableNow=True).start()
-    q.awaitTermination(120)
+    stream(vecs[40:50], 0 if ivf else 1)
 
     # listing-derived: max(append-N) + 1, not a reset to 1
     assert _load_index_meta(spark, idx)["next_append_seq"] == 2
-    ivf_append_index(
-        spark.createDataFrame(vecs[50:], "id long, emb array<float>"), idx
-    )
-    allv = spark.read.parquet(f"{idx}/vectors")
+    append(frame(vecs[50:]), idx)
+    allv = spark.read.parquet(f"{idx}/{data}")
     assert allv.count() == 60 and allv.select("id").distinct().count() == 60
-    assert set(r["batch"] for r in allv.select("batch").distinct().collect()) \
-        == {"full", "append-1", "stream-0", "append-2"}
+    assert set(r["batch"] for r in allv.select("batch").distinct().collect()) == (
+        {"full", "append-1", "stream-0", "append-2"} if ivf
+        else {"stream-0", "append-1", "stream-1", "append-2"}
+    )
 
 
 def test_streaming_ivf_reader_during_maintenance(spark, tmp_path):
@@ -2671,3 +2685,100 @@ def test_incremental_shingles_matches_batch_and_is_idempotent(spark, tmp_path):
         == {(r["a"], r["b"]) for r in one_shot.collect()}
         == {(a, b) for a in range(5) for b in range(5) if a < b}
     )
+
+
+_REPLAY_SINKS = [
+    "incremental_dedup", "incremental_index", "incremental_pq_index",
+    "incremental_postings", "incremental_components", "incremental_transitions",
+    "incremental_psi", "incremental_kmv", "incremental_rates", "incremental_shingles",
+]
+
+
+@pytest.fixture(scope="module")
+def replay_sources(spark, tmp_path_factory):
+    """Two tiny parquet files per source table: each stream reads them as
+    micro-batches 0 and 1.  File 1 repeats five file-0 documents under new
+    ids, so batch 1 reads history that holds its near-duplicates."""
+    root = tmp_path_factory.mktemp("replay_src")
+    docs = load(spark, "documents").select("doc_id", "text").filter(F.col("doc_id") < 40)
+    tables = {
+        "docs": (docs.filter(F.col("doc_id") < 20), docs.filter(F.col("doc_id") >= 20).unionByName(
+            docs.filter(F.col("doc_id") < 5).withColumn("doc_id", F.col("doc_id") + 1000))),
+        "events": load(spark, "events").filter(F.col("event_id") < 120).randomSplit([0.5, 0.5], 7),
+        "vectors": load(spark, "embeddings").filter(F.col("vec_id") < 60).select(
+            F.col("vec_id").alias("id"), F.col("embedding").alias("emb")).randomSplit([0.5, 0.5], 7),
+    }
+    for name, parts in tables.items():
+        for part in parts:
+            part.coalesce(1).write.mode("append").parquet(str(root / name))
+    return root
+
+
+@pytest.mark.parametrize("sink", _REPLAY_SINKS)
+def test_sink_replays_last_batch_through_checkpoint(spark, replay_sources, tmp_path, sink):
+    """Every foreachBatch sink is idempotent under a real checkpoint replay:
+    after two micro-batches, deleting the checkpoint's last ``commits/1``
+    entry makes the restarted stream re-run batch 1 with the same id, and
+    the resolved store must equal the clean two-batch pass."""
+    import os
+
+    from vectordb_watermark_spark.operators.retrieval import bm25_query_index
+    from vectordb_watermark_spark.streaming import curation as C
+
+    source = {"incremental_transitions": "events", "incremental_rates": "events",
+              "incremental_kmv": "events", "incremental_index": "vectors",
+              "incremental_pq_index": "vectors", "incremental_psi": "vectors"}.get(sink, "docs")
+    src = str(replay_sources / source)
+    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+    if sink == "incremental_psi":
+        C.psi_baseline(spark.read.parquet(src), store)
+
+    def run_stream():
+        stream = (spark.readStream.schema(spark.read.parquet(src).schema)
+                  .option("maxFilesPerTrigger", 1).parquet(src))
+        writer = {
+            "incremental_dedup": lambda: C.incremental_dedup(stream, str(tmp_path / "out"), store, ckpt),
+            "incremental_index": lambda: C.incremental_index(stream, store, ckpt, n_centroids=4),
+            "incremental_pq_index": lambda: C.incremental_pq_index(
+                stream, store, str(tmp_path / "archive"), ckpt, n_centroids=4, m=8, n_codes=8),
+            "incremental_postings": lambda: C.incremental_postings(stream, store, ckpt, n_files=2),
+            "incremental_components": lambda: C.incremental_components(stream, store, ckpt),
+            "incremental_transitions": lambda: C.incremental_transitions(stream, store, ckpt),
+            "incremental_psi": lambda: C.incremental_psi(stream, store, ckpt),
+            "incremental_kmv": lambda: C.incremental_kmv(stream, store, ckpt, col="props"),
+            "incremental_rates": lambda: C.incremental_rates(stream, store, ckpt),
+            "incremental_shingles": lambda: C.incremental_shingles(stream, store, ckpt),
+        }[sink]()
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination(180)
+        assert q.exception() is None
+
+    def resolve():
+        read = lambda p, *cols: sorted(tuple(r) for r in spark.read.parquet(p).select(*cols).collect())
+        rows = lambda df: sorted(tuple(r) for r in df.collect())
+        if sink == "incremental_dedup":
+            return read(f"{store}/batch-*", "sig_hash"), read(f"{tmp_path}/out/batch-*", "doc_id")
+        if sink == "incremental_index":
+            return read(f"{store}/vectors", "id", "batch")
+        if sink == "incremental_pq_index":
+            return read(f"{store}/codes", "id", "batch"), read(f"{tmp_path}/archive", "id", "batch")
+        return rows({
+            "incremental_postings": lambda: bm25_query_index(spark, store, ["batch", "spark", "dup"]),
+            "incremental_components": lambda: C.resolve_components(spark, store),
+            "incremental_transitions": lambda: C.resolve_transitions(spark, store),
+            "incremental_psi": lambda: C.resolve_psi(spark, store),
+            "incremental_kmv": lambda: C.resolve_kmv(spark, store),
+            "incremental_rates": lambda: C.resolve_rate_anomalies(spark, store),
+            "incremental_shingles": lambda: C.resolve_containment_store(
+                spark, store, spark.read.parquet(src), threshold=0.5),
+        }[sink]())
+
+    run_stream()
+    assert sorted(n for n in os.listdir(f"{ckpt}/commits") if n[0] != ".") == ["0", "1"]
+    clean = resolve()
+    for name in ("1", ".1.crc"):  # the local file system's checksum too
+        if os.path.exists(f"{ckpt}/commits/{name}"):
+            os.remove(f"{ckpt}/commits/{name}")
+    run_stream()  # re-runs batch 1 under its own id
+    assert os.path.exists(f"{ckpt}/commits/1")
+    assert resolve() == clean

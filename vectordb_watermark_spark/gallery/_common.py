@@ -5,6 +5,8 @@ and the per-query bodies live in this package)."""
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,6 +21,20 @@ KNN_K = 16
 # ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
+
+def _scratch(sf_dir: str, *names: str) -> list[str]:
+    """Fresh scratch paths ``<gallery>/.scratch/<name>_<sf dir name>``, one
+    per ``name``, each removed first so a run starts clean.  Anchored to
+    this package's directory, not the caller's cwd: the query registry may
+    be imported from anywhere."""
+    scratch = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
+    os.makedirs(scratch, exist_ok=True)
+    tag = os.path.basename(str(sf_dir))
+    paths = [os.path.join(scratch, f"{name}_{tag}") for name in names]
+    for path in paths:
+        shutil.rmtree(path, ignore_errors=True)
+    return paths
+
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(

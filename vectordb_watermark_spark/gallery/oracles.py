@@ -1280,7 +1280,9 @@ SELECT node, pr FROM p3""",
             FROM events
             GROUP BY ROLLUP(event_type, day_epoch)""",
         "q5_nation_revenue": """
-            SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+            SELECT n_name, CAST(round(sum(
+                       CAST(l_extendedprice AS DECIMAL(15,2))
+                       * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE) AS revenue
             FROM lineitem
             JOIN orders ON l_orderkey = o_orderkey
             JOIN customer ON o_custkey = c_custkey

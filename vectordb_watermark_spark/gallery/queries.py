@@ -19,6 +19,7 @@ from vectordb_watermark_spark.gallery._common import (
     _degrees,
     _docs,
     _events,
+    _scratch,
     _t,
     _vectors,
 )
@@ -725,9 +726,13 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
             .groupBy("n_name")
             .agg(
-                F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                    "revenue"
-                )
+                # summed in decimal: a double sum splits exact half-cent
+                # ties by summation order, so the cents depended on the
+                # shuffle (same expression in the DuckDB twin)
+                F.round(F.sum(
+                    F.col("l_extendedprice").cast("decimal(15,2)")
+                    * (1 - F.col("l_discount").cast("decimal(15,2)"))
+                ), 2).cast("double").alias("revenue")
             )
         )
 
@@ -989,24 +994,13 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # connected_components(minhash_candidate_pairs(docs)) — merges
         # across batches land through the alias log, resolution folds it
         # — pinned by the SAME DuckDB twin as dedup_components.
-        import os
-        import shutil
 
         from vectordb_watermark_spark.streaming.curation import (
             incremental_components,
             resolve_components,
         )
 
-        scratch = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".scratch"
-        )
-        os.makedirs(scratch, exist_ok=True)
-        tag = os.path.basename(str(sf))
-        srcdir = os.path.join(scratch, f"oracle_cc_src_{tag}")
-        store = os.path.join(scratch, f"oracle_cc_store_{tag}")
-        ckpt = os.path.join(scratch, f"oracle_cc_ckpt_{tag}")
-        for p in (srcdir, store, ckpt):
-            shutil.rmtree(p, ignore_errors=True)
+        srcdir, store, ckpt = _scratch(sf, "oracle_cc_src", "oracle_cc_store", "oracle_cc_ckpt")
         _docs(spark, sf).repartition(3).write.parquet(srcdir)
         stream = (
             spark.readStream.schema(spark.read.parquet(srcdir).schema)
@@ -1400,16 +1394,13 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # BOTH clustered columns simultaneously (the multi-column
         # data-skipping property a single-column sort cannot give), rows
         # survive exactly, files stay balanced under the quantile buckets.
-        import os
         import shutil
 
         import numpy as np
 
         from vectordb_watermark_spark.sources.io import write_zordered
 
-        scratch = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
-        os.makedirs(scratch, exist_ok=True)
-        zpath = os.path.join(scratch, f"oracle_zorder_{os.path.basename(str(sf))}")
+        (zpath,) = _scratch(sf, "oracle_zorder")
         li = _t(spark, sf, "lineitem").select(
             F.col("l_orderkey").alias("k"),
             F.col("l_extendedprice").alias("x"),
@@ -1463,22 +1454,13 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (term-range-sorted parquet, file pruning on t IN (...)), score
         # from the index only — arithmetic-identical to bm25_scores, so
         # the SAME DuckDB twin pins it hash-exact end to end.
-        import os
-        import shutil
 
         from vectordb_watermark_spark.operators.retrieval import (
             bm25_build_index,
             bm25_query_index,
         )
 
-        scratch = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".scratch"
-        )
-        os.makedirs(scratch, exist_ok=True)
-        idx = os.path.join(
-            scratch, f"oracle_bm25_{os.path.basename(str(sf))}"
-        )
-        shutil.rmtree(idx, ignore_errors=True)
+        (idx,) = _scratch(sf, "oracle_bm25")
         bm25_build_index(_docs(spark, sf), idx)
         return bm25_query_index(spark, idx, ["batch", "data", "fast"]).select(
             F.col("id").alias("doc_id"), "score"
@@ -1489,8 +1471,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # incremental_postings sink in 3 micro-batches must score
         # bit-identically to a one-shot build (integer sidecar partials
         # merge exactly) — pinned by the SAME DuckDB twin as bm25_docs.
-        import os
-        import shutil
 
         from vectordb_watermark_spark.operators.retrieval import (
             bm25_query_index,
@@ -1499,16 +1479,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             incremental_postings,
         )
 
-        scratch = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".scratch"
-        )
-        os.makedirs(scratch, exist_ok=True)
-        tag = os.path.basename(str(sf))
-        srcdir = os.path.join(scratch, f"oracle_bm25s_src_{tag}")
-        idx = os.path.join(scratch, f"oracle_bm25s_idx_{tag}")
-        ckpt = os.path.join(scratch, f"oracle_bm25s_ckpt_{tag}")
-        for p in (srcdir, idx, ckpt):
-            shutil.rmtree(p, ignore_errors=True)
+        srcdir, idx, ckpt = _scratch(sf, "oracle_bm25s_src", "oracle_bm25s_idx", "oracle_bm25s_ckpt")
         _docs(spark, sf).repartition(3).write.parquet(srcdir)
         stream = (
             spark.readStream.schema(spark.read.parquet(srcdir).schema)
@@ -2048,7 +2019,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # chain declaratively, and robust to any centroid jitter (probe-all
         # results are assignment-independent).  Plan: map-only until the
         # embed groupBy; the index shuffle is the partitioned write.
-        import os
 
         from vectordb_watermark_spark.functions.text import (
             hash_embed_documents,
@@ -2084,13 +2054,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ).cast("array<float>").alias("emb"),
             )
         )
-        # anchor to the repo (this file's directory), not the caller's cwd —
-        # the driver may import this module from anywhere
-        scratch = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
-        os.makedirs(scratch, exist_ok=True)
-        path = os.path.join(
-            scratch, f"oracle_rag_index_{os.path.basename(str(sf))}"
-        )
+        (path,) = _scratch(sf, "oracle_rag_index")
         import shutil
 
         try:
@@ -2162,7 +2126,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the recorded baseline); compaction preserves rows and re-records a
         # unit baseline; partition skew is a sane >= 1 number.  Pins the
         # drift metric + compaction path in the driver gate.
-        import os
 
         from vectordb_watermark_spark.operators.similarity import (
             ivf_compact_index,
@@ -2170,11 +2133,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ivf_write_index,
         )
 
-        scratch = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
-        os.makedirs(scratch, exist_ok=True)
-        path = os.path.join(
-            scratch, f"oracle_ivf_drift_{os.path.basename(str(sf))}"
-        )
+        (path,) = _scratch(sf, "oracle_ivf_drift")
         import shutil
 
         df = _vectors(spark, sf)
@@ -2212,7 +2171,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # code-usage histogram equals its baseline (TV 0); compaction from
         # source preserves rows and re-records unit baselines; partition
         # skew sane.  Pins ivf_pq_index_drift + the PQ manifest commit.
-        import os
         import shutil
 
         from vectordb_watermark_spark.operators.pq import (
@@ -2221,11 +2179,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ivf_pq_write_index,
         )
 
-        scratch = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
-        os.makedirs(scratch, exist_ok=True)
-        path = os.path.join(
-            scratch, f"oracle_pq_drift_{os.path.basename(str(sf))}"
-        )
+        (path,) = _scratch(sf, "oracle_pq_drift")
         df = _vectors(spark, sf)
         n = df.count()
         try:
@@ -2277,11 +2231,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _resolve_index_root,
         )
 
-        scratch = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
-        os.makedirs(scratch, exist_ok=True)
-        path = os.path.join(
-            scratch, f"oracle_pq_tagged_{os.path.basename(str(sf))}"
-        )
+        (path,) = _scratch(sf, "oracle_pq_tagged")
         df = _vectors(spark, sf)
         n = df.count()
         half = df.filter(F.col("id") % 2 == 0)
@@ -2363,11 +2313,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ivf_write_index,
         )
 
-        scratch = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
-        os.makedirs(scratch, exist_ok=True)
-        path = os.path.join(
-            scratch, f"oracle_ann_delete_{os.path.basename(str(sf))}"
-        )
+        (path,) = _scratch(sf, "oracle_ann_delete")
         df = _vectors(spark, sf)
         n = df.count()
         try:
@@ -2431,7 +2377,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # sidecar and answers single == batch, the exact rerank runs in
         # the ORIGINAL space (own row scores 1.0), and OPQ reconstruction
         # MSE is not worse than plain PQ at the same geometry.
-        import os
         import shutil
 
         import numpy as np
@@ -2450,9 +2395,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             pq_train,
         )
 
-        scratch = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
-        os.makedirs(scratch, exist_ok=True)
-        path = os.path.join(scratch, f"oracle_opq_{os.path.basename(str(sf))}")
+        (path,) = _scratch(sf, "oracle_opq")
         df = _vectors(spark, sf)
         n = df.count()
         try:
@@ -2873,21 +2816,13 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # store as 3 TIME-ORDERED batches (the sink's in-order-per-user
         # contract) must resolve to exactly the batch event_transitions —
         # pinned by the SAME DuckDB twin; counts are integer-exact
-        import os
-        import shutil
 
         from vectordb_watermark_spark.streaming.curation import (
             ingest_transitions_batch,
             resolve_transitions,
         )
 
-        scratch = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".scratch"
-        )
-        os.makedirs(scratch, exist_ok=True)
-        tag = os.path.basename(str(sf))
-        store = os.path.join(scratch, f"oracle_tr_store_{tag}")
-        shutil.rmtree(store, ignore_errors=True)
+        (store,) = _scratch(sf, "oracle_tr_store")
         ev = _t(spark, sf, "events")
         cuts = ["2024-01-11", "2024-01-21"]
         slices = [
@@ -2946,18 +2881,10 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # gate hashes the FULL post-compaction content against the source
         # table (data preservation through the staged swap), plus a
         # compacted flag pinning that the file count actually dropped
-        import os
-        import shutil
 
         from vectordb_watermark_spark.sources.io import compact_parquet
 
-        scratch = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".scratch"
-        )
-        os.makedirs(scratch, exist_ok=True)
-        tag = os.path.basename(str(sf))
-        tbl = os.path.join(scratch, f"compact_tbl_{tag}")
-        shutil.rmtree(tbl, ignore_errors=True)
+        (tbl,) = _scratch(sf, "compact_tbl")
         _docs(spark, sf).repartition(37).write.parquet(tbl)
         stats = compact_parquet(spark, tbl, target_mb=128)
         return spark.read.parquet(tbl).select(
@@ -3081,8 +3008,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the psi_drift_embeddings candidate corpus REPLAYED through the
         # incremental_psi store in 3 batches must resolve to exactly the
         # batch psi_per_dim — same DuckDB twin, shared tally/formula code
-        import os
-        import shutil
 
         from vectordb_watermark_spark.streaming.curation import (
             ingest_psi_batch,
@@ -3090,13 +3015,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             resolve_psi,
         )
 
-        scratch = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".scratch"
-        )
-        os.makedirs(scratch, exist_ok=True)
-        tag = os.path.basename(str(sf))
-        store = os.path.join(scratch, f"oracle_psi_store_{tag}")
-        shutil.rmtree(store, ignore_errors=True)
+        (store,) = _scratch(sf, "oracle_psi_store")
         emb = _vectors(spark, sf).join(
             _t(spark, sf, "embeddings").select(
                 F.col("vec_id").alias("id"), "label"
@@ -3155,21 +3074,13 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # incremental_kmv store in 3 batches: KMV merges EXACTLY (the k
         # smallest of a union are among the parts' k-smallest), so
         # resolve is bit-identical to the one-shot sketch — same twin
-        import os
-        import shutil
 
         from vectordb_watermark_spark.streaming.curation import (
             ingest_kmv_batch,
             resolve_kmv,
         )
 
-        scratch = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".scratch"
-        )
-        os.makedirs(scratch, exist_ok=True)
-        tag = os.path.basename(str(sf))
-        store = os.path.join(scratch, f"oracle_kmv_store_{tag}")
-        shutil.rmtree(store, ignore_errors=True)
+        (store,) = _scratch(sf, "oracle_kmv_store")
         d = _docs(spark, sf)
         toks_of = lambda df: df.select(
             F.explode(T.tokens(F.lower(F.col("text")))).alias("tok")
@@ -3189,21 +3100,13 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # events split ARBITRARILY (id mod — counts are additive, no
         # ordering contract) through the incremental_rates store must
         # resolve to exactly the batch rate_anomalies — same twin
-        import os
-        import shutil
 
         from vectordb_watermark_spark.streaming.curation import (
             ingest_rate_batch,
             resolve_rate_anomalies,
         )
 
-        scratch = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".scratch"
-        )
-        os.makedirs(scratch, exist_ok=True)
-        tag = os.path.basename(str(sf))
-        store = os.path.join(scratch, f"oracle_rates_store_{tag}")
-        shutil.rmtree(store, ignore_errors=True)
+        (store,) = _scratch(sf, "oracle_rates_store")
         ev = _t(spark, sf, "events")
         for k in range(3):
             ingest_rate_batch(
@@ -3319,8 +3222,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # DF is additive and hot-crossing monotone, so the split is
         # arbitrary) must resolve hash-identically to the one-shot
         # discovery chain — pinned by the SAME DuckDB oracle.
-        import os
-        import shutil
 
         from vectordb_watermark_spark.functions.text import tokens
         from vectordb_watermark_spark.streaming.curation import (
@@ -3347,14 +3248,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         corpus = base.unionByName(host).unionByName(exc)
 
-        scratch = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".scratch"
-        )
-        os.makedirs(scratch, exist_ok=True)
-        store = os.path.join(
-            scratch, f"oracle_shingle_store_{os.path.basename(str(sf))}"
-        )
-        shutil.rmtree(store, ignore_errors=True)
+        (store,) = _scratch(sf, "oracle_shingle_store")
         for k in range(3):
             ingest_shingles_batch(
                 corpus.filter(F.col("doc_id") % 3 == k), store, k

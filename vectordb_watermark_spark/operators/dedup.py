@@ -321,6 +321,8 @@ def _sig_groups(
         )
     )
     key = _plan_cache_key(g)
+    if key is None:
+        return g.localCheckpoint(eager=True)
     with _SIG_LOCK:
         hit = _SIG_CACHES.get(key)
         if hit is not None:
@@ -382,18 +384,20 @@ _SIG_CACHES: "OrderedDict[tuple[int, int, str], DataFrame]" = __import__(
 _SIG_LOCK = __import__("threading").Lock()
 
 
-def _plan_cache_key(g: DataFrame) -> tuple:
+def _plan_cache_key(g: DataFrame) -> tuple | None:
+    """Registry key of ``g``'s plan, or ``None`` when the plan cannot be
+    read (e.g. a non-classic backend).  ``None`` always misses: an
+    object-identity fallback could be recycled by another corpus's frame
+    and serve it this one's signature groups."""
     try:
         analyzed = g._jdf.queryExecution().analyzed()
         return (
             id(g.sparkSession),
             int(analyzed.semanticHash()),
-            __import__("hashlib").sha256(
-                analyzed.canonicalized().toString().encode()
-            ).hexdigest(),
+            hashlib.sha256(analyzed.canonicalized().toString().encode()).hexdigest(),
         )
-    except Exception:  # non-classic backend: fall back to object identity
-        return (id(getattr(g, "sparkSession", None)), id(g), "")
+    except Exception:
+        return None
 
 
 def _register_caches(result: DataFrame, *cached: DataFrame) -> DataFrame:
@@ -419,6 +423,8 @@ def _register_caches(result: DataFrame, *cached: DataFrame) -> DataFrame:
     recomputes."""
     for g in cached:
         key = _plan_cache_key(g)
+        if key is None:  # unkeyable: the caller's cache is never served
+            continue
         evicted = []
         with _SIG_LOCK:
             if key in _SIG_CACHES:

@@ -937,9 +937,11 @@ def gated_in_degrees(
     # tools/wm_jobs_profile.py).  The checkpoint truncates both references to
     # one LogicalRDD; storage cost is identical to the cache it replaces
     # (the same N*k edge rows, executor-local), evaluation count is identical
-    # (one materialization on the first action), and a lost executor
-    # recomputes by rerunning the degree derivation — the same documented
-    # tradeoff as the degrees checkpoint in plans/embed.py.  Plan-keyed cache
+    # (one materialization on the first action).  Unlike a cache, a lost
+    # checkpoint block is NOT recomputed: the lineage is cut, so an action
+    # that needs it after executor loss aborts the job — the same
+    # documented tradeoff as the degrees checkpoint in plans/embed.py.
+    # Plan-keyed cache
     # reuse is not lost: each knn_edges_broadcast call stages a fresh build
     # tag, so no two calls ever shared a cache entry here anyway.
     # Interleaved same-session A/B (6 reps/arm, r15): cache best 4.613 s /

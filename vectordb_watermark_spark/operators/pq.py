@@ -717,13 +717,13 @@ def ivf_pq_compact_index(
     via ``similarity.gc_index_versions`` on your own schedule.
     """
     from vectordb_watermark_spark.operators.similarity import (
+        _append_seq,
         _current_index_version,
         _gc_index_versions,
         _index_fs,
         _ivf_assign_pass,
         _ivf_train,
         _load_centroids,
-        _load_index_meta,
         _load_tombstones,
         _publish_index_version,
         _resolve_index_root,
@@ -813,20 +813,13 @@ def ivf_pq_compact_index(
                 # preserved tags (bounded: one row per batch ever made) —
                 # drive the carried-forward sequence + claim re-creation,
                 # same contract as similarity.ivf_compact_index
-                tags = [
-                    str(r["batch"])
-                    for r in assigned.select("batch").distinct().collect()
-                ]
-                appends = [
-                    int(t.split("-", 1)[1])
-                    for t in tags
-                    if t.startswith("append-")
-                ]
-                prior = _load_index_meta(spark, cur_root)
-                if prior is not None:
-                    seq_keep = int(prior["next_append_seq"])
-                else:
-                    seq_keep = (max(appends) + 1) if appends else 1
+                seq_keep, appends = _append_seq(
+                    spark, cur_root, "codes",
+                    tags=[
+                        r["batch"]
+                        for r in assigned.select("batch").distinct().collect()
+                    ],
+                )
                 _write_index_meta_atomic(
                     spark, vdir,
                     df.schema[id_col].dataType.simpleString(),
@@ -909,13 +902,11 @@ def ivf_pq_append_index(
       concurrent appender into a loud :class:`similarity.ConcurrentAppendError`).
     """
     from vectordb_watermark_spark.operators.similarity import (
-        ConcurrentAppendError,
+        _append_seq,
         _ivf_assign_pass,
         _ivf_base,
         _load_centroids,
-        _load_index_meta,
         _resolve_index_root,
-        _write_index_meta_atomic,
     )
     from vectordb_watermark_spark.sources.io import vector_dim
 
@@ -941,43 +932,9 @@ def ivf_pq_append_index(
             f"{stored_t}"
         )
     tagged = "batch" in codes_schema.fieldNames()
-    batch_tag = None
     if tagged:
-        meta = _load_index_meta(spark, path)
-        if meta is None:
-            # pre-sidecar tagged index: derive the next sequence from the
-            # tags ONCE (the expensive path), then self-heal the sidecar
-            appends = [
-                int(str(r["batch"]).split("-", 1)[1])
-                for r in spark.read.parquet(f"{path}/codes")
-                .select("batch").distinct().collect()
-                if str(r["batch"]).startswith("append-")
-            ]
-            meta = {
-                "id_type": stored_t,
-                "dim": dim,
-                "next_append_seq": (max(appends) + 1) if appends else 1,
-            }
-        seq = int(meta["next_append_seq"])
+        seq, _ = _append_seq(spark, path, "codes", claim=(new_t, dim))
         batch_tag = f"append-{seq}"
-        # claim-before-write, monotonic bump (same protocol + rationale as
-        # similarity.ivf_append_index)
-        cur = _load_index_meta(spark, path)
-        stored_next = int(cur["next_append_seq"]) if cur is not None else seq
-        _write_index_meta_atomic(
-            spark, path, stored_t, dim, max(stored_next, seq + 1)
-        )
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-        fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.mkdirs(jvm_path(f"{path}/append_claims"))
-        if not fs.createNewFile(jvm_path(f"{path}/append_claims/{batch_tag}.claim")):
-            raise ConcurrentAppendError(
-                f"batch tag {batch_tag} at {path} is already claimed: "
-                f"another appender read the same sequence number "
-                f"concurrently (or a crashed attempt claimed it — then "
-                f"simply retry: the bumped sidecar routes the retry to a "
-                f"fresh tag)"
-            )
     # cast to array<float> FIRST (same as _pq_base at build time): append-time
     # and rebuild-time encoding must see bit-identical inputs, or a float64
     # source column could flip argmin ties and diverge appended codes from

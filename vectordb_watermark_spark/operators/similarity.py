@@ -1151,6 +1151,72 @@ def _load_index_meta(spark, path: str) -> dict | None:
     return row[0].asDict()
 
 
+def _append_seq(
+    spark, root: str, table: str, tags=None, claim: tuple | None = None
+) -> tuple[int, list[int]]:
+    """The ``batch=append-N`` bookkeeping every IVF and IVF-PQ writer
+    shares: returns ``(seq, used)``.
+
+    ``seq`` is the next append sequence.  The ``index_meta`` sidecar's
+    wins — crash-claimed tags can exceed the highest tag holding rows.
+    Without a sidecar it is one past the highest ``append-N`` tag of
+    ``{root}/{table}`` (or of ``tags``, when the caller already holds
+    them): the expensive path, taken once, since the caller then writes
+    the sidecar.  ``used`` is the ``N`` of every ``append-N`` tag read
+    (empty when the sidecar answered alone).
+
+    ``claim=(id_type, dim)`` then runs the claim-before-write protocol of
+    :func:`ivf_append_index` on ``seq``: check the appended id type
+    against the index's, bump the sidecar to ``max(stored, seq + 1)`` —
+    monotonic, so a delayed appender holding a stale ``seq`` cannot roll
+    it back (ADVICE r6) — and only then claim ``append-{seq}`` with an
+    atomic ``createNewFile``.  A lost race is a loud
+    :class:`ConcurrentAppendError`."""
+    meta = _load_index_meta(spark, root)
+    data = f"{root}/{table}"
+    if meta is None and tags is None:
+        jvm_path, fs = _index_fs(spark, root)
+        tags = [
+            r["batch"]
+            for r in spark.read.parquet(data).select("batch").distinct().collect()
+        ] if fs.exists(jvm_path(data)) else []
+    used = [
+        int(str(t).split("-", 1)[1])
+        for t in tags or ()
+        if str(t).startswith("append-")
+    ]
+    if meta is not None:
+        seq = int(meta["next_append_seq"])
+    else:
+        seq = max(used, default=0) + 1
+    if claim is None:
+        return seq, used
+    new_t, dim = claim
+    stored_t = (
+        meta["id_type"] if meta is not None
+        else spark.read.parquet(data).schema["id"].dataType.simpleString()
+    )
+    if stored_t != new_t:
+        raise ValueError(
+            f"appended id type {new_t} does not match the index's id type "
+            f"{stored_t}"
+        )
+    # re-read right before the bump: the first read may be stale
+    cur = _load_index_meta(spark, root)
+    stored_next = int(cur["next_append_seq"]) if cur is not None else seq
+    _write_index_meta_atomic(spark, root, stored_t, dim, max(stored_next, seq + 1))
+    jvm_path, fs = _index_fs(spark, root)
+    fs.mkdirs(jvm_path(f"{root}/append_claims"))
+    if not fs.createNewFile(jvm_path(f"{root}/append_claims/append-{seq}.claim")):
+        raise ConcurrentAppendError(
+            f"batch tag append-{seq} at {root} is already claimed: another "
+            f"appender read the same sequence number concurrently (or a "
+            f"crashed attempt claimed it — then simply retry: the bumped "
+            f"sidecar routes the retry to a fresh tag)"
+        )
+    return seq, used
+
+
 def _write_fold_fence(spark, path: str, last_fold_batch_id: int) -> None:
     """Persist the replay fence sidecar ``{path}/fold_fence`` (single-row
     parquet: the highest ``stream-N`` micro-batch id whose rows were ever
@@ -1255,57 +1321,11 @@ def ivf_append_index(
             f"appended vectors are {dim}-d but the index at {path} is "
             f"{len(cents[0])}-d"
         )
-    new_t = df.schema[id_col].dataType.simpleString()
-    meta = _load_index_meta(spark, path)
-    if meta is None:
-        # pre-sidecar index: derive id type + next sequence from the index
-        # itself (the expensive path, once), then self-heal the sidecar
-        existing = spark.read.parquet(f"{path}/vectors")
-        stored_t = existing.schema["id"].dataType.simpleString()
-        appends = [
-            int(str(v).split("-", 1)[1])
-            for v in (r["batch"] for r in existing.select("batch").distinct().collect())
-            if str(v).startswith("append-")
-        ]
-        meta = {
-            "id_type": stored_t,
-            "dim": len(cents[0]),
-            "next_append_seq": (max(appends) + 1) if appends else 1,
-        }
-    if meta["id_type"] != new_t:
-        raise ValueError(
-            f"appended id type {new_t} does not match the "
-            f"index's id type {meta['id_type']}"
-        )
-    seq = int(meta["next_append_seq"])
-    batch_tag = f"append-{seq}"
-    # claim-before-write protocol (see FAILURE SEMANTICS in the docstring):
-    # 1. bump the sidecar first — a crash from here on only skips a tag,
-    #    so a blind retry is safe (it claims a fresh tag);
-    # 2. atomically claim THIS tag — a concurrent appender that read the
-    #    same stale sequence loses the createNewFile race and fails loud;
-    # 3. only then write data under the claimed tag.
-    # The bump is MONOTONIC: a delayed appender holding a stale sequence N
-    # must not roll next_append_seq backward from the current M (healthy
-    # appenders would then burn O(M-N) spurious claim failures climbing
-    # back — ADVICE r6).  Re-read the sidecar and write max(stored, seq+1);
-    # the claim file stays the race arbiter, the guard only prevents the
-    # backward roll.
-    cur = _load_index_meta(spark, path)
-    stored_next = int(cur["next_append_seq"]) if cur is not None else seq
-    _write_index_meta_atomic(
-        spark, path, meta["id_type"], int(meta["dim"]), max(stored_next, seq + 1)
+    seq, _ = _append_seq(
+        spark, path, "vectors",
+        claim=(df.schema[id_col].dataType.simpleString(), len(cents[0])),
     )
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(jvm_path(f"{path}/append_claims"))
-    if not fs.createNewFile(jvm_path(f"{path}/append_claims/{batch_tag}.claim")):
-        raise ConcurrentAppendError(
-            f"batch tag {batch_tag} at {path} is already claimed: another "
-            f"appender read the same sequence number concurrently (or a "
-            f"crashed attempt claimed it — then simply retry: the bumped "
-            f"sidecar routes the retry to a fresh tag)"
-        )
+    batch_tag = f"append-{seq}"
     base = _ivf_base(df, id_col, vec_col)  # persisted: write + count, one scan
     try:
         _ivf_assign_pass(base, cents).withColumn("batch", F.lit(batch_tag)).write.mode(
@@ -1547,17 +1567,10 @@ def ivf_compact_index(
         # preserved tags (bounded: one row per append/stream batch ever
         # made) — drive both the carried-forward sequence and the claim
         # re-creation below
-        tags = [
-            str(r["batch"]) for r in base.select("batch").distinct().collect()
-        ]
-        appends = [
-            int(t.split("-", 1)[1]) for t in tags if t.startswith("append-")
-        ]
-        if meta is not None:
-            seq_keep = int(meta["next_append_seq"])
-        else:
-            # pre-sidecar index: derive once, same self-heal as appends
-            seq_keep = (max(appends) + 1) if appends else 1
+        seq_keep, appends = _append_seq(
+            spark, cur_root, "vectors",
+            tags=[r["batch"] for r in base.select("batch").distinct().collect()],
+        )
         centroids = _ivf_train(base, n_centroids, n_iters, key)
         _ivf_assign_pass(base, centroids, extra=("batch",)).write.mode(
             "overwrite"

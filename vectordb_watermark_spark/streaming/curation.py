@@ -34,6 +34,82 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_watermark_spark.operators.similarity import _index_fs
+
+# ---------------------------------------------------------------------------
+# Per-batch store — the one idiom every sink below writes through.  Each
+# micro-batch lands in its own directory, written with ``overwrite``, so a
+# checkpoint-retried batch replaces exactly its own output, and history
+# reads exclude the batch's own prior attempt.  ``incremental_dedup`` names
+# the directories ``{store}/batch-N``; every other sink
+# ``{store}/{sub}/batch=stream-N`` (plus ``labels/batch=compacted`` once
+# :func:`compact_components` has folded a component store).
+# ---------------------------------------------------------------------------
+
+
+def _batch_dirs(
+    spark, root: str, sub: str | None = None, exclude: int | None = None
+) -> list[str]:
+    """Existing per-batch directories of ``{root}/{sub}`` (of ``root``
+    itself when ``sub`` is None), minus batch ``exclude``'s own — a
+    retried batch's partial output is not history."""
+    jp, fs = _index_fs(spark, root)
+    base = f"{root}/{sub}" if sub else root
+    if not fs.exists(jp(base)):
+        return []
+    skip = (
+        () if exclude is None
+        else (f"batch-{int(exclude)}", f"batch=stream-{int(exclude)}")
+    )
+    return [
+        st.getPath().toString()
+        for st in fs.listStatus(jp(base))
+        if st.getPath().getName().startswith("batch")
+        and st.getPath().getName() not in skip
+    ]
+
+
+def _dirs_by_batch(spark, root: str, sub: str) -> dict[int, str]:
+    """:func:`_batch_dirs` of a ``batch=stream-N`` store, keyed by ``N``."""
+    return {int(d.rsplit("-", 1)[1]): d for d in _batch_dirs(spark, root, sub)}
+
+
+def _read_batches(
+    spark, root: str, sub: str | None, exclude: int | None = None
+) -> DataFrame | None:
+    """Every :func:`_batch_dirs` directory read as one DataFrame, or
+    ``None`` for an empty store (each resolver then returns its own empty
+    answer)."""
+    dirs = _batch_dirs(spark, root, sub, exclude)
+    return spark.read.parquet(*dirs) if dirs else None
+
+
+def _pin_config(spark, path: str, pin: dict, schema: str, mismatch) -> None:
+    """Config-drift guard: the first ingest stores ``pin`` (one row of
+    ``schema``) at ``path``; every later ingest offering other values
+    raises ``ValueError(mismatch(stored_row))`` — mixed parameters would
+    silently corrupt the store."""
+    jp, fs = _index_fs(spark, path)
+    if not fs.exists(jp(path)):
+        spark.createDataFrame([tuple(pin.values())], schema).coalesce(
+            1
+        ).write.mode("overwrite").parquet(path)
+        return
+    stored = spark.read.parquet(path).collect()[0]
+    if tuple(stored[k] for k in pin) != tuple(pin.values()):
+        raise ValueError(mismatch(stored))
+
+
+def _foreach_batch(stream: DataFrame, checkpoint_path: str, handle):
+    """The sink's stream writer: ``handle(batch_df, batch_id)`` per
+    micro-batch, progress checkpointed at ``checkpoint_path``.  Call
+    ``.start()`` on the result."""
+    return (
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_path)
+        .foreachBatch(handle)
+    )
+
 
 def _sig_hash(sig_col: str = "sig"):
     """64-bit hash of the full MinHash signature array — the store key.
@@ -59,32 +135,16 @@ def incremental_dedup(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
             return
-        spark = batch_df.sparkSession
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-        fs = jvm_path(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-
-        def batch_dirs(exclude: int) -> list[str]:
-            """Existing per-batch store directories, minus the excluded
-            batch id (a retried batch's own partial output is not history)."""
-            root = jvm_path(store_path)
-            if not fs.exists(root):
-                return []
-            return [
-                st.getPath().toString()
-                for st in fs.listStatus(root)
-                if st.getPath().getName().startswith("batch-")
-                and st.getPath().getName() != f"batch-{exclude}"
-            ]
-
         sigs = minhash_signatures(batch_df, id_col, text_col).withColumn(
             "sig_hash", _sig_hash()
         )
         # batch-internal collapse: one representative (min id) per signature
         reps = sigs.groupBy("sig_hash").agg(F.min("id").alias("id"))
-        history = batch_dirs(exclude=batch_id)
-        if history:
-            seen = spark.read.parquet(*history).select("sig_hash")
-            reps = reps.join(seen, "sig_hash", "left_anti")
+        seen = _read_batches(
+            batch_df.sparkSession, store_path, None, exclude=batch_id
+        )
+        if seen is not None:
+            reps = reps.join(seen.select("sig_hash"), "sig_hash", "left_anti")
         kept = batch_df.join(
             reps.select(F.col("id").alias(id_col)), id_col, "left_semi"
         )
@@ -94,11 +154,7 @@ def incremental_dedup(
             f"{store_path}/batch-{batch_id}"
         )
 
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(handle)
-    )
+    return _foreach_batch(stream, checkpoint_path, handle)
 
 
 def _check_batch_dim(base, expected: int, sink: str) -> None:
@@ -228,11 +284,11 @@ def incremental_index(
     operator decision instead.
     """
     from vectordb_watermark_spark.operators.similarity import (
+        _append_seq,
         _ivf_assign_pass,
         _ivf_base,
         _ivf_train,
         _load_centroids,
-        _load_index_meta,
         _mean_distortion,
         _resolve_index_root,
         _write_centroids_atomic,
@@ -253,24 +309,22 @@ def incremental_index(
         _check_replay_fence(
             spark, root, batch_id, on_fenced_replay, "incremental_index"
         )
-        if compact_drift_threshold is not None:
-            jp = spark._jvm.org.apache.hadoop.fs.Path
-            f0 = jp(root).getFileSystem(spark._jsc.hadoopConfiguration())
-            if f0.exists(jp(f"{root}/centroids")):
-                d = ivf_index_drift(
-                    spark, index_path, sample_fraction=drift_sample_fraction
+        jvm_path, fs = _index_fs(spark, root)
+        if compact_drift_threshold is not None and fs.exists(
+            jvm_path(f"{root}/centroids")
+        ):
+            d = ivf_index_drift(
+                spark, index_path, sample_fraction=drift_sample_fraction
+            )
+            if (
+                d["drift_ratio"] is not None
+                and d["drift_ratio"] > compact_drift_threshold
+            ):
+                ivf_compact_index(
+                    spark, index_path, key=key,
+                    gc_keep_last=compact_gc_keep_last,
                 )
-                if (
-                    d["drift_ratio"] is not None
-                    and d["drift_ratio"] > compact_drift_threshold
-                ):
-                    ivf_compact_index(
-                        spark, index_path, key=key,
-                        gc_keep_last=compact_gc_keep_last,
-                    )
-                    root = _resolve_index_root(spark, index_path)
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-        fs = jvm_path(root).getFileSystem(spark._jsc.hadoopConfiguration())
+                root = _resolve_index_root(spark, index_path)
         cpath = f"{root}/centroids"
         base = _ivf_base(batch_df, id_col, vec_col)
         try:
@@ -293,27 +347,12 @@ def incremental_index(
                 # append sequence — a hardcoded 1 would route the next
                 # append into an already-populated batch=append-1
                 # partition, mixing new rows with stale ones.  Derive it
-                # from the directory listing instead (the expensive path,
-                # once — same self-heal ivf_append_index uses).
-                prior = _load_index_meta(spark, root)
-                if prior is not None:
-                    # surviving sidecar wins: skipped (crash-claimed) tags
-                    # can legitimately exceed the listing-derived max
-                    next_seq = int(prior["next_append_seq"])
-                elif fs.exists(jvm_path(f"{root}/vectors")):
-                    appends = [
-                        int(str(r["batch"]).split("-", 1)[1])
-                        for r in spark.read.parquet(f"{root}/vectors")
-                        .select("batch").distinct().collect()
-                        if str(r["batch"]).startswith("append-")
-                    ]
-                    next_seq = (max(appends) + 1) if appends else 1
-                else:
-                    next_seq = 1
+                # from the sidecar or the directory listing instead (the
+                # self-heal ivf_append_index uses).
                 _write_index_meta_atomic(
                     spark, root,
                     batch_df.schema[id_col].dataType.simpleString(),
-                    len(cents[0]), next_seq,
+                    len(cents[0]), _append_seq(spark, root, "vectors")[0],
                 )
                 # build-time distortion baseline over the bootstrap batch —
                 # without it ivf_index_drift has no denominator and the
@@ -332,11 +371,7 @@ def incremental_index(
         finally:
             base.unpersist()
 
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(handle)
-    )
+    return _foreach_batch(stream, checkpoint_path, handle)
 
 
 def incremental_pq_index(
@@ -434,10 +469,12 @@ def incremental_pq_index(
         pq_train,
     )
     from vectordb_watermark_spark.operators.similarity import (
+        _append_seq,
+        _folded_stream_fence,
         _ivf_assign_pass,
         _ivf_train,
         _load_centroids,
-        _load_index_meta,
+        _load_tombstones,
         _resolve_index_root,
         _swap_dir_atomic,
         _write_centroids_atomic,
@@ -453,8 +490,7 @@ def incremental_pq_index(
         _check_replay_fence(
             spark, root, batch_id, on_fenced_replay, "incremental_pq_index"
         )
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-        fs = jvm_path(root).getFileSystem(spark._jsc.hadoopConfiguration())
+        jvm_path, fs = _index_fs(spark, root)
 
         # 1) drift check BEFORE this batch's writes — between-batch fence
         if compact_code_tv_threshold is not None and fs.exists(
@@ -476,14 +512,6 @@ def incremental_pq_index(
                 # swap, and a crash mid-fold self-heals — the tombstones
                 # are still in place until the compaction commits, so the
                 # retry just folds the remaining dirs.
-                from vectordb_watermark_spark.operators.similarity import (
-                    _load_tombstones,
-                )
-
-                from vectordb_watermark_spark.operators.similarity import (
-                    _folded_stream_fence,
-                )
-
                 tomb = _load_tombstones(spark, root)
                 fence_floor = None
                 if tomb is not None:
@@ -516,9 +544,7 @@ def incremental_pq_index(
                     _fence_floor=fence_floor,
                 )
                 root = _resolve_index_root(spark, index_path)
-                fs = jvm_path(root).getFileSystem(
-                    spark._jsc.hadoopConfiguration()
-                )
+                jvm_path, fs = _index_fs(spark, root)
 
         # 2) archive the raw batch FIRST (idempotent: own dir overwritten;
         #    archive ⊇ committed codes is the recompaction invariant)
@@ -572,17 +598,13 @@ def incremental_pq_index(
                     rows, "sub int, code int, vec array<double>"
                 ).coalesce(1).write.mode("overwrite").parquet(staged)
                 _swap_dir_atomic(spark, staged, f"{root}/pq_codebooks")
-                # sidecar: id type + dim + append sequence (re-bootstrap
-                # over a surviving sidecar must not roll the sequence back
-                # — same self-heal as incremental_index)
-                prior = _load_index_meta(spark, root)
-                next_seq = (
-                    int(prior["next_append_seq"]) if prior is not None else 1
-                )
+                # sidecar: id type + dim + append sequence (a re-bootstrap
+                # over existing codes must not roll the sequence back —
+                # same self-heal as incremental_index)
                 _write_index_meta_atomic(
                     spark, root,
                     batch_df.schema[id_col].dataType.simpleString(),
-                    len(cents[0]), next_seq,
+                    len(cents[0]), _append_seq(spark, root, "codes")[0],
                 )
 
             assigned = _ivf_assign_pass(enc_base, cents)
@@ -606,11 +628,7 @@ def incremental_pq_index(
         finally:
             base.unpersist()
 
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(handle)
-    )
+    return _foreach_batch(stream, checkpoint_path, handle)
 
 
 def incremental_postings(
@@ -658,11 +676,7 @@ def incremental_postings(
             id_col=id_col, text_col=text_col, n_files=n_files,
         )
 
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(handle)
-    )
+    return _foreach_batch(stream, checkpoint_path, handle)
 
 
 def _component_alias_roots(spark, path: str) -> dict[int, int]:
@@ -673,20 +687,12 @@ def _component_alias_roots(spark, path: str) -> dict[int, int]:
     as batch ``connected_components``.  The log is bounded by the number
     of MERGE EVENTS (two established clusters colliding), not by corpus
     size; :func:`compact_components` folds it away when it grows."""
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jp(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp(f"{path}/aliases")):
-        return {}
     # merge-free batches write no alias dir at all (an empty parquet dir
     # has no schema to read), so list what exists
-    dirs = [
-        st.getPath().toString()
-        for st in fs.listStatus(jp(f"{path}/aliases"))
-        if st.getPath().getName().startswith("batch=")
-    ]
-    if not dirs:
+    aliases = _read_batches(spark, path, "aliases")
+    if aliases is None:
         return {}
-    rows = spark.read.parquet(*dirs).collect()
+    rows = aliases.collect()
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -713,13 +719,11 @@ def resolve_components(spark, path: str) -> DataFrame:
     ``dedup.connected_components(minhash_candidate_pairs(docs))`` over
     everything ingested (docs with no near-dup partner are absent, as in
     the batch op).  One labels scan + a broadcast alias-root join."""
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jp(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp(f"{path}/labels")):
+    labels = _read_batches(spark, path, "labels")
+    if labels is None:
         # nothing near-dup'd yet — same empty result as the batch op on a
         # pair-free corpus
         return spark.createDataFrame([], "id long, comp long")
-    labels = spark.read.parquet(f"{path}/labels")
     roots = _component_alias_roots(spark, path)
     if not roots:
         return labels.select("id", "comp")
@@ -757,8 +761,7 @@ def compact_components(spark, path: str) -> None:
     ).partitionBy("batch").parquet(staged)
     _swap_dir_atomic(spark, staged, f"{path}/labels")
     if roots:
-        jp = spark._jvm.org.apache.hadoop.fs.Path
-        fs = jp(path).getFileSystem(spark._jsc.hadoopConfiguration())
+        jp, fs = _index_fs(spark, path)
         fs.delete(jp(f"{path}/aliases"), True)
 
 
@@ -817,19 +820,7 @@ def incremental_components(
             return
         spark = batch_df.sparkSession
         tag = f"stream-{int(batch_id)}"
-        jp = spark._jvm.org.apache.hadoop.fs.Path
-        fs = jp(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-
-        def prior_dirs(sub: str) -> list[str]:
-            root = jp(f"{store_path}/{sub}")
-            if not fs.exists(root):
-                return []
-            return [
-                st.getPath().toString()
-                for st in fs.listStatus(root)
-                if st.getPath().getName().startswith("batch=")
-                and st.getPath().getName() != f"batch={tag}"
-            ]
+        jp, fs = _index_fs(spark, store_path)
 
         batch = batch_df.select(
             F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
@@ -846,9 +837,8 @@ def incremental_components(
 
                 # 2) pair graph: internal + cross vs history bands
                 p_int = minhash_candidate_pairs(batch)
-                hist_dirs = prior_dirs("bands")
-                if hist_dirs:
-                    hist = spark.read.parquet(*hist_dirs)
+                hist = _read_batches(spark, store_path, "bands", batch_id)
+                if hist is not None:
                     # broadcast the (small) batch side: history — the side
                     # that grows with the corpus — is then only SCANNED
                     # map-side, never shuffled, every micro-batch
@@ -879,13 +869,15 @@ def incremental_components(
                 local = connected_components(edges).persist()
                 try:
                     # 4) current canonical labels of matched history docs
-                    label_dirs = prior_dirs("labels")
+                    hist_labels = _read_batches(
+                        spark, store_path, "labels", batch_id
+                    )
                     batch_ids = batch.select(
                         F.col("doc_id").alias("id")
                     )
-                    if label_dirs:
+                    if hist_labels is not None:
                         hl = (
-                            spark.read.parquet(*label_dirs)
+                            hist_labels
                             .join(
                                 local.select("id"), "id", "left_semi"
                             )
@@ -975,11 +967,7 @@ def incremental_components(
         finally:
             batch.unpersist()
 
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(handle)
-    )
+    return _foreach_batch(stream, checkpoint_path, handle)
 
 
 def _latest_state_dir(spark, path: str, below_batch: int) -> str | None:
@@ -988,19 +976,9 @@ def _latest_state_dir(spark, path: str, below_batch: int) -> str | None:
     ``below_batch``: a replayed batch re-reads exactly the state it saw
     the first time, because its own state dir (and any later one) is
     excluded."""
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jp(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp(f"{path}/state")):
-        return None
-    best, best_k = None, -1
-    for st in fs.listStatus(jp(f"{path}/state")):
-        name = st.getPath().getName()
-        if not name.startswith("batch=stream-"):
-            continue
-        k = int(name.rsplit("-", 1)[1])
-        if best_k < k < below_batch:
-            best, best_k = st.getPath().toString(), k
-    return best
+    dirs = _dirs_by_batch(spark, path, "state")
+    below = [k for k in dirs if k < below_batch]
+    return dirs[max(below)] if below else None
 
 
 def incremental_transitions(
@@ -1066,11 +1044,7 @@ def incremental_transitions(
                 batch_df.sparkSession, store_path, exclude=int(batch_id)
             )
 
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(handle)
-    )
+    return _foreach_batch(stream, checkpoint_path, handle)
 
 
 def ingest_transitions_batch(
@@ -1145,24 +1119,13 @@ def resolve_transitions(spark, store_path: str) -> DataFrame:
     summed, probabilities derived once at read time)."""
     from pyspark.sql.window import Window
 
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jp(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp(f"{store_path}/pairs")):
-        return spark.createDataFrame(
-            [], "from_type string, to_type string, n long, prob double"
-        )
-    dirs = [
-        st.getPath().toString()
-        for st in fs.listStatus(jp(f"{store_path}/pairs"))
-        if st.getPath().getName().startswith("batch=")
-    ]
-    if not dirs:
+    pairs = _read_batches(spark, store_path, "pairs")
+    if pairs is None:
         return spark.createDataFrame(
             [], "from_type string, to_type string, n long, prob double"
         )
     counts = (
-        spark.read.parquet(*dirs)
-        .groupBy("from_type", "to_type")
+        pairs.groupBy("from_type", "to_type")
         .agg(F.sum("n").cast("long").alias("n"))
     )
     totals = Window.partitionBy("from_type")
@@ -1243,13 +1206,9 @@ def incremental_psi(
     action threshold on any dimension, the upstream encoder changed.
     """
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_psi_batch(batch_df, store_path, batch_id, vec_col=vec_col)
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(handle)
+    return _foreach_batch(
+        stream, checkpoint_path,
+        lambda df, bid: ingest_psi_batch(df, store_path, bid, vec_col=vec_col),
     )
 
 
@@ -1260,20 +1219,11 @@ def resolve_psi(spark, store_path: str) -> DataFrame:
     tallies summed exactly).  Empty store (no batches yet) -> empty."""
     from vectordb_watermark_spark.operators.analytics import _psi_from_grids
 
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jp(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp(f"{store_path}/tallies")):
-        return spark.createDataFrame([], "dim int, psi double")
-    dirs = [
-        st.getPath().toString()
-        for st in fs.listStatus(jp(f"{store_path}/tallies"))
-        if st.getPath().getName().startswith("batch=")
-    ]
-    if not dirs:
+    tallies = _read_batches(spark, store_path, "tallies")
+    if tallies is None:
         return spark.createDataFrame([], "dim int, psi double")
     nc = (
-        spark.read.parquet(*dirs)
-        .groupBy("dim", "bin")
+        tallies.groupBy("dim", "bin")
         .agg(F.sum("nc").cast("long").alias("nc"))
     )
     nb = spark.read.parquet(f"{store_path}/baseline")
@@ -1309,17 +1259,11 @@ def compact_transition_pairs(
     rename leaves the counts ONLY in the staged ``pairs/.fold_*`` dir
     (complete recovery copy: rename it to the target ``batch=stream-N``
     to repair).  No window double-counts."""
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jp(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp(f"{store_path}/pairs")):
-        return 0
-    dirs = {}
-    for st in fs.listStatus(jp(f"{store_path}/pairs")):
-        name = st.getPath().getName()
-        if name.startswith("batch=stream-"):
-            k = int(name.rsplit("-", 1)[1])
-            if exclude is None or k < exclude:
-                dirs[k] = st.getPath().toString()
+    jp, fs = _index_fs(spark, store_path)
+    dirs = {
+        k: d for k, d in _dirs_by_batch(spark, store_path, "pairs").items()
+        if exclude is None or k < exclude
+    }
     if len(dirs) < 2:
         return 0
     top = max(dirs)
@@ -1339,19 +1283,14 @@ def compact_transition_pairs(
     # so with ``exclude=k`` everything except the newest state BELOW k (a
     # retry of k replays against it) and the dirs at/above k is dead; in
     # the between-runs form only the global newest survives
-    if fs.exists(jp(f"{store_path}/state")):
-        sdirs = {}
-        for st in fs.listStatus(jp(f"{store_path}/state")):
-            name = st.getPath().getName()
-            if name.startswith("batch=stream-"):
-                sdirs[int(name.rsplit("-", 1)[1])] = st.getPath().toString()
-        live = {k for k in sdirs if exclude is not None and k >= exclude}
-        below = [k for k in sdirs if exclude is None or k < exclude]
-        if below:
-            live.add(max(below))
-        for k, d in sdirs.items():
-            if k not in live:
-                fs.delete(jp(d), True)
+    sdirs = _dirs_by_batch(spark, store_path, "state")
+    live = {k for k in sdirs if exclude is not None and k >= exclude}
+    below = [k for k in sdirs if exclude is None or k < exclude]
+    if below:
+        live.add(max(below))
+    for k, d in sdirs.items():
+        if k not in live:
+            fs.delete(jp(d), True)
     return len(dirs)
 
 
@@ -1400,13 +1339,9 @@ def incremental_kmv(
     VALUES is harmless (distinct hashing), unlike count-based sketches.
     """
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_kmv_batch(batch_df, store_path, batch_id, col=col, k=k)
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(handle)
+    return _foreach_batch(
+        stream, checkpoint_path,
+        lambda df, bid: ingest_kmv_batch(df, store_path, bid, col=col, k=k),
     )
 
 
@@ -1417,20 +1352,10 @@ def resolve_kmv(spark, store_path: str, k: int = 256) -> DataFrame:
     reduce code).  Empty store -> estimate 0."""
     from vectordb_watermark_spark.operators.sketch import kmv_from_hashes
 
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jp(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp(f"{store_path}/sketch")):
-        return kmv_from_hashes(
-            spark.createDataFrame([], "h long"), k
-        )
-    dirs = [
-        st.getPath().toString()
-        for st in fs.listStatus(jp(f"{store_path}/sketch"))
-        if st.getPath().getName().startswith("batch=")
-    ]
-    if not dirs:
-        return kmv_from_hashes(spark.createDataFrame([], "h long"), k)
-    return kmv_from_hashes(spark.read.parquet(*dirs), k)
+    sketch = _read_batches(spark, store_path, "sketch")
+    if sketch is None:
+        sketch = spark.createDataFrame([], "h long")
+    return kmv_from_hashes(sketch, k)
 
 
 def ingest_rate_batch(
@@ -1446,22 +1371,16 @@ def ingest_rate_batch(
     event stream resolves identically."""
     if not batch_df.take(1):
         return
-    spark = batch_df.sparkSession
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jp(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    gpath = f"{store_path}/granularity"
-    if fs.exists(jp(gpath)):
-        stored = spark.read.parquet(gpath).collect()[0]["granularity"]
-        if stored != granularity:
-            raise ValueError(
-                f"incremental_rates: store at {store_path!r} was built with "
-                f"granularity {stored!r}, batch offered {granularity!r} — "
-                f"mixed-granule tallies would silently corrupt the monitor"
-            )
-    else:
-        spark.createDataFrame(
-            [(granularity,)], "granularity string"
-        ).coalesce(1).write.mode("overwrite").parquet(gpath)
+    _pin_config(
+        batch_df.sparkSession, f"{store_path}/granularity",
+        {"granularity": granularity}, "granularity string",
+        lambda stored: (
+            f"incremental_rates: store at {store_path!r} was built with "
+            f"granularity {stored['granularity']!r}, batch offered "
+            f"{granularity!r} — mixed-granule tallies would silently "
+            f"corrupt the monitor"
+        ),
+    )
     (
         batch_df.groupBy(
             F.date_trunc(granularity, F.col(ts_col)).alias("bucket")
@@ -1491,16 +1410,11 @@ def incremental_rates(
     batches (no ordering contract at all, unlike the transitions sink).
     """
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_rate_batch(
-            batch_df, store_path, batch_id,
-            ts_col=ts_col, granularity=granularity,
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(handle)
+    return _foreach_batch(
+        stream, checkpoint_path,
+        lambda df, bid: ingest_rate_batch(
+            df, store_path, bid, ts_col=ts_col, granularity=granularity
+        ),
     )
 
 
@@ -1514,45 +1428,16 @@ def resolve_rate_anomalies(
         anomalies_from_counts,
     )
 
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jp(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp(f"{store_path}/counts")):
-        return spark.createDataFrame(
-            [], "bucket string, n long, mz_ppm long, is_anomaly boolean"
-        )
-    dirs = [
-        st.getPath().toString()
-        for st in fs.listStatus(jp(f"{store_path}/counts"))
-        if st.getPath().getName().startswith("batch=")
-    ]
-    if not dirs:
+    counts = _read_batches(spark, store_path, "counts")
+    if counts is None:
         return spark.createDataFrame(
             [], "bucket string, n long, mz_ppm long, is_anomaly boolean"
         )
     counts = (
-        spark.read.parquet(*dirs)
-        .groupBy("bucket")
+        counts.groupBy("bucket")
         .agg(F.sum("n").cast("long").alias("n"))
     )
     return anomalies_from_counts(counts, threshold=threshold)
-
-
-def _batch_dirs(spark, root: str, sub: str, exclude: int | None = None) -> list[str]:
-    """Existing ``{root}/{sub}/batch=stream-N`` directories, minus the
-    excluded batch id (a retried batch's own partial output is not
-    history)."""
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jp(root).getFileSystem(spark._jsc.hadoopConfiguration())
-    base = jp(f"{root}/{sub}")
-    if not fs.exists(base):
-        return []
-    skip = None if exclude is None else f"batch=stream-{int(exclude)}"
-    return [
-        st.getPath().toString()
-        for st in fs.listStatus(base)
-        if st.getPath().getName().startswith("batch=stream-")
-        and st.getPath().getName() != skip
-    ]
 
 
 def ingest_shingles_batch(
@@ -1595,33 +1480,26 @@ def ingest_shingles_batch(
     from vectordb_watermark_spark.operators.dedup import _doc_ngrams
 
     spark = batch_df.sparkSession
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jp(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    pin_path = f"{store_path}/pin"
-    if fs.exists(jp(pin_path)):
-        pin = spark.read.parquet(pin_path).collect()[0]
-        if (pin["shingle_k"], pin["max_df"]) != (shingle_k, max_df):
-            raise ValueError(
-                f"incremental shingle store at {store_path!r} was built "
-                f"with (shingle_k={pin['shingle_k']}, max_df={pin['max_df']}),"
-                f" batch offered ({shingle_k}, {max_df}) — mixed parameters "
-                "would silently corrupt the candidate geometry"
-            )
-    else:
-        spark.createDataFrame(
-            [(shingle_k, max_df)], "shingle_k int, max_df int"
-        ).coalesce(1).write.mode("overwrite").parquet(pin_path)
+    _pin_config(
+        spark, f"{store_path}/pin",
+        {"shingle_k": shingle_k, "max_df": max_df},
+        "shingle_k int, max_df int",
+        lambda pin: (
+            f"incremental shingle store at {store_path!r} was built "
+            f"with (shingle_k={pin['shingle_k']}, max_df={pin['max_df']}),"
+            f" batch offered ({shingle_k}, {max_df}) — mixed parameters "
+            "would silently corrupt the candidate geometry"
+        ),
+    )
 
     grams = (
         _doc_ngrams(batch_df, id_col, text_col, shingle_k)
         .select("id", "g")
         .distinct()
     )
-    hot_dirs = _batch_dirs(spark, store_path, "hot", exclude=batch_id)
-    if hot_dirs:
-        grams = grams.join(
-            spark.read.parquet(*hot_dirs).select("g"), "g", "left_anti"
-        )
+    hot = _read_batches(spark, store_path, "hot", exclude=batch_id)
+    if hot is not None:
+        grams = grams.join(hot.select("g"), "g", "left_anti")
     grams = grams.persist()
     grams.write.mode("overwrite").parquet(
         f"{store_path}/rows/batch=stream-{int(batch_id)}"
@@ -1631,11 +1509,11 @@ def ingest_shingles_batch(
     # (id, g) distinct after the union makes DF count DOCUMENTS, not
     # ingestion events — a doc re-ingested across batches must not
     # double-count toward hot-crossing (ADVICE r13)
-    row_dirs = _batch_dirs(spark, store_path, "rows", exclude=batch_id)
+    prior_rows = _read_batches(spark, store_path, "rows", exclude=batch_id)
     cum = grams
-    if row_dirs:
+    if prior_rows is not None:
         cum = cum.unionByName(
-            spark.read.parquet(*row_dirs).join(
+            prior_rows.join(
                 grams.select("g").distinct(), "g", "left_semi"
             )
         ).distinct()
@@ -1663,16 +1541,12 @@ def incremental_shingles(
     """Streaming wrapper over :func:`ingest_shingles_batch` — returns the
     DataStreamWriter (call ``.start()``)."""
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_shingles_batch(
-            batch_df, store_path, batch_id, id_col=id_col, text_col=text_col,
+    return _foreach_batch(
+        stream, checkpoint_path,
+        lambda df, bid: ingest_shingles_batch(
+            df, store_path, bid, id_col=id_col, text_col=text_col,
             shingle_k=shingle_k, max_df=max_df,
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(handle)
+        ),
     )
 
 
@@ -1697,8 +1571,8 @@ def resolve_containment_store(
     """
     from vectordb_watermark_spark.operators.dedup import containment_pairs
 
-    row_dirs = _batch_dirs(spark, store_path, "rows")
-    if not row_dirs:
+    rows = _read_batches(spark, store_path, "rows")
+    if rows is None:
         return containment_pairs(
             docs.limit(0), docs.limit(0).selectExpr(
                 f"{id_col} as a", f"{id_col} as b"
@@ -1710,12 +1584,10 @@ def resolve_containment_store(
     # than one micro-batch lands its rows in each batch dir, and raw-row
     # DF would double-count it — the one-shot twin dedups (id, g)
     # corpus-wide, so the resolve must too (ADVICE r13)
-    rows = spark.read.parquet(*row_dirs).select("id", "g").distinct()
-    hot_dirs = _batch_dirs(spark, store_path, "hot")
-    if hot_dirs:
-        rows = rows.join(
-            spark.read.parquet(*hot_dirs).select("g"), "g", "left_anti"
-        )
+    rows = rows.select("id", "g").distinct()
+    hot = _read_batches(spark, store_path, "hot")
+    if hot is not None:
+        rows = rows.join(hot.select("g"), "g", "left_anti")
     live = rows.join(
         rows.groupBy("g")
         .agg(F.count(F.lit(1)).alias("df"))
