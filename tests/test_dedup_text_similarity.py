@@ -1550,7 +1550,7 @@ def test_ivf_append_self_heals_presidecar_index(spark, vectors, tmp_path):
     """A pre-sidecar index (no index_meta) falls back to deriving id type +
     next sequence from the index itself ONCE, appends correctly, and writes
     the sidecar so every later append is metadata-cheap."""
-    import shutil
+    import os
 
     from vectordb_watermark_spark.operators.similarity import (
         _load_index_meta,
@@ -1560,7 +1560,7 @@ def test_ivf_append_self_heals_presidecar_index(spark, vectors, tmp_path):
 
     idx = str(tmp_path / "ivf")
     ivf_write_index(vectors.filter(F.col("id") >= 10), idx, n_centroids=4, key="ivf")
-    shutil.rmtree(f"{idx}/index_meta")
+    os.remove(f"{idx}/index_meta")
     assert _load_index_meta(spark, idx) is None
 
     fresh = vectors.filter(F.col("id") < 10)
@@ -2342,15 +2342,17 @@ def test_ivf_compact_crash_mid_pieces_keeps_old_version_live(
     idx = str(tmp_path / "ivf_crash2")
     S.ivf_write_index(blob([1.0] + [0.0] * 7, 100, 0), idx, n_centroids=4, key="c")
 
-    real = S._write_centroids_atomic
+    real = S._put_sidecar
 
-    def crash(sp, p, cents):
-        raise RuntimeError("injected crash mid-pieces")
+    def crash(sp, root, name, obj):
+        if name == "centroids":
+            raise RuntimeError("injected crash mid-pieces")
+        real(sp, root, name, obj)
 
-    monkeypatch.setattr(S, "_write_centroids_atomic", crash)
+    monkeypatch.setattr(S, "_put_sidecar", crash)
     with pytest.raises(RuntimeError, match="mid-pieces"):
         S.ivf_compact_index(spark, idx, key="c2")
-    monkeypatch.setattr(S, "_write_centroids_atomic", real)
+    monkeypatch.setattr(S, "_put_sidecar", real)
 
     assert S._resolve_index_root(spark, idx) == idx
     # the torn leftover is a PRIVATE staging dir (_v00001__{token}), never
@@ -2531,7 +2533,7 @@ def test_racing_compactions_are_isolated_not_just_detected(spark, tmp_path):
     # loser's attempt: fully stage version 1 pieces (private dir)
     loser = S._stage_index_version(spark, idx, 1)
     spark.read.parquet(f"{idx}/vectors").write.parquet(f"{loser}/vectors")
-    S._write_centroids_atomic(spark, loser, S._load_centroids(spark, idx))
+    S._put_sidecar(spark, loser, "centroids", S._load_centroids(spark, idx))
 
     # winner compacts normally in the meantime (commits _v00001)
     S.ivf_compact_index(spark, idx, key="c2", gc_keep_last=None)
@@ -3117,3 +3119,149 @@ def test_rare_shingle_df_cut_drops_boilerplate(spark):
 
     with pytest.raises(ValueError):
         containment_pairs(df, candidates="nope")
+
+
+def _jobs_submitted(spark, fn):
+    """``(fn(), ids of the Spark jobs it submitted)`` — read from the
+    status tracker after the listener bus has drained, so a job submitted
+    just before the second read is not missed."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    out = fn()
+    bus.waitUntilEmpty()
+    return out, set(sc.statusTracker().getJobIdsForGroup()) - before
+
+
+@pytest.mark.parametrize("kind", [
+    "centroids", "index_meta", "ivf_drift_baseline", "fold_fence",
+    "pq_codebooks", "rotation", "pq_drift_baseline",
+    "rates_pin", "shingles_pin", "psi_edges",
+])
+def test_sidecar_roundtrip_submits_no_spark_job(spark, tmp_path, kind):
+    """Every driver-held sidecar — index and IVF-PQ pieces and the stream
+    stores' pins and PSI edges — is written and read back bit-exactly
+    through the FileSystem, and neither the write nor the read submits a
+    Spark job."""
+    import numpy as np
+
+    from vectordb_watermark_spark.operators import pq as P
+    from vectordb_watermark_spark.operators import similarity as S
+    from vectordb_watermark_spark.streaming import curation as C
+
+    rng = np.random.default_rng(7)
+    root = str(tmp_path / "store")
+    cents = (rng.standard_normal((8, 64)) * 1e-3).tolist()
+    books = rng.standard_normal((8, 16, 8))
+    R = np.linalg.qr(rng.standard_normal((64, 64)))[0]
+    hist = rng.integers(0, 500, (8, 16))
+    pq_base = {"base_energy": 0.1 + 0.2, "base_rows": 1200,
+               "code_hist": hist.tolist()}
+
+    def sidecar(name, value):
+        return lambda: S._put_sidecar(spark, root, name, value)
+
+    cases = {
+        "centroids": (sidecar("centroids", cents),
+                      lambda: S._load_centroids(spark, root), cents),
+        "index_meta": (
+            lambda: S._write_index_meta_atomic(spark, root, "bigint", 64, 7),
+            lambda: S._load_index_meta(spark, root),
+            {"id_type": "bigint", "dim": 64, "next_append_seq": 7},
+        ),
+        "ivf_drift_baseline": (
+            sidecar("drift_baseline", {"base_distortion": 1 / 3, "base_rows": 9}),
+            lambda: S._get_sidecar(spark, root, "drift_baseline"),
+            {"base_distortion": 1 / 3, "base_rows": 9},
+        ),
+        "fold_fence": (sidecar("fold_fence", 41),
+                       lambda: S._load_fold_fence(spark, root), 41),
+        "pq_codebooks": (sidecar("pq_codebooks", books.tolist()),
+                         lambda: P._load_codebooks(spark, root), books),
+        "rotation": (sidecar("rotation", R.tolist()),
+                     lambda: P._load_rotation(spark, root), R),
+        "pq_drift_baseline": (
+            sidecar("drift_baseline", pq_base),
+            lambda: S._get_sidecar(spark, root, "drift_baseline"), pq_base,
+        ),
+        "rates_pin": (
+            lambda: C._pin_config(
+                spark, root, "granularity", {"granularity": "hour"}, str
+            ),
+            lambda: S._get_sidecar(spark, root, "granularity"),
+            {"granularity": "hour"},
+        ),
+        "shingles_pin": (
+            lambda: C._pin_config(
+                spark, root, "pin", {"shingle_k": 8, "max_df": 5}, str
+            ),
+            lambda: S._get_sidecar(spark, root, "pin"),
+            {"shingle_k": 8, "max_df": 5},
+        ),
+        "psi_edges": (
+            sidecar("edges", [-0.4, -0.1, 0.0, 0.1 + 0.2]),
+            lambda: S._get_sidecar(spark, root, "edges"),
+            [-0.4, -0.1, 0.0, 0.1 + 0.2],
+        ),
+    }
+    write, read, expected = cases[kind]
+
+    # the counter sees a real job
+    _, jobs = _jobs_submitted(spark, lambda: spark.range(3).count())
+    assert jobs
+    _, jobs = _jobs_submitted(spark, write)
+    assert not jobs, f"sidecar write submitted jobs {sorted(jobs)}"
+    _, jobs = _jobs_submitted(spark, write)  # overwrite: the staged swap
+    assert not jobs, f"sidecar rewrite submitted jobs {sorted(jobs)}"
+    got, jobs = _jobs_submitted(spark, read)
+    assert not jobs, f"sidecar read submitted jobs {sorted(jobs)}"
+    if isinstance(expected, np.ndarray):
+        assert np.array_equal(got, expected)
+    else:
+        assert got == expected
+
+
+def test_legacy_parquet_sidecar_fails_loudly(spark, tmp_path):
+    """A sidecar in the older layout — a parquet directory where the JSON
+    file now lives — is never read as absent: an append and a streaming
+    micro-batch both fail ("Is a directory") before writing, so no new rows
+    land beside centroids the index was not built with."""
+    import os
+    import shutil
+
+    from vectordb_watermark_spark.operators import similarity as S
+    from vectordb_watermark_spark.streaming.curation import incremental_index
+
+    blob = _mk_blobs(spark, seed=3)
+    idx = str(tmp_path / "legacy")
+    cents = S.ivf_write_index(
+        blob([1.0] + [0.0] * 7, 40, 0), idx, n_centroids=4, key="c"
+    )
+    os.remove(f"{idx}/centroids")
+    spark.createDataFrame(
+        list(enumerate(cents)), "centroid int, cvec array<double>"
+    ).coalesce(1).write.parquet(f"{idx}/centroids")
+
+    def stored():
+        return sorted(
+            (r["id"], r["batch"])
+            for r in spark.read.parquet(f"{idx}/vectors").collect()
+        )
+
+    before = stored()
+    with pytest.raises(Exception, match="Is a directory"):
+        S.ivf_append_index(blob([0.0, 1.0] + [0.0] * 6, 10, 100), idx)
+
+    src = tmp_path / "legacy_src"
+    stage = tmp_path / "legacy_stage"
+    blob([0.0, 1.0] + [0.0] * 6, 10, 200).coalesce(1).write.parquet(str(stage))
+    src.mkdir()
+    shutil.copy(next(stage.glob("part-*.parquet")), src / "a.parquet")
+    q = incremental_index(
+        spark.readStream.schema("id long, emb array<float>").parquet(str(src)),
+        idx, str(tmp_path / "legacy_ckpt"), n_centroids=4, key="c",
+    ).trigger(availableNow=True).start()
+    with pytest.raises(Exception, match="Is a directory"):
+        q.awaitTermination(120)
+    assert stored() == before

@@ -930,7 +930,10 @@ def test_incremental_index_across_microbatches(spark, tmp_path):
 
     import numpy as np
 
-    from vectordb_watermark_spark.operators.similarity import ivf_query_index
+    from vectordb_watermark_spark.operators.similarity import (
+        _load_centroids,
+        ivf_query_index,
+    )
     from vectordb_watermark_spark.streaming.curation import incremental_index
 
     rng = np.random.default_rng(9)
@@ -959,7 +962,7 @@ def test_incremental_index_across_microbatches(spark, tmp_path):
     stored = spark.read.parquet(f"{idx}/vectors")
     assert stored.count() == 60
     assert stored.select("id").distinct().count() == 60
-    assert spark.read.parquet(f"{idx}/centroids").count() == 4
+    assert len(_load_centroids(spark, idx)) == 4
 
     # a streamed vector retrieves itself at rank 1 with all centroids probed
     target = dict(vecs)[55]
@@ -971,11 +974,7 @@ def test_incremental_index_across_microbatches(spark, tmp_path):
     from pyspark.sql import functions as SF
     from vectordb_watermark_spark.operators.similarity import _ivf_assign_pass, _ivf_base
 
-    cents = [
-        [float(x) for x in r["cvec"]]
-        for r in sorted(spark.read.parquet(f"{idx}/centroids").collect(),
-                        key=lambda r: r["centroid"])
-    ]
+    cents = _load_centroids(spark, idx)
     replay = spark.createDataFrame(vecs[40:], "id long, emb array<float>")
     base = _ivf_base(replay, "id", "emb")
     try:
@@ -1176,6 +1175,7 @@ def test_incremental_index_rebootstrap_preserves_append_seq(spark, tmp_path, sin
     sequence is re-derived from the directory listing; with the sidecar
     surviving, it wins outright.  The IVF index is batch-built, the IVF-PQ
     one stream-built (its appends need the tagged layout)."""
+    import os
     import shutil
 
     import numpy as np
@@ -1222,8 +1222,8 @@ def test_incremental_index_rebootstrap_preserves_append_seq(spark, tmp_path, sin
     assert _load_index_meta(spark, idx)["next_append_seq"] == 2
 
     # lose BOTH the trained table and the sidecar, then re-bootstrap
-    shutil.rmtree(f"{idx}/{trained}")
-    shutil.rmtree(f"{idx}/index_meta")
+    os.remove(f"{idx}/{trained}")
+    os.remove(f"{idx}/index_meta")
     stream(vecs[40:50], 0 if ivf else 1)
 
     # listing-derived: max(append-N) + 1, not a reset to 1

@@ -164,7 +164,7 @@ def test_ivf_pq_index_roundtrip_and_recall(spark, vectors, tmp_path):
     cents, books = P.ivf_pq_write_index(
         vectors, path, n_centroids=16, m=8, n_codes=64
     )
-    # codebooks round-trip bit-exactly through the parquet sidecar
+    # codebooks round-trip bit-exactly through the JSON sidecar
     assert np.array_equal(P._load_codebooks(spark, path), books)
     # rerank recall floor, mean over 3 queries (n_probe=8/16 caps recall the
     # same way ivf_recall's does; measured 0.7-0.9)

@@ -1455,31 +1455,14 @@ SELECT node, pr FROM p3""",
                            ELSE 0.0 END, 6) AS jaccard
               FROM t x JOIN t y ON x.doc_id < y.doc_id
             ) WHERE jaccard >= 0.35""",
-        # connected components of the minhash candidate graph via recursive
-        # label reachability: comp(id) = min id reachable from id — identical
-        # definition to operators/dedup.connected_components' fixpoint
-        "stream_components_docs": f"""
-            WITH RECURSIVE sigs AS (
-              SELECT doc_id, {mh_cols} FROM
-                (SELECT doc_id, {_mh_words} AS hs FROM documents)
-            ),
-            bands AS (
-              SELECT doc_id, unnest([{', '.join(band_exprs)}]) AS bb FROM sigs
-            ),
-            keys AS (SELECT doc_id, bb[1] AS band, bb[2] AS band_hash FROM bands),
-            cpairs AS (
-              SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-              FROM keys x JOIN keys y ON x.band = y.band AND x.band_hash = y.band_hash
-              WHERE x.doc_id < y.doc_id
-            ),
-            edges AS (SELECT a, b FROM cpairs UNION SELECT b, a FROM cpairs),
-            reach(id, comp) AS (
-              SELECT a AS id, a AS comp FROM edges
-              UNION
-              SELECT e.b AS id, r.comp FROM reach r JOIN edges e ON e.a = r.id
-            )
-            SELECT id, CAST(min(comp) AS BIGINT) AS comp FROM reach GROUP BY id""",
-        # identical twin: streamed clusters must equal batch clusters
+        # connected components of the minhash candidate graph: comp(id) = min
+        # id reachable from id, the definition of the fixpoint in
+        # operators/dedup.connected_components.  Min-label propagation keeps
+        # ONE label per id per step (the least among its own and its
+        # neighbours' labels) and stops after the first step that changes
+        # none: each step costs O(edges), the step count is bounded by the
+        # graph diameter, and labels only fall, so an id's least label is
+        # its final one.
         "dedup_components": f"""
             WITH RECURSIVE sigs AS (
               SELECT doc_id, {mh_cols} FROM
@@ -1495,12 +1478,17 @@ SELECT node, pr FROM p3""",
               WHERE x.doc_id < y.doc_id
             ),
             edges AS (SELECT a, b FROM cpairs UNION SELECT b, a FROM cpairs),
-            reach(id, comp) AS (
-              SELECT a AS id, a AS comp FROM edges
-              UNION
-              SELECT e.b AS id, r.comp FROM reach r JOIN edges e ON e.a = r.id
+            lab(id, comp, changed) AS (
+              SELECT a, least(a, min(b)), true FROM edges GROUP BY a
+              UNION ALL
+              SELECT l.id, least(l.comp, min(n.comp)), min(n.comp) < l.comp
+              FROM lab l
+              JOIN edges e ON e.a = l.id
+              JOIN lab n ON n.id = e.b
+              WHERE (SELECT bool_or(changed) FROM lab)
+              GROUP BY l.id, l.comp
             )
-            SELECT id, CAST(min(comp) AS BIGINT) AS comp FROM reach GROUP BY id""",
+            SELECT id, CAST(min(comp) AS BIGINT) AS comp FROM lab GROUP BY id""",
         "neardup_safe_split": f"""
             WITH RECURSIVE sigs AS (
               SELECT doc_id, {mh_cols} FROM
@@ -2916,6 +2904,8 @@ SELECT node, pr FROM p3""",
     # the streaming monitor resolves to EXACTLY the batch psi_per_dim —
     # one twin serves both (shared tally/formula code on the Spark side)
     out["stream_psi_embeddings"] = out["psi_drift_embeddings"]
+    # streamed clusters must equal batch clusters — one twin for both
+    out["stream_components_docs"] = out["dedup_components"]
     # KMV merges exactly, so the streamed store resolves bit-identical to
     # the one-shot sketch — the batch twin serves both
     out["stream_kmv_docs"] = out["sketch_distinct_tokens"]

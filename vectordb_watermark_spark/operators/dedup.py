@@ -447,9 +447,11 @@ def release_signature_caches() -> None:
     long-running services call this between corpora instead of waiting for
     LRU eviction.  For checkpointed handles the unpersist is a CacheManager
     no-op by design (their blocks cannot recompute once dropped, and an
-    outstanding result may still read them) — the drain removes the
-    registry's references and the ContextCleaner frees the blocks as soon
-    as no live result plan uses them."""
+    outstanding result may still read them) — the drain only drops the
+    registry's references.  The blocks are freed later, when the
+    ContextCleaner runs after a real JVM garbage collection has reclaimed
+    the last reference to the checkpointed RDD — not as soon as no live
+    result plan uses them."""
     while True:
         with _SIG_LOCK:
             if not _SIG_CACHES:

@@ -57,37 +57,16 @@ def _pq_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def _write_rotation_atomic(spark, root: str, R: np.ndarray) -> None:
-    """Persist an OPQ rotation sidecar ``{root}/rotation`` (rows of R,
-    staged swap — same atomicity idiom as the centroid table)."""
-    from vectordb_watermark_spark.operators.similarity import _swap_dir_atomic
-
-    rows = [(i, [float(x) for x in R[i]]) for i in range(R.shape[0])]
-    staged = f"{root}/rotation__staged"
-    spark.createDataFrame(rows, "i int, vec array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(staged)
-    _swap_dir_atomic(spark, staged, f"{root}/rotation")
-
-
 def _load_rotation(spark, path: str) -> np.ndarray | None:
     """OPQ rotation sidecar, or None for an unrotated index (every
     pre-OPQ index keeps working — the sidecar is strictly additive)."""
     from vectordb_watermark_spark.operators.similarity import (
-        _index_fs,
+        _get_sidecar,
         _resolve_index_root,
     )
 
-    root = _resolve_index_root(spark, path)
-    jvm_path, fs = _index_fs(spark, root)
-    if not fs.exists(jvm_path(f"{root}/rotation")):
-        return None
-    rows = spark.read.parquet(f"{root}/rotation").collect()
-    d = len(rows)
-    R = np.zeros((d, d), dtype=np.float64)
-    for r in rows:
-        R[r["i"]] = r["vec"]
-    return R
+    R = _get_sidecar(spark, _resolve_index_root(spark, path), "rotation")
+    return None if R is None else np.asarray(R, dtype=np.float64)
 
 
 def _check_geometry(dim: int, m: int) -> int:
@@ -552,10 +531,15 @@ def ivf_pq_write_index(
 
     Layout::
 
-        {path}/codes/centroid=X/          (id, codes array<int>)
-        {path}/centroids/                 coarse centroid table (staged swap)
-        {path}/pq_codebooks/              (sub, code, vec) parquet (staged swap)
-        {path}/rotation/                  optional OPQ rotation (staged swap)
+        {path}/codes/centroid=X/          (id, codes array<int>) parquet
+        {path}/centroids                  coarse centroids (JSON sidecar)
+        {path}/pq_codebooks               (m, n_codes, dsub) codebooks (sidecar)
+        {path}/rotation                   optional OPQ rotation (sidecar)
+        {path}/drift_baseline             energy, rows, code histogram (sidecar)
+
+    Sidecars are driver-held: written and read through the FileSystem
+    with no Spark job (``similarity._put_sidecar``), each placed by a
+    staged swap.
 
     The row payload stored is ``m`` ints per vector — the original vectors
     are NOT in the index; query-time exact re-rank (optional) joins the ADC
@@ -569,9 +553,8 @@ def ivf_pq_write_index(
         _ivf_assign_pass,
         _ivf_train,
         _publish_index_version,
+        _put_sidecar,
         _stage_index_version,
-        _swap_dir_atomic,
-        _write_centroids_atomic,
     )
 
     spark = df.sparkSession
@@ -620,27 +603,13 @@ def ivf_pq_write_index(
             assigned.unpersist()
     finally:
         base.unpersist()
-    _write_centroids_atomic(spark, root, cents)
+    _put_sidecar(spark, root, "centroids", cents)
     if R is not None:
-        _write_rotation_atomic(spark, root, R)
-    mm, nc, dsub = books.shape
-    rows = [
-        (s, c, [float(x) for x in books[s, c]])
-        for s in range(mm)
-        for c in range(nc)
-    ]
-    staged = f"{root}/pq_codebooks__staged"
-    spark.createDataFrame(rows, "sub int, code int, vec array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(staged)
-    _swap_dir_atomic(spark, staged, f"{root}/pq_codebooks")
-    # build-time decoded-residual-energy baseline for ivf_pq_index_drift
-    # (one scan of the just-written compressed codes)
-    written = spark.read.parquet(f"{root}/codes")
-    _write_pq_drift_baseline(
-        spark, root, _decoded_residual_energy(written, books), written.count(),
-        _code_histogram(written),
-    )
+        _put_sidecar(spark, root, "rotation", R.tolist())
+    _put_sidecar(spark, root, "pq_codebooks", books.tolist())
+    # build-time baseline for ivf_pq_index_drift (one scan of the
+    # just-written compressed codes)
+    _write_pq_drift_baseline(spark, root, books)
     if next_seq is not None:
         _publish_index_version(spark, path, next_seq, root)
         _gc_index_versions(spark, path)
@@ -719,17 +688,18 @@ def ivf_pq_compact_index(
     from vectordb_watermark_spark.operators.similarity import (
         _append_seq,
         _current_index_version,
+        _folded_stream_fence,
         _gc_index_versions,
-        _index_fs,
         _ivf_assign_pass,
         _ivf_train,
         _load_centroids,
+        _load_fold_fence,
         _load_tombstones,
         _publish_index_version,
+        _put_sidecar,
+        _recreate_claims,
         _resolve_index_root,
         _stage_index_version,
-        _swap_dir_atomic,
-        _write_centroids_atomic,
         _write_index_meta_atomic,
     )
 
@@ -773,14 +743,8 @@ def ivf_pq_compact_index(
     # the caller-provided source still contains them, and the tombstone
     # set is not carried into the new version.  With a tagged source the
     # replay fence advances to the highest victim-containing stream batch
-    # (see similarity._write_fold_fence) so a fresh-checkpoint replay of
+    # (see similarity._load_fold_fence) so a fresh-checkpoint replay of
     # those batches cannot silently resurrect the deleted rows.
-    from vectordb_watermark_spark.operators.similarity import (
-        _folded_stream_fence,
-        _load_fold_fence,
-        _write_fold_fence,
-    )
-
     tomb = _load_tombstones(spark, cur_root)
     fence = _load_fold_fence(spark, cur_root)
     if _fence_floor is not None:
@@ -825,40 +789,20 @@ def ivf_pq_compact_index(
                     df.schema[id_col].dataType.simpleString(),
                     len(cents[0]), seq_keep,
                 )
-                if appends:
-                    jvm_path, fs = _index_fs(spark, path)
-                    fs.mkdirs(jvm_path(f"{vdir}/append_claims"))
-                    for n_ in appends:
-                        fs.createNewFile(
-                            jvm_path(f"{vdir}/append_claims/append-{n_}.claim")
-                        )
+                _recreate_claims(spark, vdir, appends)
         finally:
             assigned.unpersist()
     finally:
         base.unpersist()
-    _write_centroids_atomic(spark, vdir, cents)
+    _put_sidecar(spark, vdir, "centroids", cents)
     if R is not None:
-        _write_rotation_atomic(spark, vdir, R)
-    mm, nc, _dsub = books.shape
-    rows = [
-        (s, c, [float(x) for x in books[s, c]])
-        for s in range(mm)
-        for c in range(nc)
-    ]
-    staged = f"{vdir}/pq_codebooks__staged"
-    spark.createDataFrame(rows, "sub int, code int, vec array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(staged)
-    _swap_dir_atomic(spark, staged, f"{vdir}/pq_codebooks")
-    # re-record the decoded-residual-energy baseline over the recompacted
-    # codes (the drift metric's denominator)
-    written = spark.read.parquet(f"{vdir}/codes")
-    _write_pq_drift_baseline(
-        spark, vdir, _decoded_residual_energy(written, books), written.count(),
-        _code_histogram(written),
-    )
+        _put_sidecar(spark, vdir, "rotation", R.tolist())
+    _put_sidecar(spark, vdir, "pq_codebooks", books.tolist())
+    # re-record the drift baseline over the recompacted codes (the drift
+    # metric's denominator)
+    _write_pq_drift_baseline(spark, vdir, books)
     if fence is not None:
-        _write_fold_fence(spark, vdir, fence)
+        _put_sidecar(spark, vdir, "fold_fence", fence)
     # every piece is staged — atomic rename onto _v{N}, THE commit, then
     # GC (skipped entirely under gc_keep_last=None)
     _publish_index_version(spark, path, next_seq, vdir)
@@ -998,34 +942,33 @@ def _decoded_residual_energy(codes: DataFrame, books: np.ndarray) -> float:
     return float(row["s"]) / n if n else 0.0
 
 
-def _code_histogram(codes: DataFrame) -> DataFrame:
-    """``(sub, code, cnt)`` usage counts of every codebook cell — one
+def _code_histogram(codes: DataFrame, shape: tuple[int, int]) -> np.ndarray:
+    """``(m, n_codes)`` usage counts of every codebook cell — one
     map-side-combined groupBy whose output is at most ``m * n_codes``
     rows (the same bounded shape as pq_train's partial reduction)."""
-    return (
+    H = np.zeros(shape, dtype=np.int64)
+    for r in (
         codes.select(F.posexplode("codes").alias("sub", "code"))
         .groupBy("sub", "code")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+        .collect()
+    ):
+        H[int(r["sub"]), int(r["code"])] = int(r["cnt"])
+    return H
 
 
-def _write_pq_drift_baseline(
-    spark, root: str, energy: float, n_rows: int, hist: DataFrame
-) -> None:
-    """Persist the build-time drift baselines beside the PQ index (staged
-    swap — same discipline as every sidecar): the decoded-residual-energy
-    scalar and the per-cell code-usage histogram."""
-    from vectordb_watermark_spark.operators.similarity import _swap_dir_atomic
+def _write_pq_drift_baseline(spark, root: str, books: np.ndarray) -> None:
+    """Record the build-time drift baseline of the codes under
+    ``{root}/codes`` as the ``drift_baseline`` sidecar: the decoded
+    residual energy, the row count and the code-usage histogram."""
+    from vectordb_watermark_spark.operators.similarity import _put_sidecar
 
-    tmp = f"{root}/pq_drift_baseline__tmp"
-    spark.createDataFrame(
-        [(float(energy), int(n_rows))],
-        "base_energy double, base_rows long",
-    ).coalesce(1).write.mode("overwrite").parquet(tmp)
-    _swap_dir_atomic(spark, tmp, f"{root}/pq_drift_baseline")
-    tmp = f"{root}/pq_code_hist__tmp"
-    hist.coalesce(1).write.mode("overwrite").parquet(tmp)
-    _swap_dir_atomic(spark, tmp, f"{root}/pq_code_hist")
+    codes = spark.read.parquet(f"{root}/codes")
+    _put_sidecar(spark, root, "drift_baseline", {
+        "base_energy": _decoded_residual_energy(codes, books),
+        "base_rows": codes.count(),
+        "code_hist": _code_histogram(codes, books.shape[:2]).tolist(),
+    })
 
 
 def ivf_pq_index_drift(
@@ -1044,11 +987,12 @@ def ivf_pq_index_drift(
       the largest training-scale codeword, so far-drifted appends move it
       to ~1.2-1.5x, not 10x;
     - ``code_tv``: mean per-subspace total-variation distance between the
-      CURRENT code-usage histogram and the build-time one (``pq_code_hist``
-      sidecar).  k-means cells start near-balanced; drifted rows pile
-      onto the few extreme codewords, so the distribution shift grows
-      with the drifted FRACTION and does not saturate.  0 = identical,
-      1 = disjoint; recompact when it exceeds ~0.1-0.2.
+      CURRENT code-usage histogram and the build-time one (held in the
+      ``drift_baseline`` sidecar).  k-means cells start near-balanced;
+      drifted rows pile onto the few extreme codewords, so the
+      distribution shift grows with the drifted FRACTION and does not
+      saturate.  0 = identical, 1 = disjoint; recompact when it exceeds
+      ~0.1-0.2.
 
     ``partition_skew`` (max/mean rows per centroid, exact from the codes
     layout) is the third signal.  :func:`ivf_pq_compact_index` re-trains
@@ -1066,62 +1010,37 @@ def ivf_pq_index_drift(
     (deterministic, partition-order free; both signals are means/
     distributions, so sampling only widens their noise).
     """
-    import numpy as np
-
     from vectordb_watermark_spark.operators.similarity import (
+        _get_sidecar,
+        _live_row_stats,
         _load_centroids,
-        _load_tombstones,
         _resolve_index_root,
     )
 
     root = _resolve_index_root(spark, path)
     cents = _load_centroids(spark, root)
     B = _load_codebooks(spark, root)
-    m, n_codes, _d = B.shape
-    codes = spark.read.parquet(f"{root}/codes")
-    if sample_fraction is not None:
-        from vectordb_watermark_spark.functions.hashing import keyed_uniform
-
-        codes = codes.filter(
-            keyed_uniform(key, "s", F.col("id")) < F.lit(float(sample_fraction))
-        )
-    # metrics describe the LIVE index (what queries see); the tombstoned
-    # share is its own recompaction trigger (dead_fraction)
-    n_with_dead = None
-    tomb = _load_tombstones(spark, root)
-    if tomb is not None:
-        n_with_dead = codes.count()
-        codes = codes.join(tomb, "id", "left_anti")
-    sizes = {
-        r["centroid"]: r["n"]
-        for r in codes.groupBy("centroid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n = int(sum(sizes.values()))
+    codes, stats = _live_row_stats(
+        spark, root, "codes", len(cents), sample_fraction, key
+    )
+    n = stats["n_rows"]
     # an empty (sampled) scan carries NO signal: report None (mirroring
     # the missing-baseline convention) instead of a 0.0 drift_ratio that
     # reads as "energy collapsed / no drift" (ADVICE r10 #4)
     energy = _decoded_residual_energy(codes, B) if n else None
-    base = None
+    baseline = _get_sidecar(spark, root, "drift_baseline") or {}
+    base = baseline.get("base_energy")
     code_tv = None
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(root).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path(f"{root}/pq_drift_baseline")):
-        r = spark.read.parquet(f"{root}/pq_drift_baseline").first()
-        base = float(r["base_energy"])
-    if fs.exists(jvm_path(f"{root}/pq_code_hist")) and n:
-        def hist_matrix(rows):
-            H = np.zeros((m, n_codes), dtype=np.float64)
-            for r in rows:
-                H[int(r["sub"]), int(r["code"])] = float(r["cnt"])
+    if "code_hist" in baseline and n:
+        def share(H):
+            H = np.asarray(H, dtype=np.float64)
             return H / np.maximum(H.sum(axis=1, keepdims=True), 1.0)
 
-        H0 = hist_matrix(spark.read.parquet(f"{root}/pq_code_hist").collect())
-        H1 = hist_matrix(_code_histogram(codes).collect())
+        H0 = share(baseline["code_hist"])
+        H1 = share(_code_histogram(codes, B.shape[:2]))
         code_tv = float(0.5 * np.abs(H1 - H0).sum(axis=1).mean())
-    mean_rows = n / max(len(cents), 1)
     return {
-        "n_rows": n,
-        "n_centroids": len(cents),
+        **stats,
         "resid_energy": round(energy, 9) if energy is not None else None,
         "base_energy": base,
         "drift_ratio": (
@@ -1130,29 +1049,21 @@ def ivf_pq_index_drift(
             else None
         ),
         "code_tv": round(code_tv, 6) if code_tv is not None else None,
-        "partition_skew": (
-            round(max(sizes.values()) / mean_rows, 6) if sizes and mean_rows > 0 else 0.0
-        ),
-        "dead_fraction": (
-            round((n_with_dead - n) / n_with_dead, 6)
-            if n_with_dead else 0.0
-        ),
     }
 
 
 def _load_codebooks(spark, path: str) -> np.ndarray:
-    from vectordb_watermark_spark.operators.similarity import _resolve_index_root
+    from vectordb_watermark_spark.operators.similarity import (
+        _get_sidecar,
+        _resolve_index_root,
+    )
 
     # double-resolve is identity-safe: version dirs never contain _commits
     path = _resolve_index_root(spark, path)
-    rows = spark.read.parquet(f"{path}/pq_codebooks").collect()
-    m = 1 + max(r["sub"] for r in rows)
-    n_codes = 1 + max(r["code"] for r in rows)
-    dsub = len(rows[0]["vec"])
-    B = np.zeros((m, n_codes, dsub), dtype=np.float64)
-    for r in rows:
-        B[r["sub"], r["code"]] = r["vec"]
-    return B
+    books = _get_sidecar(spark, path, "pq_codebooks")
+    if books is None:
+        raise FileNotFoundError(f"PQ codebooks {path}/pq_codebooks does not exist")
+    return np.asarray(books, dtype=np.float64)
 
 
 def ivf_pq_query_index(

@@ -71,6 +71,16 @@ class ConcurrentCompactionError(RuntimeError):
 # Serving WHILE old
 # versions are garbage-collected can still fail a reader that resolved
 # before the GC — loudly (missing files), never silently inconsistent.
+#
+# PIECES: the row tables (``vectors/`` or ``codes/``, ``tombstones/``) are
+# parquet.  Everything the driver holds — ``centroids``, ``index_meta``,
+# ``drift_baseline``, ``fold_fence`` and, for IVF-PQ, ``pq_codebooks`` and
+# ``rotation`` — is a SIDECAR: one JSON file under its own name, written
+# by _put_sidecar and read by _get_sidecar straight through the Hadoop
+# FileSystem (no Spark job), placed by the same staged _swap_dir_atomic,
+# so a sidecar's existence still implies it is complete.  ``drift_baseline``
+# stays apart from ``index_meta`` on purpose: every append rewrites the
+# metadata and must not have to carry (or accidentally drop) the baseline.
 # ---------------------------------------------------------------------------
 
 
@@ -78,6 +88,85 @@ def _index_fs(spark, path: str):
     """(jvm Path class, FileSystem) for an index root."""
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     return jvm_path, jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def _swap_dir_atomic(spark, staged: str, target_path: str) -> None:
+    """Move a fully-written staged directory or sidecar file into place.
+    An existing target is renamed ASIDE first (``<target>__old``) and
+    deleted only after the staged copy has landed — so a crash at any point leaves either the
+    complete old version or the complete new one recoverable, never a
+    deleted-but-not-replaced hole.  The reader-visible gap shrinks to the
+    instant between the two metadata renames (vs. the whole delete + staged
+    commit under delete-then-rename); concurrent REBUILD-while-serving on
+    object stores without atomic dir rename still needs external fencing —
+    documented at the callers."""
+    jvm_path, fs = _index_fs(spark, target_path)
+    target = jvm_path(target_path)
+    old = jvm_path(f"{target_path}__old")
+    if fs.exists(old):
+        if not fs.exists(target):
+            # crash window of a previous swap: the only complete copy is the
+            # aside — restore it BEFORE anything else, so a concurrent
+            # reader sees the previous version again and a crash during
+            # THIS swap still leaves a complete copy recoverable
+            if not fs.rename(old, target):
+                raise IOError(f"failed to restore {target_path} from __old")
+        else:
+            fs.delete(old, True)
+    had_old = False
+    if fs.exists(target):
+        if not fs.rename(target, old):
+            raise IOError(f"failed to move previous {target_path} aside")
+        had_old = True
+    if not fs.rename(jvm_path(staged), target):
+        raise IOError(f"failed to move staged {staged} into {target_path}")
+    if had_old:
+        fs.delete(old, True)
+
+
+def _sidecar_fs(spark, root: str):
+    """:func:`_index_fs` for sidecar I/O.  On a local path it is the raw
+    FileSystem: no ``.crc`` file beside the sidecar, so a reader racing a
+    swap never pairs the old file with the new checksum."""
+    jvm_path, fs = _index_fs(spark, root)
+    return jvm_path, fs.getRawFileSystem() if fs.getScheme() == "file" else fs
+
+
+def _put_sidecar(spark, root: str, name: str, obj) -> None:
+    """Write the driver-held sidecar ``{root}/{name}``: ``obj`` JSON-encoded
+    into one staged file on ``root``'s FileSystem, then placed by
+    :func:`_swap_dir_atomic` (a crash leaves the old or the new sidecar,
+    never a torn one).  No Spark job.  Floats round-trip exactly
+    (``repr``)."""
+    import json
+
+    jvm_path, fs = _sidecar_fs(spark, root)
+    staged = f"{root}/{name}__staged"
+    out = fs.create(jvm_path(staged), True)
+    try:
+        out.write(bytearray(json.dumps(obj).encode()))
+    finally:
+        out.close()
+    _swap_dir_atomic(spark, staged, f"{root}/{name}")
+
+
+def _get_sidecar(spark, root: str, name: str):
+    """The decoded sidecar ``{root}/{name}``, or ``None`` when it does not
+    exist.  A sidecar in the older parquet-directory layout fails loudly
+    ("Is a directory") — it is never read as absent, which would
+    re-bootstrap the index beside its old rows."""
+    import json
+
+    jvm_path, fs = _sidecar_fs(spark, root)
+    p = jvm_path(f"{root}/{name}")
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        data = spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+    finally:
+        stream.close()
+    return json.loads(bytes(data))
 
 
 def _current_index_version(spark, path: str) -> int | None:
@@ -379,10 +468,7 @@ def index_info(spark, path: str) -> dict:
         "n_rows_live": int(sum(tag_counts.values())),
         "n_tombstones": int(n_dead),
         "batch_tags": tag_counts,
-        "has_drift_baseline": bool(
-            fs.exists(jvm_path(f"{root}/drift_baseline"))
-            or fs.exists(jvm_path(f"{root}/pq_drift_baseline"))
-        ),
+        "has_drift_baseline": bool(fs.exists(jvm_path(f"{root}/drift_baseline"))),
         # OPQ rotation sidecar (IVF-PQ only; operators/opq.py)
         "rotated": bool(fs.exists(jvm_path(f"{root}/rotation"))),
     }
@@ -836,16 +922,14 @@ def ivf_assign(
 
 
 def _load_centroids(spark, path: str) -> list[list[float]]:
-    """Read a persisted IVF centroid table, ordered and validated: centroid
-    ids must be exactly 0..C-1 (a torn/partial overwrite would otherwise
-    silently misassign every vector by list position)."""
-    rows = sorted(
-        ((r["centroid"], [float(x) for x in r["cvec"]])
-         for r in spark.read.parquet(f"{path}/centroids").collect())
-    )
-    if [c for c, _ in rows] != list(range(len(rows))) or not rows:
+    """Read a persisted IVF centroid table, validated: an empty or ragged
+    table fails loudly instead of misassigning vectors by list position."""
+    cents = _get_sidecar(spark, path, "centroids")
+    if cents is None:
+        raise FileNotFoundError(f"IVF centroid table {path}/centroids does not exist")
+    if not cents or len({len(c) for c in cents}) != 1:
         raise ValueError(f"corrupt IVF centroid table at {path}/centroids")
-    return [v for _, v in rows]
+    return [[float(x) for x in c] for c in cents]
 
 
 def _ivf_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -1045,110 +1129,50 @@ def ivf_write_index(
         n_rows = base.count()
     finally:
         base.unpersist()
-    _write_centroids_atomic(spark, root, centroids)
+    _put_sidecar(spark, root, "centroids", centroids)
     # a rebuild restarts the append sequence at 1, so the claim files of the
     # PREVIOUS generation must go with it: clear them BEFORE resetting the
     # sidecar (crash between the two leaves old-seq sidecar + no claims —
     # appends just continue at the old sequence; the reverse order would
     # leave seq=1 racing into already-claimed tags, a spurious
     # ConcurrentAppendError per prior append — ADVICE r6)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm_path, fs = _index_fs(spark, path)
     fs.delete(jvm_path(f"{root}/append_claims"), True)
     _write_index_meta_atomic(
         spark, root,
         df.schema[id_col].dataType.simpleString(), len(centroids[0]), 1,
     )
-    _write_drift_baseline(spark, root, distortion, n_rows)
+    _put_sidecar(spark, root, "drift_baseline", {
+        "base_distortion": distortion, "base_rows": n_rows,
+    })
     if next_seq is not None:
         _publish_index_version(spark, path, next_seq, root)
         _gc_index_versions(spark, path)
     return centroids
 
 
-def _swap_dir_atomic(spark, staged: str, target_path: str) -> None:
-    """Move a fully-written staged directory into place.  An existing target
-    is renamed ASIDE first (``<target>__old``) and deleted only after the
-    staged directory has landed — so a crash at any point leaves either the
-    complete old version or the complete new one recoverable, never a
-    deleted-but-not-replaced hole.  The reader-visible gap shrinks to the
-    instant between the two metadata renames (vs. the whole delete + staged
-    commit under delete-then-rename); concurrent REBUILD-while-serving on
-    object stores without atomic dir rename still needs external fencing —
-    documented at the callers."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    target = jvm_path(target_path)
-    old = jvm_path(f"{target_path}__old")
-    if fs.exists(old):
-        if not fs.exists(target):
-            # crash window of a previous swap: the only complete copy is the
-            # aside — restore it BEFORE anything else, so a concurrent
-            # reader sees the previous version again and a crash during
-            # THIS swap still leaves a complete copy recoverable
-            if not fs.rename(old, target):
-                raise IOError(f"failed to restore {target_path} from __old")
-        else:
-            fs.delete(old, True)
-    had_old = False
-    if fs.exists(target):
-        if not fs.rename(target, old):
-            raise IOError(f"failed to move previous {target_path} aside")
-        had_old = True
-    if not fs.rename(jvm_path(staged), target):
-        raise IOError(f"failed to move staged directory into {target_path}")
-    if had_old:
-        fs.delete(old, True)
-
-
-def _write_centroids_atomic(spark, path: str, centroids: list[list[float]]) -> None:
-    """Stage the centroid table and swap it into place: a crash mid-write
-    must never leave a torn ``{path}/centroids`` directory (readers would
-    fail permanently; a retried streaming bootstrap would see the directory
-    exist and skip re-training — the swap makes existence imply complete).
-    On REBUILD the previous table is renamed aside before the staged one
-    lands (see :func:`_swap_dir_atomic`), so a concurrent reader's window
-    of missing-directory is two renames, not a delete plus a full commit."""
-    tmp = f"{path}/centroids__tmp"
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "centroid int, cvec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(tmp)
-    _swap_dir_atomic(spark, tmp, f"{path}/centroids")
-
-
 def _write_index_meta_atomic(
     spark, path: str, id_type: str, dim: int, next_append_seq: int
 ) -> None:
-    """Persist the index's tiny metadata sidecar ``{path}/index_meta``
-    (single-row parquet: stored id type, vector dim, next append sequence)
-    with the same staged-swap discipline as the centroid table.
+    """Persist the index's metadata sidecar ``{path}/index_meta`` (stored
+    id type, vector dim, next append sequence).
 
     This is what keeps :func:`ivf_append_index` METADATA-CHEAP at 100 TB:
     without it, deriving the id type and the next ``append-N`` tag means a
     full-index schema read plus a distinct over every partition's file
     listing — an object-store metadata storm per append.  With it, an
     append touches the sidecar and its own new partitions, nothing else."""
-    tmp = f"{path}/index_meta__tmp"
-    spark.createDataFrame(
-        [(str(id_type), int(dim), int(next_append_seq))],
-        "id_type string, dim int, next_append_seq int",
-    ).coalesce(1).write.mode("overwrite").parquet(tmp)
-    _swap_dir_atomic(spark, tmp, f"{path}/index_meta")
+    _put_sidecar(spark, path, "index_meta", {
+        "id_type": str(id_type), "dim": int(dim),
+        "next_append_seq": int(next_append_seq),
+    })
 
 
 def _load_index_meta(spark, path: str) -> dict | None:
     """Read the index metadata sidecar, or ``None`` for a pre-sidecar index
     (then the caller falls back to deriving metadata from the index itself
     and self-heals by writing the sidecar)."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path(f"{path}/index_meta")):
-        return None
-    row = spark.read.parquet(f"{path}/index_meta").collect()
-    if len(row) != 1:
-        raise ValueError(f"corrupt IVF metadata sidecar at {path}/index_meta")
-    return row[0].asDict()
+    return _get_sidecar(spark, path, "index_meta")
 
 
 def _append_seq(
@@ -1217,10 +1241,23 @@ def _append_seq(
     return seq, used
 
 
-def _write_fold_fence(spark, path: str, last_fold_batch_id: int) -> None:
-    """Persist the replay fence sidecar ``{path}/fold_fence`` (single-row
-    parquet: the highest ``stream-N`` micro-batch id whose rows were ever
-    TOMBSTONE-FOLDED by a compaction).
+def _recreate_claims(spark, root: str, appends) -> None:
+    """Empty claim files for the preserved ``append-N`` tags of a compacted
+    version ``root``: a stale appender holding a rolled-back sequence then
+    still loses the claim race loudly instead of mixing rows into a
+    preserved tag."""
+    if not appends:
+        return
+    jvm_path, fs = _index_fs(spark, root)
+    fs.mkdirs(jvm_path(f"{root}/append_claims"))
+    for n in appends:
+        fs.createNewFile(jvm_path(f"{root}/append_claims/append-{n}.claim"))
+
+
+def _load_fold_fence(spark, path: str) -> int | None:
+    """The replay fence sidecar ``{path}/fold_fence``: the highest
+    ``stream-N`` micro-batch id whose rows were ever TOMBSTONE-FOLDED by a
+    compaction, or ``None`` when no fold has touched a streamed batch.
 
     A delete is an index operation, not a source rewrite — after a fold
     clears the tombstones, a fresh-checkpoint replay of a pre-delete
@@ -1230,24 +1267,8 @@ def _write_fold_fence(spark, path: str, last_fold_batch_id: int) -> None:
     ``on_fenced_replay``) any micro-batch whose ``batch_id`` is at or
     below this watermark.  Only victim-CONTAINING batches advance the
     fence, so ordinary checkpoint retries of newer batches pass."""
-    tmp = f"{path}/fold_fence__tmp"
-    spark.createDataFrame(
-        [(int(last_fold_batch_id),)], "last_fold_batch_id long"
-    ).coalesce(1).write.mode("overwrite").parquet(tmp)
-    _swap_dir_atomic(spark, tmp, f"{path}/fold_fence")
-
-
-def _load_fold_fence(spark, path: str) -> int | None:
-    """Read the replay fence sidecar, or ``None`` when no tombstone fold
-    has ever touched a streamed batch of this index."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path(f"{path}/fold_fence")):
-        return None
-    row = spark.read.parquet(f"{path}/fold_fence").collect()
-    if len(row) != 1:
-        raise ValueError(f"corrupt fold fence sidecar at {path}/fold_fence")
-    return int(row[0]["last_fold_batch_id"])
+    fence = _get_sidecar(spark, path, "fold_fence")
+    return None if fence is None else int(fence)
 
 
 def _folded_stream_fence(prior: int | None, victim_tags) -> int | None:
@@ -1372,17 +1393,44 @@ def _mean_distortion(base: DataFrame, cents: list[list[float]]) -> float:
     return float(row["s"]) / n if n else 0.0
 
 
-def _write_drift_baseline(spark, path: str, distortion: float, n_rows: int) -> None:
-    """Persist the build-time distortion baseline beside the index (staged
-    swap, same discipline as the centroid table).  A separate sidecar on
-    purpose: appends rewrite ``index_meta`` on every call and must not have
-    to carry (or accidentally drop) the baseline."""
-    tmp = f"{path}/drift_baseline__tmp"
-    spark.createDataFrame(
-        [(float(distortion), int(n_rows))],
-        "base_distortion double, base_rows long",
-    ).coalesce(1).write.mode("overwrite").parquet(tmp)
-    _swap_dir_atomic(spark, tmp, f"{path}/drift_baseline")
+def _live_row_stats(
+    spark, root: str, table: str, n_centroids: int,
+    sample_fraction: float | None, key: str,
+) -> tuple[DataFrame, dict]:
+    """The LIVE rows of ``{root}/{table}`` (what queries see) and the
+    statistics both drift metrics report over them: ``n_rows``,
+    ``n_centroids``, ``partition_skew`` (max/mean rows per centroid) and
+    ``dead_fraction`` (the tombstoned share of the stored rows — its own
+    recompaction trigger).  ``sample_fraction`` keeps a keyed-hash sample
+    (deterministic, partition-order free)."""
+    rows = spark.read.parquet(f"{root}/{table}")
+    if sample_fraction is not None:
+        from vectordb_watermark_spark.functions.hashing import keyed_uniform
+
+        rows = rows.filter(
+            keyed_uniform(key, "s", F.col("id")) < F.lit(float(sample_fraction))
+        )
+    n_with_dead = None
+    tomb = _load_tombstones(spark, root)
+    if tomb is not None:
+        n_with_dead = rows.count()
+        rows = rows.join(tomb, "id", "left_anti")
+    sizes = [
+        r["n"]
+        for r in rows.groupBy("centroid").agg(F.count(F.lit(1)).alias("n")).collect()
+    ]
+    n = int(sum(sizes))
+    mean_rows = n / max(n_centroids, 1)
+    return rows, {
+        "n_rows": n,
+        "n_centroids": n_centroids,
+        "partition_skew": (
+            round(max(sizes) / mean_rows, 6) if sizes and mean_rows > 0 else 0.0
+        ),
+        "dead_fraction": (
+            round((n_with_dead - n) / n_with_dead, 6) if n_with_dead else 0.0
+        ),
+    }
 
 
 def ivf_index_drift(
@@ -1414,48 +1462,19 @@ def ivf_index_drift(
     """
     path = _resolve_index_root(spark, path)
     cents = _load_centroids(spark, path)
-    vecs = spark.read.parquet(f"{path}/vectors")
-    if sample_fraction is not None:
-        from vectordb_watermark_spark.functions.hashing import keyed_uniform
-
-        vecs = vecs.filter(
-            keyed_uniform(key, "s", F.col("id")) < F.lit(float(sample_fraction))
-        )
-    # the metric describes the LIVE index (what queries see): tombstoned
-    # rows are excluded from distortion/skew; their share is its own
-    # recompaction trigger (dead_fraction)
-    n_with_dead = None
-    tomb = _load_tombstones(spark, path)
-    if tomb is not None:
-        n_with_dead = vecs.count()
-        vecs = vecs.join(tomb, "id", "left_anti")
-    sizes = {
-        r["centroid"]: r["n"]
-        for r in vecs.groupBy("centroid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n = int(sum(sizes.values()))
+    vecs, stats = _live_row_stats(
+        spark, path, "vectors", len(cents), sample_fraction, key
+    )
     distortion = _mean_distortion(vecs, cents)
-    base = None
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path(f"{path}/drift_baseline")):
-        r = spark.read.parquet(f"{path}/drift_baseline").first()
-        base = float(r["base_distortion"])
-    mean_rows = n / max(len(cents), 1)
+    base = (_get_sidecar(spark, path, "drift_baseline") or {}).get(
+        "base_distortion"
+    )
     return {
-        "n_rows": n,
-        "n_centroids": len(cents),
+        **stats,
         "distortion": round(distortion, 9),
         "base_distortion": base,
         "drift_ratio": (
             round(distortion / base, 6) if base is not None and base > 0 else None
-        ),
-        "partition_skew": (
-            round(max(sizes.values()) / mean_rows, 6) if sizes and mean_rows > 0 else 0.0
-        ),
-        "dead_fraction": (
-            round((n_with_dead - n) / n_with_dead, 6)
-            if n_with_dead else 0.0
         ),
     }
 
@@ -1532,7 +1551,6 @@ def ivf_compact_index(
     # loser cannot delete/overwrite a winner's pieces (ADVICE r10 #1);
     # crashed attempts' staging dirs are GC'd once their seq is stale
     vdir = _stage_index_version(spark, path, next_seq)
-    jvm_path, fs = _index_fs(spark, path)
 
     old_cents = _load_centroids(spark, cur_root)
     if n_centroids is None:
@@ -1576,15 +1594,14 @@ def ivf_compact_index(
             "overwrite"
         ).partitionBy("centroid", "batch").parquet(f"{vdir}/vectors")
         distortion = _mean_distortion(base, centroids)
-        _write_centroids_atomic(spark, vdir, centroids)
+        _put_sidecar(spark, vdir, "centroids", centroids)
         _write_index_meta_atomic(spark, vdir, id_type, len(centroids[0]), seq_keep)
-        _write_drift_baseline(spark, vdir, distortion, n_rows)
-        if appends:
-            fs.mkdirs(jvm_path(f"{vdir}/append_claims"))
-            for n in appends:
-                fs.createNewFile(jvm_path(f"{vdir}/append_claims/append-{n}.claim"))
+        _put_sidecar(spark, vdir, "drift_baseline", {
+            "base_distortion": distortion, "base_rows": n_rows,
+        })
+        _recreate_claims(spark, vdir, appends)
         if fence is not None:
-            _write_fold_fence(spark, vdir, fence)
+            _put_sidecar(spark, vdir, "fold_fence", fence)
         # every piece is staged — atomic rename onto _v{N}, THE commit,
         # then GC (skipped entirely under gc_keep_last=None)
         _publish_index_version(spark, path, next_seq, vdir)

@@ -34,7 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vectordb_watermark_spark.operators.similarity import _index_fs
+from vectordb_watermark_spark.operators.similarity import (
+    _get_sidecar,
+    _index_fs,
+    _put_sidecar,
+)
 
 # ---------------------------------------------------------------------------
 # Per-batch store — the one idiom every sink below writes through.  Each
@@ -84,19 +88,15 @@ def _read_batches(
     return spark.read.parquet(*dirs) if dirs else None
 
 
-def _pin_config(spark, path: str, pin: dict, schema: str, mismatch) -> None:
-    """Config-drift guard: the first ingest stores ``pin`` (one row of
-    ``schema``) at ``path``; every later ingest offering other values
-    raises ``ValueError(mismatch(stored_row))`` — mixed parameters would
-    silently corrupt the store."""
-    jp, fs = _index_fs(spark, path)
-    if not fs.exists(jp(path)):
-        spark.createDataFrame([tuple(pin.values())], schema).coalesce(
-            1
-        ).write.mode("overwrite").parquet(path)
-        return
-    stored = spark.read.parquet(path).collect()[0]
-    if tuple(stored[k] for k in pin) != tuple(pin.values()):
+def _pin_config(spark, root: str, name: str, pin: dict, mismatch) -> None:
+    """Config-drift guard: the first ingest stores ``pin`` as the sidecar
+    ``{root}/{name}``; every later ingest offering other values raises
+    ``ValueError(mismatch(stored))`` — mixed parameters would silently
+    corrupt the store."""
+    stored = _get_sidecar(spark, root, name)
+    if stored is None:
+        _put_sidecar(spark, root, name, pin)
+    elif tuple(stored[k] for k in pin) != tuple(pin.values()):
         raise ValueError(mismatch(stored))
 
 
@@ -177,7 +177,7 @@ def _check_replay_fence(
     spark, root: str, batch_id: int, on_fenced_replay: str, sink: str
 ) -> None:
     """Refuse (or loudly warn on) a micro-batch at or below the index's
-    tombstone-fold fence (``similarity._write_fold_fence``): those
+    tombstone-fold fence (``similarity._load_fold_fence``): those
     batches' rows were deleted and then FOLDED — the tombstones that
     would mask a re-insert are gone, so replaying them from a fresh
     checkpoint silently resurrects deleted rows.  ``error`` (default)
@@ -291,8 +291,6 @@ def incremental_index(
         _load_centroids,
         _mean_distortion,
         _resolve_index_root,
-        _write_centroids_atomic,
-        _write_drift_baseline,
         _write_index_meta_atomic,
         ivf_compact_index,
         ivf_index_drift,
@@ -329,17 +327,17 @@ def incremental_index(
         base = _ivf_base(batch_df, id_col, vec_col)
         try:
             if fs.exists(jvm_path(cpath)):
-                # shared loader validates contiguity: a torn centroid table
-                # fails the micro-batch (retryable) instead of silently
-                # misassigning every subsequent batch by list position
+                # shared loader validates the table: an empty, ragged or
+                # older-layout centroid table fails the micro-batch instead
+                # of silently misassigning every subsequent batch
                 cents = _load_centroids(spark, root)
                 _check_batch_dim(base, len(cents[0]), "incremental_index")
             else:
                 cents = _ivf_train(base, n_centroids, n_iters, key)
                 # staged write + rename: a crash mid-bootstrap must not
-                # leave a torn centroids dir that every retry then fails
+                # leave a torn centroid table that every retry then fails
                 # to load (existence implies complete)
-                _write_centroids_atomic(spark, root, cents)
+                _put_sidecar(spark, root, "centroids", cents)
                 # metadata sidecar: lets ivf_append_index stay
                 # metadata-cheap on a stream-bootstrapped index too.  A
                 # re-bootstrap OVER existing vectors (deleted centroid
@@ -357,9 +355,10 @@ def incremental_index(
                 # build-time distortion baseline over the bootstrap batch —
                 # without it ivf_index_drift has no denominator and the
                 # drift-triggered compaction below can never fire
-                _write_drift_baseline(
-                    spark, root, _mean_distortion(base, cents), base.count()
-                )
+                _put_sidecar(spark, root, "drift_baseline", {
+                    "base_distortion": _mean_distortion(base, cents),
+                    "base_rows": base.count(),
+                })
             (
                 _ivf_assign_pass(base, cents)
                 .withColumn("batch", F.lit(f"stream-{int(batch_id)}"))
@@ -461,9 +460,6 @@ def incremental_pq_index(
         _residual_encode_pass,
         _residual_pass,
         _write_pq_drift_baseline,
-        _write_rotation_atomic,
-        _code_histogram,
-        _decoded_residual_energy,
         ivf_pq_compact_index,
         ivf_pq_index_drift,
         pq_train,
@@ -477,7 +473,6 @@ def incremental_pq_index(
         _load_tombstones,
         _resolve_index_root,
         _swap_dir_atomic,
-        _write_centroids_atomic,
         _write_index_meta_atomic,
     )
 
@@ -585,19 +580,11 @@ def incremental_pq_index(
                     _residual_pass(assigned0, cents),
                     m, n_codes, pq_iters, key, id_col="id", vec_col="r",
                 )
-                _write_centroids_atomic(spark, root, cents)
+                _put_sidecar(spark, root, "centroids", cents)
                 if R is not None:
-                    _write_rotation_atomic(spark, root, R)
-                rows = [
-                    (s, c, [float(x) for x in books[s, c]])
-                    for s in range(books.shape[0])
-                    for c in range(books.shape[1])
-                ]
-                staged = f"{root}/pq_codebooks__staged"
-                spark.createDataFrame(
-                    rows, "sub int, code int, vec array<double>"
-                ).coalesce(1).write.mode("overwrite").parquet(staged)
-                _swap_dir_atomic(spark, staged, f"{root}/pq_codebooks")
+                    _put_sidecar(spark, root, "rotation", R.tolist())
+                # codebooks last: their existence marks a complete bootstrap
+                _put_sidecar(spark, root, "pq_codebooks", books.tolist())
                 # sidecar: id type + dim + append sequence (a re-bootstrap
                 # over existing codes must not roll the sequence back —
                 # same self-heal as incremental_index)
@@ -616,15 +603,10 @@ def incremental_pq_index(
                 .partitionBy("centroid", "batch")
                 .parquet(f"{root}/codes")
             )
-            if not fs.exists(jvm_path(f"{root}/pq_drift_baseline")):
+            if not fs.exists(jvm_path(f"{root}/drift_baseline")):
                 # baseline over the bootstrap codes — without it the drift
                 # metric has no denominator and the trigger can never fire
-                written = spark.read.parquet(f"{root}/codes")
-                _write_pq_drift_baseline(
-                    spark, root,
-                    _decoded_residual_energy(written, books),
-                    written.count(), _code_histogram(written),
-                )
+                _write_pq_drift_baseline(spark, root, books)
         finally:
             base.unpersist()
 
@@ -1152,17 +1134,10 @@ def psi_baseline(
         bin_edges = [-0.4, -0.3, -0.2, -0.1, 0.0, 0.1, 0.2, 0.3, 0.4]
     edges = sorted(float(e) for e in bin_edges)
     spark = df.sparkSession
-    spark.createDataFrame(
-        [(i, e) for i, e in enumerate(edges)], "pos int, edge double"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{store_path}/edges")
+    _put_sidecar(spark, store_path, "edges", edges)
     _psi_bin_tally(df, vec_col, edges, "nb").write.mode("overwrite").parquet(
         f"{store_path}/baseline"
     )
-
-
-def _psi_edges(spark, store_path: str) -> list[float]:
-    rows = spark.read.parquet(f"{store_path}/edges").collect()
-    return [r["edge"] for r in sorted(rows, key=lambda r: r["pos"])]
 
 
 def ingest_psi_batch(
@@ -1180,7 +1155,7 @@ def ingest_psi_batch(
     if not batch_df.take(1):
         return
     spark = batch_df.sparkSession
-    edges = _psi_edges(spark, store_path)
+    edges = _get_sidecar(spark, store_path, "edges")
     _psi_bin_tally(batch_df, vec_col, edges, "nc").write.mode(
         "overwrite"
     ).parquet(f"{store_path}/tallies/batch=stream-{int(batch_id)}")
@@ -1227,7 +1202,7 @@ def resolve_psi(spark, store_path: str) -> DataFrame:
         .agg(F.sum("nc").cast("long").alias("nc"))
     )
     nb = spark.read.parquet(f"{store_path}/baseline")
-    n_bins = len(_psi_edges(spark, store_path)) + 1
+    n_bins = len(_get_sidecar(spark, store_path, "edges")) + 1
     return _psi_from_grids(nb, nc, n_bins)
 
 
@@ -1372,8 +1347,8 @@ def ingest_rate_batch(
     if not batch_df.take(1):
         return
     _pin_config(
-        batch_df.sparkSession, f"{store_path}/granularity",
-        {"granularity": granularity}, "granularity string",
+        batch_df.sparkSession, store_path, "granularity",
+        {"granularity": granularity},
         lambda stored: (
             f"incremental_rates: store at {store_path!r} was built with "
             f"granularity {stored['granularity']!r}, batch offered "
@@ -1481,9 +1456,7 @@ def ingest_shingles_batch(
 
     spark = batch_df.sparkSession
     _pin_config(
-        spark, f"{store_path}/pin",
-        {"shingle_k": shingle_k, "max_df": max_df},
-        "shingle_k int, max_df int",
+        spark, store_path, "pin", {"shingle_k": shingle_k, "max_df": max_df},
         lambda pin: (
             f"incremental shingle store at {store_path!r} was built "
             f"with (shingle_k={pin['shingle_k']}, max_df={pin['max_df']}),"
@@ -1579,7 +1552,7 @@ def resolve_containment_store(
             ),
             id_col=id_col, text_col=text_col, threshold=threshold,
         )
-    pin = spark.read.parquet(f"{store_path}/pin").collect()[0]
+    pin = _get_sidecar(spark, store_path, "pin")
     # (id, g) distinct across batch directories: a doc ingested in more
     # than one micro-batch lands its rows in each batch dir, and raw-row
     # DF would double-count it — the one-shot twin dedups (id, g)
