@@ -2789,8 +2789,8 @@ def test_ivf_lifecycle_model_fuzz(spark, tmp_path, seed):
 
 def test_index_info_describe(spark, tmp_path):
     """index_info: operational DESCRIBE for both persisted index kinds —
-    version/layout/geometry/sequence/tag-counts/tombstones without the
-    caller touching the directory layout."""
+    version/geometry/sequence/tag-counts/tombstones without the caller
+    touching the directory layout."""
     from vectordb_watermark_spark.operators import pq as P
     from vectordb_watermark_spark.operators import similarity as S
 
@@ -2801,7 +2801,7 @@ def test_index_info_describe(spark, tmp_path):
     S.ivf_delete_ids(spark, idx, [0, 1, 2])
 
     info = S.index_info(spark, idx)
-    assert info["kind"] == "ivf" and info["layout"] == "tagged"
+    assert info["kind"] == "ivf"
     assert info["version"] is None and info["resolved_root"] == idx
     assert info["n_centroids"] == 4 and info["dim"] == 8
     assert info["next_append_seq"] == 2
@@ -2814,13 +2814,13 @@ def test_index_info_describe(spark, tmp_path):
     assert info2["version"] == 1 and info2["resolved_root"].endswith("_v00001")
     assert info2["n_rows_live"] == 47 and info2["n_tombstones"] == 0
 
-    # the PQ kind, flat layout
+    # the PQ kind, same tagged layout
     pqi = str(tmp_path / "pq_info")
     rows = blob([1.0] + [0.0] * 7, 40, 0)
     P.ivf_pq_write_index(rows, pqi, n_centroids=4, m=4, n_codes=8)
     pinfo = S.index_info(spark, pqi)
-    assert pinfo["kind"] == "ivf_pq" and pinfo["layout"] == "flat"
-    assert pinfo["batch_tags"] == {None: 40}
+    assert pinfo["kind"] == "ivf_pq" and pinfo["next_append_seq"] == 1
+    assert pinfo["batch_tags"] == {"full": 40}
     assert pinfo["n_rows_live"] == 40 and pinfo["has_drift_baseline"]
 
 

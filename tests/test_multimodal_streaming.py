@@ -1686,11 +1686,10 @@ def test_incremental_pq_index_drift_triggered_recompaction(spark, tmp_path):
 
 
 def test_ivf_pq_append_index_tagged_layout_claims(spark, tmp_path):
-    """Tag-aware PQ appends (round 11): onto a TAGGED (streaming-style)
-    codes layout, ivf_pq_append_index lands under a fresh append-N tag
-    with the claim-before-write protocol — full parity with
-    similarity.ivf_append_index; the flat batch-built layout keeps its
-    original no-tag append behavior."""
+    """Tag-aware PQ appends (round 11): after a batch_col compaction,
+    ivf_pq_append_index lands under a fresh append-N tag with the
+    claim-before-write protocol — full parity with
+    similarity.ivf_append_index."""
     import os
 
     import numpy as np
@@ -1714,7 +1713,7 @@ def test_ivf_pq_append_index_tagged_layout_claims(spark, tmp_path):
         ]
         return spark.createDataFrame(rows, "id long, emb array<float>")
 
-    # tagged index: build flat, then compact WITH batch_col to migrate
+    # build, then compact WITH batch_col (tags preserved)
     idx = str(tmp_path / "pq_tagged")
     a = blob([1.0] + [0.0] * 7, 60, 0)
     P.ivf_pq_write_index(a, idx, n_centroids=4, m=4, n_codes=8)

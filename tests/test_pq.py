@@ -680,11 +680,10 @@ def test_pq_stream_encode_path_is_shuffle_free(spark, vectors, tmp_path):
 
 def test_ivf_pq_lifecycle_model_fuzz(spark, tmp_path):
     """Model-based fuzz of the IVF-PQ lifecycle: random interleavings of
-    append (layout auto-detect), delete, flat compact, tagged compact,
-    and rebuild, checked against a python model of the live id set after
-    every op through the real ADC probe-all query path and the drift
-    metric.  Exercises the tagged<->flat layout transitions the
-    composable writers allow."""
+    append, delete, compact (every row re-tagged ``full``), tagged compact
+    (``batch_col``), and rebuild, checked against a python model of the
+    live id set after every op through the real ADC probe-all query path
+    and the drift metric."""
     import numpy as np
 
     from vectordb_watermark_spark.operators import similarity as S
@@ -764,3 +763,220 @@ def test_ivf_pq_lifecycle_model_fuzz(spark, tmp_path):
             live = {r[0] for r in rows}
             dead = set()
         check()
+
+
+# ---- one lifecycle for both index kinds ------------------------------------
+
+
+def _one_micro_batch(spark, tmp_path, rows, start):
+    """Run ``start(stream)`` (a sink's DataStreamWriter) over ``rows`` as
+    ONE availableNow micro-batch; returns the finished query's
+    ``awaitTermination`` (raises what the micro-batch raised)."""
+    import shutil
+    import uuid
+
+    run = tmp_path / f"mb_{uuid.uuid4().hex[:8]}"
+    src = run / "src"
+    src.mkdir(parents=True)
+    spark.createDataFrame(rows, "id long, emb array<float>").coalesce(1).write.parquet(
+        str(run / "stage")
+    )
+    shutil.copy(next((run / "stage").glob("part-*.parquet")), src / "b.parquet")
+    stream = spark.readStream.schema("id long, emb array<float>").parquet(str(src))
+    q = start(stream, str(run / "ck")).trigger(availableNow=True).start()
+    return q.awaitTermination(120)
+
+
+def _rows(seed, ids, dim=8):
+    rng = np.random.default_rng(seed)
+    return [(i, [float(round(x, 4)) for x in rng.standard_normal(dim)]) for i in ids]
+
+
+def test_ivf_pq_stream_into_built_index_keeps_one_layout(spark, tmp_path):
+    """A streaming micro-batch into a batch-built IVF-PQ index lands
+    beside the built codes in the SAME centroid=X/batch=Y layout: the
+    index stays readable (every id answers a probe-all query) and
+    appendable.  Two codes layouts in one directory made every later
+    read fail with CONFLICTING_PARTITION_COLUMN_NAMES."""
+    from vectordb_watermark_spark.streaming.curation import incremental_pq_index
+
+    idx = str(tmp_path / "pq_mixed")
+    rows = _rows(5, range(80))
+    P.ivf_pq_write_index(
+        spark.createDataFrame(rows[:60], "id long, emb array<float>"), idx,
+        n_centroids=4, m=4, n_codes=8,
+    )
+    _one_micro_batch(
+        spark, tmp_path, rows[60:],
+        lambda s, ck: incremental_pq_index(
+            s, idx, str(tmp_path / "pq_mixed_arc"), ck,
+            n_centroids=4, m=4, n_codes=8,
+        ),
+    )
+    got = {
+        r["id"]
+        for r in P.ivf_pq_query_index(spark, idx, rows[0][1], k=100, n_probe=4).collect()
+    }
+    assert got == set(range(80))
+    more = spark.createDataFrame(_rows(6, range(80, 85)), "id long, emb array<float>")
+    assert P.ivf_pq_append_index(more, idx) == 5
+
+
+def test_ivf_pq_append_submits_as_many_jobs_as_ivf_append(spark, tmp_path):
+    """The IVF-PQ append reads the id type from index_meta like the raw
+    IVF append — no schema-inference job over the codes — so both submit
+    the same number of Spark jobs on the same input."""
+    from tests.test_dedup_text_similarity import _jobs_submitted
+    from vectordb_watermark_spark.operators import similarity as S
+
+    rows = _rows(7, range(60))
+    built = spark.createDataFrame(rows[:40], "id long, emb array<float>")
+    S.ivf_write_index(built, str(tmp_path / "ivf"), n_centroids=4)
+    P.ivf_pq_write_index(built, str(tmp_path / "pq"), n_centroids=4, m=4, n_codes=8)
+
+    def append(fn, name):
+        df = spark.createDataFrame(rows[40:], "id long, emb array<float>")
+        n, jobs = _jobs_submitted(spark, lambda: fn(df, str(tmp_path / name)))
+        assert n == 20
+        return len(jobs)
+
+    assert append(P.ivf_pq_append_index, "pq") == append(S.ivf_append_index, "ivf")
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivf_pq"])
+def test_index_lifecycle_parity_across_kinds(spark, tmp_path, kind):
+    """Raw IVF and IVF-PQ run one lifecycle: after every step of write,
+    append, delete, compact, append, one stream micro-batch, rebuild at
+    the same path and append, both kinds hold the same batch tags,
+    next_append_seq, append claim files and replay fence."""
+    import glob
+    import os
+
+    from vectordb_watermark_spark.operators import similarity as S
+    from vectordb_watermark_spark.streaming import curation as C
+
+    vecs = dict(_rows(9, range(90)))
+    idx = str(tmp_path / kind)
+    pq = kind == "ivf_pq"
+
+    def frame(ids):
+        return spark.createDataFrame(
+            [(i, vecs[i]) for i in ids], "id long, emb array<float>"
+        )
+
+    # one training iteration each: the bookkeeping, not the fit, is tested
+    def write(ids):
+        if pq:
+            P.ivf_pq_write_index(
+                frame(ids), idx, n_centroids=4, m=4, n_codes=8,
+                coarse_iters=1, pq_iters=1,
+            )
+        else:
+            S.ivf_write_index(frame(ids), idx, n_centroids=4, n_iters=1)
+
+    def compact():
+        if not pq:
+            return S.ivf_compact_index(spark, idx, n_iters=1)
+        # codes are lossy: the source is the raw vectors, tagged as stored
+        root = S._resolve_index_root(spark, idx)
+        tags = spark.read.parquet(f"{root}/codes").select("id", "batch")
+        P.ivf_pq_compact_index(
+            tags.join(frame(vecs), "id"), idx, batch_col="batch",
+            coarse_iters=1, pq_iters=1,
+        )
+
+    def stream(ids):
+        def start(s, ck):
+            if pq:
+                return C.incremental_pq_index(
+                    s, idx, str(tmp_path / "arc"), ck, n_centroids=4, m=4, n_codes=8
+                )
+            return C.incremental_index(s, idx, ck, n_centroids=4)
+
+        _one_micro_batch(spark, tmp_path, [(i, vecs[i]) for i in ids], start)
+
+    append = P.ivf_pq_append_index if pq else S.ivf_append_index
+
+    def state():
+        root = S._resolve_index_root(spark, idx)
+        tags = {
+            os.path.basename(d).split("=", 1)[1]
+            for d in glob.glob(f"{root}/{'codes' if pq else 'vectors'}/centroid=*/batch=*")
+        }
+        claims = sorted(
+            os.path.basename(c) for c in glob.glob(f"{root}/append_claims/*.claim")
+        )
+        return (
+            tags, S._load_index_meta(spark, root)["next_append_seq"], claims,
+            S._load_fold_fence(spark, root),
+        )
+
+    a1, a2 = ["append-1.claim"], ["append-1.claim", "append-2.claim"]
+    steps = [
+        (lambda: write(range(30)), ({"full"}, 1, [], None)),
+        (lambda: append(frame(range(30, 38)), idx), ({"full", "append-1"}, 2, a1, None)),
+        (lambda: S.ivf_delete_ids(spark, idx, [0, 30]), ({"full", "append-1"}, 2, a1, None)),
+        (compact, ({"full", "append-1"}, 2, a1, None)),
+        (lambda: append(frame(range(38, 46)), idx),
+         ({"full", "append-1", "append-2"}, 3, a2, None)),
+        (lambda: stream(range(46, 54)),
+         ({"full", "append-1", "append-2", "stream-0"}, 3, a2, None)),
+        (lambda: write(range(54, 78)), ({"full"}, 1, [], None)),
+        (lambda: append(frame(range(78, 86)), idx), ({"full", "append-1"}, 2, a1, None)),
+    ]
+    for i, (step, want) in enumerate(steps):
+        step()
+        assert state() == want, f"step {i}"
+
+
+def test_ivf_pq_index_without_index_meta_refuses_writes(spark, tmp_path):
+    """An IVF-PQ index in the layout written before the kinds shared one
+    lifecycle — flat codes/centroid=X/ files and no index_meta sidecar —
+    refuses appends and stream micro-batches loudly (the missing sidecar,
+    not a layout probe) and leaves its codes untouched; queries still
+    answer, and one compaction migrates it."""
+    import glob
+    import os
+    import shutil
+
+    from vectordb_watermark_spark.streaming.curation import incremental_pq_index
+
+    idx = str(tmp_path / "pq_legacy")
+    rows = _rows(13, range(50))
+    df = spark.createDataFrame(rows, "id long, emb array<float>")
+    P.ivf_pq_write_index(df, idx, n_centroids=4, m=4, n_codes=8)
+    # rewrite into the legacy layout
+    codes = spark.read.parquet(f"{idx}/codes").drop("batch")
+    codes.write.partitionBy("centroid").parquet(f"{idx}/flat")
+    shutil.rmtree(f"{idx}/codes")
+    os.rename(f"{idx}/flat", f"{idx}/codes")
+    os.remove(f"{idx}/index_meta")
+
+    def snapshot():
+        files = sorted(
+            os.path.relpath(f, idx) for f in glob.glob(f"{idx}/codes/**", recursive=True)
+        )
+        got = {
+            (r["id"], tuple(r["codes"]))
+            for r in spark.read.parquet(f"{idx}/codes").collect()
+        }
+        return files, got
+
+    before = snapshot()
+    more = spark.createDataFrame(_rows(14, range(50, 60)), "id long, emb array<float>")
+    with pytest.raises(FileNotFoundError, match="index_meta"):
+        P.ivf_pq_append_index(more, idx)
+    with pytest.raises(Exception, match="index_meta"):
+        _one_micro_batch(
+            spark, tmp_path, _rows(15, range(60, 70)),
+            lambda s, ck: incremental_pq_index(
+                s, idx, str(tmp_path / "pq_legacy_arc"), ck,
+                n_centroids=4, m=4, n_codes=8,
+            ),
+        )
+    assert snapshot() == before
+    got = {r["id"] for r in P.ivf_pq_query_index(spark, idx, rows[0][1], k=60, n_probe=4).collect()}
+    assert got == set(range(50))
+
+    P.ivf_pq_compact_index(df, idx)
+    assert P.ivf_pq_append_index(more, idx) == 10

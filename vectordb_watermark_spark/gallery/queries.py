@@ -2210,7 +2210,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def pq_tagged_contract(spark, sf):  # tagged PQ maintenance (round 11)
         # pins the tag-preserving IVF-PQ lifecycle: a batch_col compaction
-        # migrates the codes to the tagged centroid/batch layout, a
+        # keeps the tagged centroid/batch layout, a
         # tag-aware append lands under a claimed append-N tag, and a
         # second tagged compaction PRESERVES the tags, re-creates the
         # claim files, carries next_append_seq forward, and re-records
@@ -2239,7 +2239,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         n_half = half.count()
         try:
             ivf_pq_write_index(half, path, n_centroids=8, m=8, n_codes=16)
-            # migrate to the tagged layout (tags ride the encode kernel)
+            # tags ride the encode kernel
             ivf_pq_compact_index(
                 half.withColumn("batch", F.lit("full")), path, batch_col="batch"
             )

@@ -329,32 +329,44 @@ def pq_topk_cosine(
     corpus is still scored compressed).  Recall then approaches exact
     search while the heavy scan stays on the 8-byte codes.
     """
-    from vectordb_watermark_spark.operators.similarity import topk_cosine
-
     if codebooks is None:
         codebooks = pq_train(df, m, n_codes, n_iters, key, id_col, vec_col)
     if codes is None:
         codes = pq_encode(df, codebooks, id_col, vec_col)
-    scored = pq_adc_scores(codes, query_vec, codebooks, "id")
+    return _adc_topk(
+        pq_adc_scores(codes, query_vec, codebooks, "id"), query_vec, k,
+        rerank_with, shortlist, id_col, vec_col,
+    )
 
+
+def _adc_topk(
+    scored: DataFrame,
+    query_vec,
+    k: int,
+    rerank_with: DataFrame | None,
+    shortlist: int | None,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """``(id, cos, rank)`` from ``(id, cos_approx)`` ADC scores: the top
+    ``k``, or — with ``rerank_with`` — an ADC shortlist of ``shortlist``
+    (default ``4*k``) re-ranked by exact cosine against those raw
+    vectors (one bounded semi-join)."""
+    from pyspark.sql import Window
+
+    from vectordb_watermark_spark.operators.similarity import topk_cosine
+
+    order = [F.col("cos_approx").desc(), F.col("id").asc()]
     if rerank_with is not None:
-        n_short = shortlist or 4 * k
-        short = scored.orderBy(
-            F.col("cos_approx").desc(), F.col("id").asc()
-        ).limit(n_short)
+        short = scored.orderBy(*order).limit(shortlist or 4 * k)
         sub = _pq_base(rerank_with, id_col, vec_col).join(
             short.select("id"), "id", "semi"
         )
         return topk_cosine(sub, query_vec, k, "id", "v")
-
-    from pyspark.sql import Window
-
-    top = scored.orderBy(F.col("cos_approx").desc(), F.col("id").asc()).limit(k)
-    w = Window.orderBy(F.col("cos_approx").desc(), F.col("id").asc())
-    return top.select(
+    return scored.orderBy(*order).limit(k).select(
         "id",
         F.col("cos_approx").alias("cos"),
-        F.row_number().over(w).cast("int").alias("rank"),
+        F.row_number().over(Window.orderBy(*order)).cast("int").alias("rank"),
     )
 
 
@@ -492,6 +504,78 @@ def _residual_pass(assigned: DataFrame, cents: list[list[float]]) -> DataFrame:
     return assigned.mapInArrow(kernel, schema=f"id {id_type}, r array<float>")
 
 
+class _PqRows:
+    """The IVF-PQ payload of the shared index lifecycle
+    (``similarity._RawRows`` documents the interface): rows hold the
+    residual PQ codes, an optional OPQ rotation pre-transforms the
+    vectors, residual codebooks are trained after the coarse centroids,
+    and the drift baseline is the decoded residual energy and code
+    histogram of the written codes."""
+
+    table = "codes"
+    marker = "pq_codebooks"
+
+    def __init__(
+        self, m=None, n_codes=None, iters=3, key="ivfpq", opq=False,
+        opq_iters=0, opq_sample_fraction=None,
+    ):
+        self.m, self.n_codes, self.iters, self.key = m, n_codes, iters, key
+        self.opq, self.opq_iters = opq, opq_iters
+        self.opq_sample_fraction = opq_sample_fraction
+        self.books = self.R = None
+
+    # cast to array<float> FIRST: append-time and build-time encoding must
+    # see bit-identical inputs, or a float64 source column could flip
+    # argmin ties and diverge appended codes from a rebuild's (ADVICE r8)
+    rows = staticmethod(_pq_base)
+
+    def prepare(self, spark, base: DataFrame, root: str | None) -> DataFrame:
+        """Load the codebooks stored at ``root`` (an unset ``m`` /
+        ``n_codes`` keeps their geometry) and rotate into the index's OPQ
+        space: the rotation stored at ``root`` (compaction never silently
+        changes the space queries are answered in), else a new one
+        trained on ``base`` when ``opq``."""
+        from vectordb_watermark_spark.operators import opq as O
+
+        if root is not None:
+            self.books = _load_codebooks(spark, root)
+            self.m = self.m or self.books.shape[0]
+            self.n_codes = self.n_codes or self.books.shape[1]
+        self.R = None if root is None else _load_rotation(spark, root)
+        if self.R is None and self.opq:
+            self.R = O.opq_train_rotation(base, self.m, vec_col="v")
+            if self.opq_iters > 0:
+                self.R = O.opq_refine_rotation(
+                    base, self.m, R0=self.R, n_codes=self.n_codes,
+                    n_iter=self.opq_iters, kmeans_iters=self.iters,
+                    key=self.key, id_col="id", vec_col="v",
+                    sample_fraction=self.opq_sample_fraction,
+                )
+        return base if self.R is None else O.rotate_vectors(base, self.R, vec_col="v")
+
+    def train(self, assigned: DataFrame, cents) -> DataFrame:
+        assigned = assigned.persist()
+        self.books = pq_train(
+            _residual_pass(assigned.select("id", "v", "centroid"), cents),
+            self.m, self.n_codes, self.iters, self.key, id_col="id", vec_col="r",
+        )
+        return assigned
+
+    def encode(self, assigned: DataFrame, cents, extra=()) -> DataFrame:
+        return _residual_encode_pass(assigned, cents, self.books, extra=extra)
+
+    def put_sidecars(self, spark, root: str) -> None:
+        from vectordb_watermark_spark.operators.similarity import _put_sidecar
+
+        if self.R is not None:
+            _put_sidecar(spark, root, "rotation", self.R.tolist())
+        # codebooks last: their existence marks a complete stream bootstrap
+        _put_sidecar(spark, root, "pq_codebooks", self.books.tolist())
+
+    def put_baseline(self, spark, root: str, base: DataFrame, cents) -> None:
+        _write_pq_drift_baseline(spark, root, self.books)
+
+
 def ivf_pq_write_index(
     df: DataFrame,
     path: str,
@@ -529,17 +613,22 @@ def ivf_pq_write_index(
     corpora).  The default ``0`` keeps the deterministic one-pass
     parametric build.
 
-    Layout::
+    Layout (the raw IVF index's, with ``codes`` for ``vectors``)::
 
-        {path}/codes/centroid=X/          (id, codes array<int>) parquet
+        {path}/codes/centroid=X/batch=Y/  (id, codes array<int>) parquet
         {path}/centroids                  coarse centroids (JSON sidecar)
+        {path}/index_meta                 id type, dim, next append seq (sidecar)
         {path}/pq_codebooks               (m, n_codes, dsub) codebooks (sidecar)
         {path}/rotation                   optional OPQ rotation (sidecar)
         {path}/drift_baseline             energy, rows, code histogram (sidecar)
 
+    A build tags its rows ``batch=full``; :func:`ivf_pq_append_index`
+    writes ``append-N`` and the streaming sink ``stream-N`` beside them.
     Sidecars are driver-held: written and read through the FileSystem
     with no Spark job (``similarity._put_sidecar``), each placed by a
-    staged swap.
+    staged swap.  Like ``similarity.ivf_write_index``, a fresh path gets
+    its pieces in place, a versioned one a new committed version, and a
+    rebuild restarts the append sequence at 1.
 
     The row payload stored is ``m`` ints per vector — the original vectors
     are NOT in the index; query-time exact re-rank (optional) joins the ADC
@@ -547,73 +636,14 @@ def ivf_pq_write_index(
     Build cost: one source scan persisted, then coarse train + residual PQ
     train + one encode pass over the cache.
     """
-    from vectordb_watermark_spark.operators.similarity import (
-        _current_index_version,
-        _gc_index_versions,
-        _ivf_assign_pass,
-        _ivf_train,
-        _publish_index_version,
-        _put_sidecar,
-        _stage_index_version,
+    from vectordb_watermark_spark.operators.similarity import _build_index
+
+    payload = _PqRows(m, n_codes, pq_iters, key, opq, opq_iters, opq_sample_fraction)
+    cents = _build_index(
+        df.sparkSession, path, payload, _pq_base(df, id_col, vec_col),
+        n_centroids, coarse_iters, key, compact=False,
     )
-
-    spark = df.sparkSession
-    # rebuild of a versioned (post-compaction) index: flat pieces under
-    # {path} would be invisible behind the commit log — write a new
-    # version and commit it instead (fresh paths keep the flat layout);
-    # pieces build in a PRIVATE staging dir so racing attempts never
-    # touch each other's files (published by atomic rename + commit)
-    cur_seq = _current_index_version(spark, path)
-    next_seq = None
-    if cur_seq is not None:
-        next_seq = cur_seq + 1
-        root = _stage_index_version(spark, path, next_seq)
-    else:
-        root = path
-    base = _pq_base(df, id_col, vec_col)
-    R = None
-    if opq:
-        from vectordb_watermark_spark.operators.opq import (
-            opq_refine_rotation,
-            opq_train_rotation,
-            rotate_vectors,
-        )
-
-        R = opq_train_rotation(base, m, vec_col="v")
-        if opq_iters > 0:
-            R = opq_refine_rotation(
-                base, m, R0=R, n_codes=n_codes, n_iter=opq_iters,
-                kmeans_iters=pq_iters, key=key, id_col="id", vec_col="v",
-                sample_fraction=opq_sample_fraction,
-            )
-        base = rotate_vectors(base, R, vec_col="v")
-    base = base.persist()
-    try:
-        cents = _ivf_train(base, n_centroids, coarse_iters, key)
-        assigned = _ivf_assign_pass(base, cents).persist()
-        try:
-            res = _residual_pass(assigned, cents)
-            books = pq_train(
-                res, m, n_codes, pq_iters, key, id_col="id", vec_col="r"
-            )
-            _residual_encode_pass(assigned, cents, books).write.mode(
-                "overwrite"
-            ).partitionBy("centroid").parquet(f"{root}/codes")
-        finally:
-            assigned.unpersist()
-    finally:
-        base.unpersist()
-    _put_sidecar(spark, root, "centroids", cents)
-    if R is not None:
-        _put_sidecar(spark, root, "rotation", R.tolist())
-    _put_sidecar(spark, root, "pq_codebooks", books.tolist())
-    # build-time baseline for ivf_pq_index_drift (one scan of the
-    # just-written compressed codes)
-    _write_pq_drift_baseline(spark, root, books)
-    if next_seq is not None:
-        _publish_index_version(spark, path, next_seq, root)
-        _gc_index_versions(spark, path)
-    return cents, books
+    return cents, payload.books
 
 
 def ivf_pq_compact_index(
@@ -644,16 +674,16 @@ def ivf_pq_compact_index(
     plain IVF-PQ index to an OPQ one).
 
     ``batch_col``: when the source carries a batch-tag column (the
-    TAGGED ``centroid=X/batch=Y`` codes layout the streaming sink and
-    tag-aware appends write), tags are PRESERVED through the rebuild —
-    rows keep their tag, the codes land partitioned by
-    ``(centroid, batch)``, claim files are re-created for every
-    preserved ``append-N`` tag, and ``next_append_seq`` carries forward
-    through the ``index_meta`` sidecar — so a streaming checkpoint retry
-    still dynamic-overwrites exactly its own ``batch=stream-N``
-    partitions inside the compacted version (no double-append), same
-    contract as ``similarity.ivf_compact_index``.  ``None`` (default)
-    keeps the flat ``centroid=``-only layout of batch-built indexes.
+    ``full`` / ``append-N`` / ``stream-N`` tags of the codes), tags are
+    PRESERVED through the rebuild — rows keep their tag, claim files are
+    re-created for every preserved ``append-N`` tag, and the replay
+    fence advances over the victims' ``stream-N`` tags — so a streaming
+    checkpoint retry still dynamic-overwrites exactly its own
+    ``batch=stream-N`` partitions inside the compacted version (no
+    double-append), same contract as ``similarity.ivf_compact_index``.
+    ``None`` (default) tags every row ``full``.  Either way
+    ``next_append_seq`` carries forward through the ``index_meta``
+    sidecar.
 
     PQ codes are LOSSY: unlike the raw-vector IVF index (whose
     ``similarity.ivf_compact_index`` re-clusters from its own contents),
@@ -685,130 +715,23 @@ def ivf_pq_compact_index(
     committed versions for in-flight readers; ``None`` skips GC — collect
     via ``similarity.gc_index_versions`` on your own schedule.
     """
-    from vectordb_watermark_spark.operators.similarity import (
-        _append_seq,
-        _current_index_version,
-        _folded_stream_fence,
-        _gc_index_versions,
-        _ivf_assign_pass,
-        _ivf_train,
-        _load_centroids,
-        _load_fold_fence,
-        _load_tombstones,
-        _publish_index_version,
-        _put_sidecar,
-        _recreate_claims,
-        _resolve_index_root,
-        _stage_index_version,
-        _write_index_meta_atomic,
+    from vectordb_watermark_spark.operators.similarity import _build_index
+
+    base = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<float>").alias("v"),
+        *([F.col(batch_col).cast("string").alias("batch")] if batch_col else []),
     )
-
-    spark = df.sparkSession
-    cur_seq = _current_index_version(spark, path)
-    cur_root = _resolve_index_root(spark, path)
-    next_seq = (cur_seq or 0) + 1
-    # private staging dir: racing attempts never share a directory, so a
-    # loser cannot delete/overwrite a winner's pieces (ADVICE r10 #1)
-    vdir = _stage_index_version(spark, path, next_seq)
-
-    if n_centroids is None:
-        n_centroids = len(_load_centroids(spark, cur_root))
-    if m is None or n_codes is None:
-        stored = _load_codebooks(spark, cur_root)
-        m = m or int(stored.shape[0])
-        n_codes = n_codes or int(stored.shape[1])
-
-    if batch_col is not None:
-        base = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<float>").alias("v"),
-            F.col(batch_col).cast("string").alias("batch"),
-        )
-        extra = ("batch",)
-    else:
-        base = _pq_base(df, id_col, vec_col)
-        extra = ()
-    # OPQ: reuse the stored rotation (queries keep their space), or train
-    # one during the rebuild when the caller upgrades with opq=True
-    R = _load_rotation(spark, cur_root)
-    if R is None and opq:
-        from vectordb_watermark_spark.operators.opq import opq_train_rotation
-
-        R = opq_train_rotation(base, m, vec_col="v")
-    if R is not None:
-        from vectordb_watermark_spark.operators.opq import rotate_vectors
-
-        base = rotate_vectors(base, R, vec_col="v")
-    # FOLD tombstones (ivf_delete_ids): deleted ids are dropped even if
-    # the caller-provided source still contains them, and the tombstone
-    # set is not carried into the new version.  With a tagged source the
-    # replay fence advances to the highest victim-containing stream batch
-    # (see similarity._load_fold_fence) so a fresh-checkpoint replay of
-    # those batches cannot silently resurrect the deleted rows.
-    tomb = _load_tombstones(spark, cur_root)
-    fence = _load_fold_fence(spark, cur_root)
-    if _fence_floor is not None:
-        # the streaming sink pre-folds its raw archive (so this source no
-        # longer CONTAINS the victims) and passes the victim watermark it
-        # computed doing so — committed here, atomically with the version
-        fence = max(fence, _fence_floor) if fence is not None else _fence_floor
-    if tomb is not None:
-        if batch_col is not None:
-            victim_tags = [
-                r["batch"]
-                for r in base.join(tomb, "id", "semi")
-                .select("batch").distinct().collect()
-            ]
-            fence = _folded_stream_fence(fence, victim_tags)
-        base = base.join(tomb, "id", "left_anti")
-    base = base.persist()
-    try:
-        cents = _ivf_train(base.select("id", "v"), n_centroids, coarse_iters, key)
-        assigned = _ivf_assign_pass(base, cents, extra=extra).persist()
-        try:
-            res = _residual_pass(assigned.select("id", "v", "centroid"), cents)
-            books = pq_train(
-                res, m, n_codes, pq_iters, key, id_col="id", vec_col="r"
-            )
-            _residual_encode_pass(assigned, cents, books, extra=extra).write.mode(
-                "overwrite"
-            ).partitionBy("centroid", *extra).parquet(f"{vdir}/codes")
-            if batch_col is not None:
-                # preserved tags (bounded: one row per batch ever made) —
-                # drive the carried-forward sequence + claim re-creation,
-                # same contract as similarity.ivf_compact_index
-                seq_keep, appends = _append_seq(
-                    spark, cur_root, "codes",
-                    tags=[
-                        r["batch"]
-                        for r in assigned.select("batch").distinct().collect()
-                    ],
-                )
-                _write_index_meta_atomic(
-                    spark, vdir,
-                    df.schema[id_col].dataType.simpleString(),
-                    len(cents[0]), seq_keep,
-                )
-                _recreate_claims(spark, vdir, appends)
-        finally:
-            assigned.unpersist()
-    finally:
-        base.unpersist()
-    _put_sidecar(spark, vdir, "centroids", cents)
-    if R is not None:
-        _put_sidecar(spark, vdir, "rotation", R.tolist())
-    _put_sidecar(spark, vdir, "pq_codebooks", books.tolist())
-    # re-record the drift baseline over the recompacted codes (the drift
-    # metric's denominator)
-    _write_pq_drift_baseline(spark, vdir, books)
-    if fence is not None:
-        _put_sidecar(spark, vdir, "fold_fence", fence)
-    # every piece is staged — atomic rename onto _v{N}, THE commit, then
-    # GC (skipped entirely under gc_keep_last=None)
-    _publish_index_version(spark, path, next_seq, vdir)
-    if gc_keep_last is not None:
-        _gc_index_versions(spark, path, keep_last=gc_keep_last)
-    return cents, books
+    payload = _PqRows(m, n_codes, pq_iters, key, opq)
+    # _fence_floor: the streaming sink pre-folds its raw archive (so this
+    # source no longer CONTAINS the victims) and passes the victim
+    # watermark it computed doing so — committed here with the version
+    cents = _build_index(
+        df.sparkSession, path, payload, base, n_centroids, coarse_iters, key,
+        compact=True, tag=None if batch_col is not None else "full",
+        gc_keep_last=gc_keep_last, fence_floor=_fence_floor,
+    )
+    return cents, payload.books
 
 
 def ivf_pq_append_index(
@@ -827,87 +750,21 @@ def ivf_pq_append_index(
 
     Dimension and id type are validated against the stored index up front
     (a mismatch would otherwise plant conflicting parquet schemas that
-    only fail at some later read).  The id-type check reads the codes
-    schema — one footer read, not a data scan.
+    only fail at some later read); the id type comes from the
+    ``index_meta`` sidecar, so the check submits no Spark job.
 
-    TWO LAYOUTS, AUTO-DETECTED from the codes schema:
-
-    - flat ``centroid=X/`` (batch-built indexes): the original behavior —
-      plain append, discipline ONE appender at a time (no tags;
-      concurrent appends can collide in the shared ``_temporary``
-      staging directory).  Crash semantics are clean — an aborted write
-      job commits no files, so a retry simply appends.
-    - tagged ``centroid=X/batch=Y/`` (streaming-sink-built or
-      ``batch_col``-compacted indexes): full parity with
-      ``similarity.ivf_append_index`` — the append lands under a fresh
-      ``batch=append-N`` tag with the claim-before-write protocol
-      (sidecar bumped first so a crashed attempt's blind retry lands on
-      a fresh tag; ``createNewFile`` on the claim file turns a
-      concurrent appender into a loud :class:`similarity.ConcurrentAppendError`).
+    The append lands under a fresh ``batch=append-N`` tag with the
+    claim-before-write protocol of ``similarity.ivf_append_index`` — the
+    same append body (sidecar bumped first so a crashed attempt's blind
+    retry lands on a fresh tag; ``createNewFile`` on the claim file turns
+    a concurrent appender into a loud
+    :class:`similarity.ConcurrentAppendError`).  An index written before
+    both index kinds shared one layout (flat ``codes/centroid=X/``, no
+    ``index_meta``) fails loudly: rebuild or compact it once.
     """
-    from vectordb_watermark_spark.operators.similarity import (
-        _append_seq,
-        _ivf_assign_pass,
-        _ivf_base,
-        _load_centroids,
-        _resolve_index_root,
-    )
-    from vectordb_watermark_spark.sources.io import vector_dim
+    from vectordb_watermark_spark.operators.similarity import _append_index
 
-    spark = df.sparkSession
-    # versioned (post-compaction) index: pieces live in the committed
-    # version dir — appended codes land there too
-    path = _resolve_index_root(spark, path)
-    cents = _load_centroids(spark, path)
-    B = _load_codebooks(spark, path)
-    m, n_codes, dsub = B.shape
-    dim = vector_dim(df, vec_col)
-    if dim != len(cents[0]) or dim != m * dsub:
-        raise ValueError(
-            f"appended vectors are {dim}-d but the index at {path} is "
-            f"{len(cents[0])}-d (codebooks {m}x{dsub})"
-        )
-    codes_schema = spark.read.parquet(f"{path}/codes").schema
-    stored_t = codes_schema["id"].dataType.simpleString()
-    new_t = df.schema[id_col].dataType.simpleString()
-    if stored_t != new_t:
-        raise ValueError(
-            f"appended id type {new_t} does not match the index's id type "
-            f"{stored_t}"
-        )
-    tagged = "batch" in codes_schema.fieldNames()
-    if tagged:
-        seq, _ = _append_seq(spark, path, "codes", claim=(new_t, dim))
-        batch_tag = f"append-{seq}"
-    # cast to array<float> FIRST (same as _pq_base at build time): append-time
-    # and rebuild-time encoding must see bit-identical inputs, or a float64
-    # source column could flip argmin ties and diverge appended codes from
-    # what a rebuild would produce (ADVICE r8)
-    pb = _pq_base(df, id_col, vec_col)
-    R = _load_rotation(spark, path)
-    if R is not None:
-        # OPQ index: centroids/codebooks live in rotated space — rotate
-        # the appended vectors with the STORED rotation (same float64
-        # GEMM → float32 emission as the build, bit-identical encoding)
-        from vectordb_watermark_spark.operators.opq import rotate_vectors
-
-        pb = rotate_vectors(pb, R, vec_col="v")
-    base = _ivf_base(pb, "id", "v")  # persisted: write + count, one scan
-    try:
-        assigned = _ivf_assign_pass(base, cents)
-        enc = _residual_encode_pass(assigned, cents, B)
-        if tagged:
-            enc.withColumn("batch", F.lit(batch_tag)).write.mode(
-                "append"
-            ).partitionBy("centroid", "batch").parquet(f"{path}/codes")
-        else:
-            enc.write.mode("append").partitionBy("centroid").parquet(
-                f"{path}/codes"
-            )
-        n = base.count()
-    finally:
-        base.unpersist()
-    return int(n)
+    return _append_index(df, path, _PqRows(), id_col, vec_col)
 
 
 def _decoded_residual_energy(codes: DataFrame, books: np.ndarray) -> float:
@@ -1090,13 +947,14 @@ def ivf_pq_query_index(
     reads ~n_probe/n_centroids of an already-192x-smaller payload.
     """
     from vectordb_watermark_spark.operators.similarity import (
-        _apply_tombstones,
         _load_centroids,
+        _nearest_centroids,
+        _probed_rows,
         _resolve_index_root,
     )
 
     path = _resolve_index_root(spark, path)
-    cents = _load_centroids(spark, path)
+    C = np.asarray(_load_centroids(spark, path), dtype=np.float64)
     B = _load_codebooks(spark, path)
     m, n_codes, dsub = B.shape
     q = np.asarray(query_vec, dtype=np.float64)
@@ -1107,11 +965,7 @@ def ivf_pq_query_index(
         # OPQ index: centroids/codes live in rotated space; R is
         # orthonormal so the cosine returned is the original-space cosine
         q = R @ q
-    C = np.asarray(cents, dtype=np.float64)
-    order = sorted(
-        (float(((C[i] - q) ** 2).sum()), i) for i in range(C.shape[0])
-    )
-    probe = [i for _, i in order[:n_probe]]
+    probe = _nearest_centroids(C, q, n_probe)
 
     qs = q.reshape(m, dsub)
     T_q = np.einsum("sd,scd->sc", qs, B)  # (m, n_codes)
@@ -1122,10 +976,7 @@ def ivf_pq_query_index(
     cn2 = {i: float((C[i] ** 2).sum()) for i in probe}
     qn = float(np.sqrt((q**2).sum()))
 
-    codes = _apply_tombstones(
-        spark.read.parquet(f"{path}/codes").filter(F.col("centroid").isin(probe)),
-        spark, path,
-    )
+    codes = _probed_rows(spark, path, "codes", probe)
     id_type = codes.schema["id"].dataType.simpleString()
 
     def kernel(batches):
@@ -1167,28 +1018,9 @@ def ivf_pq_query_index(
                 names=["id", "cos_approx"],
             )
 
-    scored = codes.mapInArrow(kernel, schema=f"id {id_type}, cos_approx double")
-
-    if rerank_with is not None:
-        from vectordb_watermark_spark.operators.similarity import topk_cosine
-
-        n_short = shortlist or 4 * k
-        short = scored.orderBy(
-            F.col("cos_approx").desc(), F.col("id").asc()
-        ).limit(n_short)
-        sub = _pq_base(rerank_with, id_col, vec_col).join(
-            short.select("id"), "id", "semi"
-        )
-        return topk_cosine(sub, query_vec, k, "id", "v")
-
-    from pyspark.sql import Window
-
-    top = scored.orderBy(F.col("cos_approx").desc(), F.col("id").asc()).limit(k)
-    w = Window.orderBy(F.col("cos_approx").desc(), F.col("id").asc())
-    return top.select(
-        "id",
-        F.col("cos_approx").alias("cos"),
-        F.row_number().over(w).cast("int").alias("rank"),
+    return _adc_topk(
+        codes.mapInArrow(kernel, schema=f"id {id_type}, cos_approx double"),
+        query_vec, k, rerank_with, shortlist, id_col, vec_col,
     )
 
 
@@ -1227,46 +1059,30 @@ def ivf_pq_query_index_batch(
     ``ivf_pq_query_index(..., rerank_with=...)`` per query (same rounded
     expression, same tie-break; pinned by test).
     """
-    from pyspark.sql import Window
-
     from vectordb_watermark_spark.operators.similarity import (
-        _apply_tombstones,
         _load_centroids,
+        _probed_rows,
+        _probes_by_centroid,
+        _query_block,
         _resolve_index_root,
+        _top_per_query,
     )
 
     path = _resolve_index_root(spark, path)
-    cents = _load_centroids(spark, path)
+    C = np.asarray(_load_centroids(spark, path), dtype=np.float64)
     B = _load_codebooks(spark, path)
     m, n_codes, dsub = B.shape
-    qrows = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.col(qvec_col).cast("array<double>").alias("qv"),
-    ).collect()
-    if not qrows:
-        raise ValueError("ivf_pq_query_index_batch: empty query block")
-    qids = [r["qid"] for r in qrows]
-    if len(set(qids)) != len(qids):
-        # a duplicated qid would silently double every result row for it
-        raise ValueError(
-            "ivf_pq_query_index_batch: duplicate qids in the query block"
-        )
-    Q = np.asarray([r["qv"] for r in qrows], dtype=np.float64)
+    qids, Q, qid_type, qid_arrow = _query_block(
+        queries, qid_col, qvec_col, "ivf_pq_query_index_batch"
+    )
     if Q.shape[1] != m * dsub:
         raise ValueError(f"query dim {Q.shape[1]} != codebook dim {m * dsub}")
     Q_orig = Q  # exact rerank runs against RAW vectors in the original space
     R = _load_rotation(spark, path)
     if R is not None:
         Q = Q @ R.T  # same driver-side rotation as the single-query path
-    C = np.asarray(cents, dtype=np.float64)
     qn = np.sqrt((Q**2).sum(axis=1))
-
-    d2 = (Q**2).sum(1)[:, None] + (C**2).sum(1)[None, :] - 2.0 * (Q @ C.T)
-    probe_per_q = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
-    by_centroid: dict[int, list[int]] = {}
-    for qi in range(Q.shape[0]):
-        for c in probe_per_q[qi]:
-            by_centroid.setdefault(int(c), []).append(qi)
+    by_centroid = _probes_by_centroid(Q, C, n_probe)
     probe_union = sorted(by_centroid)
 
     Qs = Q.reshape(Q.shape[0], m, dsub)
@@ -1279,17 +1095,7 @@ def ivf_pq_query_index_batch(
     qc = Q @ C[probe_union].T if probe_union else np.zeros((Q.shape[0], 0))
     qc = {c: qc[:, j] for j, c in enumerate(probe_union)}
     cn2 = {i: float((C[i] ** 2).sum()) for i in probe_union}
-    from vectordb_watermark_spark.functions.arrowmat import arrow_type_of
-
-    qid_type = queries.schema[qid_col].dataType.simpleString()
-    qid_arrow = arrow_type_of(queries.schema[qid_col].dataType)
-
-    codes = _apply_tombstones(
-        spark.read.parquet(f"{path}/codes").filter(
-            F.col("centroid").isin(probe_union)
-        ),
-        spark, path,
-    )
+    codes = _probed_rows(spark, path, "codes", probe_union)
     id_type = codes.schema["id"].dataType.simpleString()
 
     # batch-local cut width: the global per-query selection can only pick
@@ -1359,17 +1165,10 @@ def ivf_pq_query_index_batch(
     cand = codes.mapInArrow(
         kernel, schema=f"qid {qid_type}, id {id_type}, cos double"
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("id").asc())
-
     if rerank_with is not None:
         from vectordb_watermark_spark.functions.vector import cosine_similarity
 
-        n_short = shortlist or 4 * k
-        short = (
-            cand.withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") <= n_short)
-            .select("qid", "id")
-        )
+        short = _top_per_query(cand, shortlist or 4 * k).select("qid", "id")
         # array<float> to MATCH the single-query rerank exactly: its
         # topk_cosine reads _pq_base's float-cast vectors, and a double
         # cast here could differ in the last ulp before the 6-dp round
@@ -1392,12 +1191,5 @@ def ivf_pq_query_index_batch(
                 ).alias("cos"),
             )
         )
-        return (
-            exact.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-        )
-
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+        return _top_per_query(exact, k)
+    return _top_per_query(cand, k)

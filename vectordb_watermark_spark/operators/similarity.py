@@ -47,14 +47,24 @@ class ConcurrentCompactionError(RuntimeError):
 # ---------------------------------------------------------------------------
 # Versioned index layout (manifest-pointer commit)
 #
-# A fresh ivf_write_index / ivf_pq_write_index lays its pieces FLAT under
-# ``{path}/`` (vectors, centroids, index_meta, ...) — simple, and pinned by
-# the layout tests.  COMPACTION (and any rebuild of an already-versioned
-# index) instead writes every piece into ``{path}/_v{N:05d}/`` and commits
+# ROWS: both index kinds store their rows in ONE layout,
+# ``{table}/centroid=X/batch=Y/`` — ``table`` is ``vectors`` (raw IVF) or
+# ``codes`` (IVF-PQ), and ``batch`` is ``full`` (a build), ``append-N`` (an
+# append) or ``stream-N`` (a streaming micro-batch).  Queries prune on the
+# first level; the tags let a retried micro-batch overwrite exactly its
+# own partitions.  One build body (_build_index), one append body
+# (_append_index) and one streaming handler (curation._index_sink) write
+# it for both kinds; the kinds differ only in their payload (_RawRows
+# here, pq._PqRows).
+#
+# VERSIONS: a write to a fresh path lays its pieces directly under
+# ``{path}/`` (vectors or codes, centroids, index_meta, ...).  COMPACTION
+# (and any rebuild of an already-versioned index) instead writes every
+# piece into ``{path}/_v{N:05d}/`` and commits
 # with ONE atomic ``createNewFile`` of ``{path}/_commits/{N:05d}`` — the
 # commit-file NAME is the pointer, so there is no content to tear.  All
 # readers resolve through ``_resolve_index_root``: max committed N wins,
-# no commits -> flat legacy root.  Crash anywhere before the commit file
+# no commits -> the unversioned root.  Crash anywhere before the commit file
 # leaves the old version fully live (the half-written ``_v`` dir is
 # uncommitted garbage, GC'd by the next maintenance pass); a reader racing
 # a compaction resolves to a CONSISTENT version either way.  This replaces
@@ -171,7 +181,8 @@ def _get_sidecar(spark, root: str, name: str):
 
 def _current_index_version(spark, path: str) -> int | None:
     """Highest committed version under ``{path}/_commits``, or ``None`` for
-    a flat (never-compacted) index.  One directory listing — metadata-cheap."""
+    an unversioned (never-compacted) index.  One directory listing —
+    metadata-cheap."""
     jvm_path, fs = _index_fs(spark, path)
     commits = jvm_path(f"{path}/_commits")
     if not fs.exists(commits):
@@ -186,7 +197,7 @@ def _current_index_version(spark, path: str) -> int | None:
 
 def _resolve_index_root(spark, path: str) -> str:
     """Directory actually holding the index pieces: the current committed
-    version dir, or ``path`` itself for a flat legacy index.  The commit
+    version dir, or ``path`` itself for an unversioned index.  The commit
     file is created only after every piece of its version is fully written,
     so whatever this returns is a complete, mutually consistent snapshot."""
     seq = _current_index_version(spark, path)
@@ -405,22 +416,74 @@ def _load_tombstones(spark, root: str) -> DataFrame | None:
     return spark.read.parquet(*dirs).select("id").distinct()
 
 
-def _apply_tombstones(df: DataFrame, spark, root: str) -> DataFrame:
-    """Anti-join the version's tombstone set into a scan of its rows —
-    identity when the index has no tombstones (no join in the plan)."""
+def _probed_rows(spark, root: str, table: str, probe) -> DataFrame:
+    """The live rows of the ``probe`` centroids' partitions of
+    ``{root}/{table}``: ``centroid IN (...)`` is a plan-time partition
+    filter, and the version's tombstone set is anti-joined above the
+    pruned scan (no join in the plan when the index has none)."""
+    rows = spark.read.parquet(f"{root}/{table}").filter(F.col("centroid").isin(probe))
     tomb = _load_tombstones(spark, root)
-    if tomb is None:
-        return df
-    return df.join(tomb, "id", "left_anti")
+    return rows if tomb is None else rows.join(tomb, "id", "left_anti")
+
+
+def _nearest_centroids(cents, q, n_probe: int) -> list[int]:
+    """The ``n_probe`` centroids nearest the query ``q`` (ties to the
+    smallest index)."""
+    import numpy as np
+
+    q = np.asarray(q, dtype=np.float64)
+    order = sorted(
+        (float(((np.asarray(c, dtype=np.float64) - q) ** 2).sum()), i)
+        for i, c in enumerate(cents)
+    )
+    return [i for _, i in order[:n_probe]]
+
+
+def _query_block(queries: DataFrame, qid_col: str, qvec_col: str, op: str):
+    """A batched query block collected to the driver: ``(qids, Q,
+    qid_type, qid_arrow)`` with ``Q`` the float64 query matrix.  Empty
+    blocks and duplicated qids (which would silently double every result
+    row for them) raise."""
+    import numpy as np
+
+    from vectordb_watermark_spark.functions.arrowmat import arrow_type_of
+
+    qrows = queries.select(
+        F.col(qid_col).alias("qid"),
+        F.col(qvec_col).cast("array<double>").alias("qv"),
+    ).collect()
+    if not qrows:
+        raise ValueError(f"{op}: empty query block")
+    qids = [r["qid"] for r in qrows]
+    if len(set(qids)) != len(qids):
+        raise ValueError(f"{op}: duplicate qids in the query block")
+    qtype = queries.schema[qid_col].dataType
+    return (
+        qids, np.asarray([r["qv"] for r in qrows], dtype=np.float64),
+        qtype.simpleString(), arrow_type_of(qtype),
+    )
+
+
+def _probes_by_centroid(Q, C, n_probe: int) -> dict[int, list[int]]:
+    """Every query's ``n_probe`` nearest centroids, in one GEMM, inverted
+    to ``{centroid: [query row, ...]}``."""
+    import numpy as np
+
+    d2 = (Q**2).sum(1)[:, None] + (C**2).sum(1)[None, :] - 2.0 * (Q @ C.T)
+    by_centroid: dict[int, list[int]] = {}
+    for qi, probe in enumerate(np.argsort(d2, axis=1, kind="stable")[:, :n_probe]):
+        for c in probe:
+            by_centroid.setdefault(int(c), []).append(qi)
+    return by_centroid
 
 
 def index_info(spark, path: str) -> dict:
     """DESCRIBE for a persisted index (raw IVF or IVF-PQ) — the
     operational introspection call maintenance tooling needs without
-    reaching into the layout: committed version (None = flat legacy),
-    kind, layout (tagged/flat), centroid count and dimension, the append
-    sequence, per-batch-tag LIVE row counts, tombstone count, and which
-    drift-baseline sidecars are present.
+    reaching into the layout: committed version (None = unversioned),
+    kind, centroid count and dimension, the append sequence, per-batch-tag
+    LIVE row counts, tombstone count, and which drift-baseline sidecars
+    are present.
 
     Cost: metadata ops plus ONE scan of the rows table for the tag
     counts (the same class as a drift check — bounded output, one row
@@ -437,17 +500,13 @@ def index_info(spark, path: str) -> dict:
     rows = spark.read.parquet(
         f"{root}/vectors" if kind == "ivf" else f"{root}/codes"
     )
-    tagged = "batch" in rows.schema.fieldNames()
     tomb = _load_tombstones(spark, root)
     n_dead = tomb.count() if tomb is not None else 0
     live = rows.join(tomb, "id", "left_anti") if tomb is not None else rows
-    if tagged:
-        tag_counts = {
-            str(r["batch"]): int(r["n"])
-            for r in live.groupBy("batch").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-    else:
-        tag_counts = {None: live.count()}
+    tag_counts = {
+        str(r["batch"]): int(r["n"])
+        for r in live.groupBy("batch").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
     cents = _load_centroids(spark, root)
     meta = _load_index_meta(spark, root)
     return {
@@ -455,13 +514,11 @@ def index_info(spark, path: str) -> dict:
         "resolved_root": root,
         "version": _current_index_version(spark, path),
         "kind": kind,
-        "layout": "tagged" if tagged else "flat",
         "n_centroids": len(cents),
-        "dim": int(meta["dim"]) if meta is not None else len(cents[0]),
-        "id_type": (
-            meta["id_type"] if meta is not None
-            else rows.schema["id"].dataType.simpleString()
-        ),
+        "dim": len(cents[0]),
+        "id_type": rows.schema["id"].dataType.simpleString(),
+        # None without the sidecar: an IVF-PQ index written before the
+        # kinds shared one lifecycle, or the crash window of its swap
         "next_append_seq": (
             int(meta["next_append_seq"]) if meta is not None else None
         ),
@@ -1071,6 +1128,235 @@ def ivf_topk_cosine(
     return df.sparkSession.createDataFrame(rows, schema)
 
 
+class _RawRows:
+    """The raw-IVF payload of the shared index lifecycle: rows keep their
+    vectors, nothing is trained past the coarse centroids, and the drift
+    baseline is the k-means distortion of the rows built from.
+
+    The IVF-PQ twin is ``pq._PqRows``.  :func:`_build_index`,
+    :func:`_append_index` and ``curation._index_sink`` see only this
+    interface:
+
+    - ``table``: the rows directory; ``marker``: the sidecar a stream
+      bootstrap writes last (its existence marks a complete bootstrap);
+    - ``rows(df, id_col, vec_col)``: the ``(id, v)`` projection;
+    - ``prepare(spark, base, root)``: load the payload sidecars of the
+      index stored at ``root`` (None: a new index), then pre-transform
+      ``base`` into index space;
+    - ``train(assigned, cents)``: training after the coarse centroids,
+      over the assignment pass (returned, maybe persisted);
+    - ``encode(assigned, cents, extra)``: the rows written per
+      assignment-pass row, ``extra`` columns riding through;
+    - ``put_sidecars(spark, root)`` and ``put_baseline(spark, root, base,
+      cents)``: the payload's sidecars and its drift baseline (called
+      while ``base`` is still cached, after the rows are written)."""
+
+    table = "vectors"
+    marker = "centroids"
+
+    def rows(self, df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+        return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+
+    def prepare(self, spark, base: DataFrame, root: str | None) -> DataFrame:
+        return base
+
+    def train(self, assigned: DataFrame, cents) -> DataFrame:
+        return assigned
+
+    def encode(self, assigned: DataFrame, cents, extra=()) -> DataFrame:
+        return assigned
+
+    def put_sidecars(self, spark, root: str) -> None:
+        pass
+
+    def put_baseline(self, spark, root: str, base: DataFrame, cents) -> None:
+        _put_sidecar(spark, root, "drift_baseline", {
+            "base_distortion": _mean_distortion(base, cents),
+            "base_rows": base.count(),
+        })
+
+
+def _write_rows(
+    payload, assigned: DataFrame, cents, root: str, tag: str | None, mode: str
+) -> None:
+    """Encode ``assigned`` and write it to ``{root}/{payload.table}``
+    partitioned by ``(centroid, batch)``: every row under ``batch=tag``,
+    or under its own ``batch`` column when ``tag`` is None.  ``mode`` is
+    ``overwrite``, ``append``, or ``dynamic`` (overwrite only the
+    partitions written: a retried stream micro-batch)."""
+    rows = payload.encode(assigned, cents, () if tag is not None else ("batch",))
+    if tag is not None:
+        rows = rows.withColumn("batch", F.lit(tag))
+    w = rows.write.mode("append" if mode == "append" else "overwrite")
+    if mode == "dynamic":
+        w = w.option("partitionOverwriteMode", "dynamic")
+    w.partitionBy("centroid", "batch").parquet(f"{root}/{payload.table}")
+
+
+def _build_index(
+    spark,
+    path: str,
+    payload,
+    base: DataFrame,
+    n_centroids: int | None,
+    n_iters: int,
+    key: str,
+    compact: bool,
+    tag: str | None = "full",
+    gc_keep_last: int | None = 1,
+    fence_floor: int | None = None,
+) -> list[list[float]]:
+    """The one build body of both index kinds — a write
+    (``compact=False``) or a compaction of the index at ``path`` from
+    ``base``'s ``(id, v[, batch])`` rows; returns the centroids.
+
+    Rows are tagged ``tag``, or keep their own ``batch`` column when
+    ``tag`` is None; a compaction's ``n_centroids=None`` keeps the stored
+    count.  A write to an unversioned path lands in place;
+    every other build stages a private ``_v{N}`` dir and publishes it
+    (:func:`_publish_index_version`), then GCs under ``gc_keep_last``.
+    A write restarts the append sequence at 1 and clears the claim
+    files; a compaction folds the tombstones (advancing the replay
+    fence over the victims' ``stream-N`` tags, and to ``fence_floor``),
+    carries the sequence forward and re-creates the claims of the
+    preserved ``append-N`` tags."""
+    from pyspark import StorageLevel
+
+    cur_seq = _current_index_version(spark, path)
+    cur_root = _resolve_index_root(spark, path)
+    if compact:
+        n_centroids = n_centroids or len(_load_centroids(spark, cur_root))
+    next_seq, root = None, path
+    if compact or cur_seq is not None:
+        # private staging dir — racing rebuild/compaction attempts never
+        # share a directory (ADVICE r10 #1); crashed attempts' staging
+        # dirs are GC'd once their seq is stale
+        next_seq = (cur_seq or 0) + 1
+        root = _stage_index_version(spark, path, next_seq)
+    base = payload.prepare(spark, base, cur_root if compact else None)
+    seq, appends, fence = 1, [], None
+    if compact:
+        # FOLD tombstones: deleted rows are dropped from the rebuilt
+        # version and the tombstone set is not carried forward.  The
+        # replay fence advances to the highest victim-containing stream
+        # batch (bounded collect: distinct tags of victim rows only) so a
+        # fresh-checkpoint replay of those batches cannot silently
+        # resurrect the deleted rows; the prior fence carries forward.
+        tomb = _load_tombstones(spark, cur_root)
+        fence = _load_fold_fence(spark, cur_root)
+        if fence_floor is not None:
+            fence = max(fence, fence_floor) if fence is not None else fence_floor
+        if tomb is not None:
+            if tag is None:
+                fence = _folded_stream_fence(fence, [
+                    r["batch"]
+                    for r in base.join(tomb, "id", "semi")
+                    .select("batch").distinct().collect()
+                ])
+            base = base.join(tomb, "id", "left_anti")
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        cents = _ivf_train(base, n_centroids, n_iters, key)
+        if compact:
+            # preserved tags (bounded: one row per batch ever made) drive
+            # the carried-forward sequence and the claim re-creation;
+            # read after training, from the materialized cache
+            seq, appends = _append_seq(
+                spark, cur_root, payload.table,
+                tags=[tag] if tag is not None else [
+                    r["batch"] for r in base.select("batch").distinct().collect()
+                ],
+            )
+        assigned = _ivf_assign_pass(
+            base, cents, extra=() if tag is not None else ("batch",)
+        )
+        try:
+            assigned = payload.train(assigned, cents)
+            _write_rows(payload, assigned, cents, root, tag, "overwrite")
+        finally:
+            assigned.unpersist()
+        payload.put_baseline(spark, root, base, cents)
+    finally:
+        base.unpersist()
+    jvm_path, fs = _index_fs(spark, root)
+    if not compact:
+        # the append sequence restarts at 1, so the claim files of the
+        # PREVIOUS generation go first (crash between the two leaves an
+        # old-seq sidecar and no claims — appends just continue at the
+        # old sequence; the reverse order would leave seq=1 racing into
+        # already-claimed tags — ADVICE r6)
+        fs.delete(jvm_path(f"{root}/append_claims"), True)
+    _write_index_meta_atomic(
+        spark, root, base.schema["id"].dataType.simpleString(), len(cents[0]), seq
+    )
+    _put_sidecar(spark, root, "centroids", cents)
+    payload.put_sidecars(spark, root)
+    # empty claim files for the preserved append-N tags: a stale appender
+    # holding a rolled-back sequence still loses the claim race loudly
+    # instead of mixing rows into a preserved tag
+    for n in appends:
+        fs.mkdirs(jvm_path(f"{root}/append_claims"))
+        fs.createNewFile(jvm_path(f"{root}/append_claims/append-{n}.claim"))
+    if fence is not None:
+        _put_sidecar(spark, root, "fold_fence", fence)
+    if next_seq is not None:
+        # every piece is staged — atomic rename onto _v{N}, THE commit,
+        # then GC (skipped entirely under gc_keep_last=None)
+        _publish_index_version(spark, path, next_seq, root)
+        if gc_keep_last is not None:
+            _gc_index_versions(spark, path, keep_last=gc_keep_last)
+    return cents
+
+
+def _check_dim(rows: DataFrame, root: str, cents, what: str) -> int:
+    """The width of ``rows``' vectors, checked against the index at
+    ``root`` before anything is written: a mismatch would otherwise plant
+    conflicting parquet schemas, or fail opaquely inside an executor-side
+    Arrow kernel.  One single-row job."""
+    from vectordb_watermark_spark.sources.io import vector_dim
+
+    dim = vector_dim(rows, "v")
+    if dim != len(cents[0]):
+        raise ValueError(
+            f"{what} vectors are {dim}-d but the index at {root} is "
+            f"{len(cents[0])}-d"
+        )
+    return dim
+
+
+def _append_index(df: DataFrame, path: str, payload, id_col: str, vec_col: str) -> int:
+    """The one append body of both index kinds: assign ``df``'s vectors
+    to the stored centroids and append them, encoded by ``payload``,
+    under a freshly claimed ``batch=append-N`` tag (:func:`_append_seq`).
+    Returns the appended row count."""
+    from pyspark import StorageLevel
+
+    spark = df.sparkSession
+    # versioned (post-compaction) index: all pieces live in the current
+    # committed version dir — appends land there too
+    root = _resolve_index_root(spark, path)
+    cents = _load_centroids(spark, root)
+    rows = payload.rows(df, id_col, vec_col)
+    base = payload.prepare(spark, rows, root)
+    seq, _ = _append_seq(
+        spark, root, payload.table,
+        claim=(
+            rows.schema["id"].dataType.simpleString(),
+            _check_dim(rows, root, cents, "appended"),
+        ),
+    )
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)  # write + count, one scan
+    try:
+        _write_rows(
+            payload, _ivf_assign_pass(base, cents), cents, root,
+            f"append-{seq}", "append",
+        )
+        n = base.count()
+    finally:
+        base.unpersist()
+    return int(n)
+
+
 def ivf_write_index(
     df: DataFrame,
     path: str,
@@ -1102,53 +1388,18 @@ def ivf_write_index(
     assignment pass output (which already carries ``v``) is written directly
     — no join back to the source, no per-iteration re-scan.
 
-    A FRESH path gets the flat layout above.  Rebuilding an index that a
-    compaction has already VERSIONED writes a new ``_v{N}`` version and
-    commits it through the manifest instead (flat pieces would be invisible
-    behind the commit log) — same atomic-commit semantics as
-    :func:`ivf_compact_index`.
+    A FRESH path gets its pieces directly under ``path``.  Rebuilding an
+    index that a compaction has already VERSIONED writes a new ``_v{N}``
+    version and commits it through the manifest instead (unversioned
+    pieces would be invisible behind the commit log) — same atomic-commit
+    semantics as :func:`ivf_compact_index`.  Either way a rebuild restarts
+    the append sequence at 1.
     """
-    spark = df.sparkSession
-    cur_seq = _current_index_version(spark, path)
-    next_seq = None
-    root = path
-    if cur_seq is not None:
-        next_seq = cur_seq + 1
-        # private staging dir — racing rebuild/compaction attempts never
-        # share a directory (published by atomic rename + manifest commit)
-        root = _stage_index_version(spark, path, next_seq)
-    base = _ivf_base(df, id_col, vec_col)
-    try:
-        centroids = _ivf_train(base, n_centroids, n_iters, key)
-        _ivf_assign_pass(base, centroids).withColumn("batch", F.lit("full")).write.mode(
-            "overwrite"
-        ).partitionBy("centroid", "batch").parquet(f"{root}/vectors")
-        # build-time distortion baseline for ivf_index_drift (one pass over
-        # the cache); row count from the same aggregate-free cached base
-        distortion = _mean_distortion(base, centroids)
-        n_rows = base.count()
-    finally:
-        base.unpersist()
-    _put_sidecar(spark, root, "centroids", centroids)
-    # a rebuild restarts the append sequence at 1, so the claim files of the
-    # PREVIOUS generation must go with it: clear them BEFORE resetting the
-    # sidecar (crash between the two leaves old-seq sidecar + no claims —
-    # appends just continue at the old sequence; the reverse order would
-    # leave seq=1 racing into already-claimed tags, a spurious
-    # ConcurrentAppendError per prior append — ADVICE r6)
-    jvm_path, fs = _index_fs(spark, path)
-    fs.delete(jvm_path(f"{root}/append_claims"), True)
-    _write_index_meta_atomic(
-        spark, root,
-        df.schema[id_col].dataType.simpleString(), len(centroids[0]), 1,
+    payload = _RawRows()
+    return _build_index(
+        df.sparkSession, path, payload, payload.rows(df, id_col, vec_col),
+        n_centroids, n_iters, key, compact=False,
     )
-    _put_sidecar(spark, root, "drift_baseline", {
-        "base_distortion": distortion, "base_rows": n_rows,
-    })
-    if next_seq is not None:
-        _publish_index_version(spark, path, next_seq, root)
-        _gc_index_versions(spark, path)
-    return centroids
 
 
 def _write_index_meta_atomic(
@@ -1169,9 +1420,7 @@ def _write_index_meta_atomic(
 
 
 def _load_index_meta(spark, path: str) -> dict | None:
-    """Read the index metadata sidecar, or ``None`` for a pre-sidecar index
-    (then the caller falls back to deriving metadata from the index itself
-    and self-heals by writing the sidecar)."""
+    """Read the index metadata sidecar, or ``None`` when it is absent."""
     return _get_sidecar(spark, path, "index_meta")
 
 
@@ -1183,11 +1432,13 @@ def _append_seq(
 
     ``seq`` is the next append sequence.  The ``index_meta`` sidecar's
     wins — crash-claimed tags can exceed the highest tag holding rows.
-    Without a sidecar it is one past the highest ``append-N`` tag of
-    ``{root}/{table}`` (or of ``tags``, when the caller already holds
-    them): the expensive path, taken once, since the caller then writes
-    the sidecar.  ``used`` is the ``N`` of every ``append-N`` tag read
-    (empty when the sidecar answered alone).
+    Without a sidecar (a crash inside its swap, or a lost file) it is one
+    past the highest ``append-N`` tag of ``{root}/{table}`` (or of
+    ``tags``, when the caller already holds them): the expensive path,
+    taken once, since the caller then writes the sidecar.  Rows without
+    batch tags (an IVF-PQ index written before both kinds shared one
+    layout) cannot answer and fail loudly.  ``used`` is the ``N`` of every
+    ``append-N`` tag read (empty when the sidecar answered alone).
 
     ``claim=(id_type, dim)`` then runs the claim-before-write protocol of
     :func:`ivf_append_index` on ``seq``: check the appended id type
@@ -1196,14 +1447,24 @@ def _append_seq(
     it back (ADVICE r6) — and only then claim ``append-{seq}`` with an
     atomic ``createNewFile``.  A lost race is a loud
     :class:`ConcurrentAppendError`."""
+    from pyspark.errors import AnalysisException
+
     meta = _load_index_meta(spark, root)
     data = f"{root}/{table}"
     if meta is None and tags is None:
         jvm_path, fs = _index_fs(spark, root)
-        tags = [
-            r["batch"]
-            for r in spark.read.parquet(data).select("batch").distinct().collect()
-        ] if fs.exists(jvm_path(data)) else []
+        try:
+            tags = [
+                r["batch"]
+                for r in spark.read.parquet(data).select("batch").distinct().collect()
+            ] if fs.exists(jvm_path(data)) else []
+        except AnalysisException as exc:
+            raise FileNotFoundError(
+                f"index at {root} has no index_meta sidecar and its rows "
+                f"carry no batch tags to derive one from (an IVF-PQ index "
+                f"written before both index kinds shared the "
+                f"centroid=X/batch=Y layout) — rebuild or compact it once"
+            ) from exc
     used = [
         int(str(t).split("-", 1)[1])
         for t in tags or ()
@@ -1239,19 +1500,6 @@ def _append_seq(
             f"sidecar routes the retry to a fresh tag)"
         )
     return seq, used
-
-
-def _recreate_claims(spark, root: str, appends) -> None:
-    """Empty claim files for the preserved ``append-N`` tags of a compacted
-    version ``root``: a stale appender holding a rolled-back sequence then
-    still loses the claim race loudly instead of mixing rows into a
-    preserved tag."""
-    if not appends:
-        return
-    jvm_path, fs = _index_fs(spark, root)
-    fs.mkdirs(jvm_path(f"{root}/append_claims"))
-    for n in appends:
-        fs.createNewFile(jvm_path(f"{root}/append_claims/append-{n}.claim"))
 
 
 def _load_fold_fence(spark, path: str) -> int | None:
@@ -1310,9 +1558,9 @@ def ivf_append_index(
     METADATA-CHEAP by design: the stored id type and the next ``append-N``
     sequence come from the single-row ``index_meta`` sidecar, so an append
     touches the sidecar plus its own new partitions — it never lists or
-    schema-reads the (100 TB) index itself.  A pre-sidecar index falls back
-    to deriving both from the index ONCE and self-heals by writing the
-    sidecar.
+    schema-reads the (100 TB) index itself.  An index that lost the
+    sidecar (a crash inside its swap) falls back to deriving both from the
+    index ONCE and self-heals by writing the sidecar (:func:`_append_seq`).
 
     FAILURE SEMANTICS (both failure modes are loud or clean, never silent):
 
@@ -1329,33 +1577,7 @@ def ivf_append_index(
       would otherwise allow.  The intended discipline is still one appender
       at a time per index; the claim turns a violation into an error.
     """
-    spark = df.sparkSession
-    # versioned (post-compaction) index: all pieces live in the current
-    # committed version dir — appends land there too
-    path = _resolve_index_root(spark, path)
-    cents = _load_centroids(spark, path)
-    from vectordb_watermark_spark.sources.io import vector_dim
-
-    dim = vector_dim(df, vec_col)
-    if dim != len(cents[0]):
-        raise ValueError(
-            f"appended vectors are {dim}-d but the index at {path} is "
-            f"{len(cents[0])}-d"
-        )
-    seq, _ = _append_seq(
-        spark, path, "vectors",
-        claim=(df.schema[id_col].dataType.simpleString(), len(cents[0])),
-    )
-    batch_tag = f"append-{seq}"
-    base = _ivf_base(df, id_col, vec_col)  # persisted: write + count, one scan
-    try:
-        _ivf_assign_pass(base, cents).withColumn("batch", F.lit(batch_tag)).write.mode(
-            "append"
-        ).partitionBy("centroid", "batch").parquet(f"{path}/vectors")
-        n = base.count()
-    finally:
-        base.unpersist()
-    return int(n)
+    return _append_index(df, path, _RawRows(), id_col, vec_col)
 
 
 def _mean_distortion(base: DataFrame, cents: list[list[float]]) -> float:
@@ -1491,8 +1713,9 @@ def ivf_compact_index(
     the maintenance pass that undoes what retrain-free appends accumulate
     (centroid drift from the data distribution, unbounded partition skew).
     Raw vectors are stored, so no external source is needed (unlike IVF-PQ,
-    whose codes are lossy — compact that one by rebuilding from source with
-    :func:`~vectordb_watermark_spark.operators.pq.ivf_pq_write_index`).
+    whose codes are lossy — compact that one from source with
+    :func:`~vectordb_watermark_spark.operators.pq.ivf_pq_compact_index`;
+    both run the one build body, :func:`_build_index`).
 
     ``n_centroids=None`` keeps the stored centroid count.  Tombstones
     (:func:`ivf_delete_ids`) are FOLDED: deleted rows are dropped from
@@ -1542,74 +1765,14 @@ def ivf_compact_index(
     absent from the new version (the claim protocol keeps protecting
     append-vs-append; compact-vs-append needs the same fencing as before).
     """
-    from pyspark import StorageLevel
-
-    cur_seq = _current_index_version(spark, path)
     cur_root = _resolve_index_root(spark, path)
-    next_seq = (cur_seq or 0) + 1
-    # private staging dir: racing attempts never share a directory, so a
-    # loser cannot delete/overwrite a winner's pieces (ADVICE r10 #1);
-    # crashed attempts' staging dirs are GC'd once their seq is stale
-    vdir = _stage_index_version(spark, path, next_seq)
-
-    old_cents = _load_centroids(spark, cur_root)
-    if n_centroids is None:
-        n_centroids = len(old_cents)
-    meta = _load_index_meta(spark, cur_root)
     src = spark.read.parquet(f"{cur_root}/vectors").select(
         "id", "v", F.col("batch").cast("string").alias("batch")
     )
-    # FOLD tombstones: deleted rows are dropped from the rebuilt version
-    # and the tombstone set is not carried forward (ivf_delete_ids).  The
-    # replay fence advances to the highest victim-containing stream batch
-    # (bounded collect: distinct tags of victim rows only) so a
-    # fresh-checkpoint replay of those batches cannot silently resurrect
-    # the deleted rows; the prior fence carries forward regardless.
-    tomb = _load_tombstones(spark, cur_root)
-    fence = _load_fold_fence(spark, cur_root)
-    if tomb is not None:
-        victim_tags = [
-            r["batch"]
-            for r in src.join(tomb, "id", "semi")
-            .select("batch").distinct().collect()
-        ]
-        fence = _folded_stream_fence(fence, victim_tags)
-        src = src.join(tomb, "id", "left_anti")
-    id_type = (
-        meta["id_type"] if meta is not None
-        else src.schema["id"].dataType.simpleString()
+    return _build_index(
+        spark, path, _RawRows(), src, n_centroids, n_iters, key,
+        compact=True, tag=None, gc_keep_last=gc_keep_last,
     )
-    base = src.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        n_rows = base.count()  # materialize: reads of the old version finish
-        # preserved tags (bounded: one row per append/stream batch ever
-        # made) — drive both the carried-forward sequence and the claim
-        # re-creation below
-        seq_keep, appends = _append_seq(
-            spark, cur_root, "vectors",
-            tags=[r["batch"] for r in base.select("batch").distinct().collect()],
-        )
-        centroids = _ivf_train(base, n_centroids, n_iters, key)
-        _ivf_assign_pass(base, centroids, extra=("batch",)).write.mode(
-            "overwrite"
-        ).partitionBy("centroid", "batch").parquet(f"{vdir}/vectors")
-        distortion = _mean_distortion(base, centroids)
-        _put_sidecar(spark, vdir, "centroids", centroids)
-        _write_index_meta_atomic(spark, vdir, id_type, len(centroids[0]), seq_keep)
-        _put_sidecar(spark, vdir, "drift_baseline", {
-            "base_distortion": distortion, "base_rows": n_rows,
-        })
-        _recreate_claims(spark, vdir, appends)
-        if fence is not None:
-            _put_sidecar(spark, vdir, "fold_fence", fence)
-        # every piece is staged — atomic rename onto _v{N}, THE commit,
-        # then GC (skipped entirely under gc_keep_last=None)
-        _publish_index_version(spark, path, next_seq, vdir)
-        if gc_keep_last is not None:
-            _gc_index_versions(spark, path, keep_last=gc_keep_last)
-    finally:
-        base.unpersist()
-    return centroids
 
 
 def ivf_query_index(
@@ -1623,20 +1786,11 @@ def ivf_query_index(
     table, pick the ``n_probe`` nearest, and scan ONLY their partitions —
     the ``centroid IN (...)`` predicate is a partition filter, so pruning
     happens at plan time (asserted in tests), not per row."""
-    import numpy as np
-
     path = _resolve_index_root(spark, path)
-    cents = _load_centroids(spark, path)
-    q = np.asarray(query_vec, dtype=np.float64)
-    order = sorted(
-        (float(((np.asarray(v) - q) ** 2).sum()), i) for i, v in enumerate(cents)
+    probe = _nearest_centroids(_load_centroids(spark, path), query_vec, n_probe)
+    return topk_cosine(
+        _probed_rows(spark, path, "vectors", probe), query_vec, k, "id", "v"
     )
-    probe = [c for _, c in order[:n_probe]]
-    sub = _apply_tombstones(
-        spark.read.parquet(f"{path}/vectors").filter(F.col("centroid").isin(probe)),
-        spark, path,
-    )
-    return topk_cosine(sub, query_vec, k, "id", "v")
 
 
 def ivf_query_index_batch(
@@ -1674,40 +1828,13 @@ def ivf_query_index_batch(
     import numpy as np
 
     path = _resolve_index_root(spark, path)
-    cents = _load_centroids(spark, path)
-    C = np.asarray(cents, dtype=np.float64)
-    qrows = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.col(qvec_col).cast("array<double>").alias("qv"),
-    ).collect()
-    if not qrows:
-        raise ValueError("ivf_query_index_batch: empty query block")
-    qids = [r["qid"] for r in qrows]
-    if len(set(qids)) != len(qids):
-        # a duplicated qid would silently double every result row for it
-        raise ValueError(
-            "ivf_query_index_batch: duplicate qids in the query block"
-        )
-    Q = np.asarray([r["qv"] for r in qrows], dtype=np.float64)
-    qn = np.sqrt((Q**2).sum(axis=1))
-    d2 = (Q**2).sum(1)[:, None] + (C**2).sum(1)[None, :] - 2.0 * (Q @ C.T)
-    probe_per_q = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
-    by_centroid: dict[int, list[int]] = {}
-    for qi in range(Q.shape[0]):
-        for c in probe_per_q[qi]:
-            by_centroid.setdefault(int(c), []).append(qi)
-    probe_union = sorted(by_centroid)
-    qid_type = queries.schema[qid_col].dataType.simpleString()
-    from vectordb_watermark_spark.functions.arrowmat import arrow_type_of
-
-    qid_arrow = arrow_type_of(queries.schema[qid_col].dataType)
-
-    sub = _apply_tombstones(
-        spark.read.parquet(f"{path}/vectors").filter(
-            F.col("centroid").isin(probe_union)
-        ),
-        spark, path,
+    C = np.asarray(_load_centroids(spark, path), dtype=np.float64)
+    qids, Q, qid_type, qid_arrow = _query_block(
+        queries, qid_col, qvec_col, "ivf_query_index_batch"
     )
+    qn = np.sqrt((Q**2).sum(axis=1))
+    by_centroid = _probes_by_centroid(Q, C, n_probe)
+    sub = _probed_rows(spark, path, "vectors", sorted(by_centroid))
     id_type = sub.schema["id"].dataType.simpleString()
 
     def kernel(batches):
@@ -1765,6 +1892,12 @@ def ivf_query_index_batch(
     cand = sub.mapInArrow(
         kernel, schema=f"qid {qid_type}, id {id_type}, cos double"
     )
+    return _top_per_query(cand, k)
+
+
+def _top_per_query(cand: DataFrame, k: int) -> DataFrame:
+    """``(qid, id, cos)`` candidates ranked per query — cos descending,
+    ties to the smallest id — keeping ``rank <= k``."""
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("id").asc())
     return (
         cand.withColumn("rank", F.row_number().over(w).cast("int"))

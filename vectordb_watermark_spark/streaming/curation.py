@@ -157,22 +157,6 @@ def incremental_dedup(
     return _foreach_batch(stream, checkpoint_path, handle)
 
 
-def _check_batch_dim(base, expected: int, sink: str) -> None:
-    """Driver-side guard for streaming steady state: a batch whose vector
-    width does not match the stored index fails the micro-batch with a
-    clear, retry-visible error instead of an opaque numpy broadcast
-    failure inside the executor-side Arrow kernel."""
-    from pyspark.sql import functions as _F
-
-    row = base.select(_F.size("v").alias("d")).first()
-    if row is not None and int(row["d"]) != expected:
-        raise ValueError(
-            f"{sink}: batch vectors are {int(row['d'])}-d but the index "
-            f"is {expected}-d — the stream schema changed under a live "
-            f"index (rebuild, or route the stream to a new index path)"
-        )
-
-
 def _check_replay_fence(
     spark, root: str, batch_id: int, on_fenced_replay: str, sink: str
 ) -> None:
@@ -208,6 +192,107 @@ def _check_replay_fence(
     import warnings
 
     warnings.warn(msg, stacklevel=2)
+
+
+def _index_sink(
+    stream: DataFrame,
+    index_path: str,
+    checkpoint_path: str,
+    sink: str,
+    payload,
+    id_col: str,
+    vec_col: str,
+    n_centroids: int,
+    n_iters: int,
+    key: str,
+    on_fenced_replay: str,
+    maintain,
+):
+    """The one ``foreachBatch`` handler of both streaming index sinks;
+    ``payload`` is ``similarity._RawRows`` or ``pq._PqRows``.  Per
+    micro-batch: the replay fence; the sink's own ``maintain(spark, root,
+    ready, rows, tag)`` (its drift trigger and compaction call) BEFORE any
+    write — foreachBatch handlers are serialized per stream, so between
+    batches is the fence compaction needs; then the bootstrap (the first
+    batch trains the index) or the steady state (assign to the stored
+    centroids, no retrain); then the rows under ``batch=stream-N`` with
+    dynamic partition overwrite, so a checkpoint-retried micro-batch
+    replaces exactly its own partitions."""
+    from pyspark import StorageLevel
+
+    from vectordb_watermark_spark.operators.similarity import (
+        _append_seq,
+        _check_dim,
+        _ivf_assign_pass,
+        _ivf_train,
+        _load_centroids,
+        _load_index_meta,
+        _resolve_index_root,
+        _write_index_meta_atomic,
+        _write_rows,
+    )
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.take(1):
+            return
+        spark = batch_df.sparkSession
+        tag = f"stream-{int(batch_id)}"
+        # resolve the committed version dir PER BATCH, so a compaction
+        # between micro-batches redirects the stream into the new version
+        root = _resolve_index_root(spark, index_path)
+        _check_replay_fence(spark, root, batch_id, on_fenced_replay, sink)
+        jvm_path, fs = _index_fs(spark, root)
+        ready = fs.exists(jvm_path(f"{root}/{payload.marker}"))
+        if ready and _load_index_meta(spark, root) is None:
+            raise FileNotFoundError(
+                f"{sink}: index at {root} has no index_meta sidecar (an "
+                f"IVF-PQ index written before both index kinds shared the "
+                f"centroid=X/batch=Y layout, or a crash inside the sidecar's "
+                f"swap) — rebuild or compact it"
+            )
+        rows = payload.rows(batch_df, id_col, vec_col)
+        maintain(spark, root, ready, rows, tag)
+        root = _resolve_index_root(spark, index_path)  # maybe compacted
+        base = rows.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            if ready:
+                # the shared loader validates the table: an empty, ragged
+                # or older-layout centroid table fails the micro-batch
+                # instead of silently misassigning every later batch
+                cents = _load_centroids(spark, root)
+                _check_dim(base, root, cents, f"{sink}: batch")
+                enc_base = payload.prepare(spark, base, root)
+                assigned = _ivf_assign_pass(enc_base, cents)
+            else:
+                # bootstrap: keyed-hash-seeded training, so a retried
+                # bootstrap rewrites identical artifacts
+                enc_base = payload.prepare(spark, base, None)
+                cents = _ivf_train(enc_base, n_centroids, n_iters, key)
+                assigned = payload.train(_ivf_assign_pass(enc_base, cents), cents)
+                # index_meta BEFORE the marker sidecar (centroids or
+                # pq_codebooks, written last), so a complete bootstrap
+                # always has it.  A re-bootstrap over existing rows must
+                # not reset the append sequence (a 1 would route the next
+                # append into an already-populated append-1 tag): the
+                # sidecar's, else the directory listing's, wins.
+                _write_index_meta_atomic(
+                    spark, root, base.schema["id"].dataType.simpleString(),
+                    len(cents[0]), _append_seq(spark, root, payload.table)[0],
+                )
+                _put_sidecar(spark, root, "centroids", cents)
+                payload.put_sidecars(spark, root)
+            try:
+                _write_rows(payload, assigned, cents, root, tag, "dynamic")
+            finally:
+                assigned.unpersist()
+            if not fs.exists(jvm_path(f"{root}/drift_baseline")):
+                # without a baseline the drift metric has no denominator
+                # and the drift-triggered compaction can never fire
+                payload.put_baseline(spark, root, enc_base, cents)
+        finally:
+            base.unpersist()
+
+    return _foreach_batch(stream, checkpoint_path, handle)
 
 
 def incremental_index(
@@ -284,93 +369,24 @@ def incremental_index(
     operator decision instead.
     """
     from vectordb_watermark_spark.operators.similarity import (
-        _append_seq,
-        _ivf_assign_pass,
-        _ivf_base,
-        _ivf_train,
-        _load_centroids,
-        _mean_distortion,
-        _resolve_index_root,
-        _write_index_meta_atomic,
+        _RawRows,
         ivf_compact_index,
         ivf_index_drift,
     )
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
+    def maintain(spark, root, ready, rows, tag):
+        if not ready or compact_drift_threshold is None:
             return
-        spark = batch_df.sparkSession
-        # versioned (post-compaction) index: resolve the committed version
-        # dir PER BATCH, so a batch-layer compaction between micro-batches
-        # redirects the stream into the new version automatically
-        root = _resolve_index_root(spark, index_path)
-        _check_replay_fence(
-            spark, root, batch_id, on_fenced_replay, "incremental_index"
-        )
-        jvm_path, fs = _index_fs(spark, root)
-        if compact_drift_threshold is not None and fs.exists(
-            jvm_path(f"{root}/centroids")
-        ):
-            d = ivf_index_drift(
-                spark, index_path, sample_fraction=drift_sample_fraction
+        d = ivf_index_drift(spark, index_path, sample_fraction=drift_sample_fraction)
+        if d["drift_ratio"] is not None and d["drift_ratio"] > compact_drift_threshold:
+            ivf_compact_index(
+                spark, index_path, key=key, gc_keep_last=compact_gc_keep_last
             )
-            if (
-                d["drift_ratio"] is not None
-                and d["drift_ratio"] > compact_drift_threshold
-            ):
-                ivf_compact_index(
-                    spark, index_path, key=key,
-                    gc_keep_last=compact_gc_keep_last,
-                )
-                root = _resolve_index_root(spark, index_path)
-        cpath = f"{root}/centroids"
-        base = _ivf_base(batch_df, id_col, vec_col)
-        try:
-            if fs.exists(jvm_path(cpath)):
-                # shared loader validates the table: an empty, ragged or
-                # older-layout centroid table fails the micro-batch instead
-                # of silently misassigning every subsequent batch
-                cents = _load_centroids(spark, root)
-                _check_batch_dim(base, len(cents[0]), "incremental_index")
-            else:
-                cents = _ivf_train(base, n_centroids, n_iters, key)
-                # staged write + rename: a crash mid-bootstrap must not
-                # leave a torn centroid table that every retry then fails
-                # to load (existence implies complete)
-                _put_sidecar(spark, root, "centroids", cents)
-                # metadata sidecar: lets ivf_append_index stay
-                # metadata-cheap on a stream-bootstrapped index too.  A
-                # re-bootstrap OVER existing vectors (deleted centroid
-                # table, or the swap crash window) must not reset the
-                # append sequence — a hardcoded 1 would route the next
-                # append into an already-populated batch=append-1
-                # partition, mixing new rows with stale ones.  Derive it
-                # from the sidecar or the directory listing instead (the
-                # self-heal ivf_append_index uses).
-                _write_index_meta_atomic(
-                    spark, root,
-                    batch_df.schema[id_col].dataType.simpleString(),
-                    len(cents[0]), _append_seq(spark, root, "vectors")[0],
-                )
-                # build-time distortion baseline over the bootstrap batch —
-                # without it ivf_index_drift has no denominator and the
-                # drift-triggered compaction below can never fire
-                _put_sidecar(spark, root, "drift_baseline", {
-                    "base_distortion": _mean_distortion(base, cents),
-                    "base_rows": base.count(),
-                })
-            (
-                _ivf_assign_pass(base, cents)
-                .withColumn("batch", F.lit(f"stream-{int(batch_id)}"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("centroid", "batch")
-                .parquet(f"{root}/vectors")
-            )
-        finally:
-            base.unpersist()
 
-    return _foreach_batch(stream, checkpoint_path, handle)
+    return _index_sink(
+        stream, index_path, checkpoint_path, "incremental_index", _RawRows(),
+        id_col, vec_col, n_centroids, n_iters, key, on_fenced_replay, maintain,
+    )
 
 
 def incremental_pq_index(
@@ -393,18 +409,22 @@ def incremental_pq_index(
     on_fenced_replay: str = "error",
 ):
     """Streaming IVF-PQ index maintenance sink — the compressed twin of
-    :func:`incremental_index`, completing the maintenance symmetry the
-    round-10 ``ivf_pq_index_drift`` metric opened.  Returns the
-    DataStreamWriter (call ``.start()``).
+    :func:`incremental_index`, run by the same handler.  Returns the
+    DataStreamWriter (call ``.start()``).  The index may also be built by
+    ``ivf_pq_write_index`` and appended by ``ivf_pq_append_index``: all
+    three share the ``centroid=X/batch=Y/`` codes layout.
 
     - **bootstrap**: the first batch trains the coarse centroids AND the
       residual PQ codebooks (keyed-hash seeded — deterministic, so a
       retried bootstrap rewrites identical artifacts) and encodes itself;
+      ``index_meta`` is written before ``pq_codebooks``, whose existence
+      marks a complete bootstrap;
     - **steady state**: each batch is assigned to the nearest EXISTING
       centroid and residual-encoded against the STORED codebooks (two
       Arrow passes, one source scan — the ``ivf_pq_append_index``
-      freshness trade), landing in the TAGGED
-      ``centroid=X/batch=stream-N/`` codes layout;
+      freshness trade), landing under ``batch=stream-N``.  An index
+      without ``index_meta`` (an IVF-PQ index written before the kinds
+      shared one layout) fails the micro-batch: rebuild or compact it;
     - **idempotence**: dynamic partition overwrite on ``(centroid,
       batch)`` — a checkpoint-retried micro-batch replaces exactly its
       own ``batch=stream-N`` subpartitions instead of double-appending;
@@ -449,55 +469,23 @@ def incremental_pq_index(
     this sink refuses (``on_fenced_replay='error'``, default) or warns
     on (``'warn'``) any micro-batch at or below it.
     """
-    from vectordb_watermark_spark.operators.opq import (
-        opq_train_rotation,
-        rotate_vectors,
-    )
     from vectordb_watermark_spark.operators.pq import (
-        _load_codebooks,
-        _load_rotation,
-        _pq_base,
-        _residual_encode_pass,
-        _residual_pass,
-        _write_pq_drift_baseline,
+        _PqRows,
         ivf_pq_compact_index,
         ivf_pq_index_drift,
-        pq_train,
     )
     from vectordb_watermark_spark.operators.similarity import (
-        _append_seq,
         _folded_stream_fence,
-        _ivf_assign_pass,
-        _ivf_train,
-        _load_centroids,
         _load_tombstones,
-        _resolve_index_root,
         _swap_dir_atomic,
-        _write_index_meta_atomic,
     )
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        tag = f"stream-{int(batch_id)}"
-        root = _resolve_index_root(spark, index_path)
-        _check_replay_fence(
-            spark, root, batch_id, on_fenced_replay, "incremental_pq_index"
-        )
-        jvm_path, fs = _index_fs(spark, root)
-
-        # 1) drift check BEFORE this batch's writes — between-batch fence
-        if compact_code_tv_threshold is not None and fs.exists(
-            jvm_path(f"{root}/pq_codebooks")
-        ):
+    def maintain(spark, root, ready, rows, tag):
+        if ready and compact_code_tv_threshold is not None:
             d = ivf_pq_index_drift(
                 spark, index_path, sample_fraction=drift_sample_fraction
             )
-            if (
-                d["code_tv"] is not None
-                and d["code_tv"] > compact_code_tv_threshold
-            ):
+            if d["code_tv"] is not None and d["code_tv"] > compact_code_tv_threshold:
                 # tombstones must be folded into the ARCHIVE too, not just
                 # the codes: the compaction clears the tombstone set, so a
                 # LATER recompaction sourcing an unfolded archive would
@@ -530,87 +518,23 @@ def incremental_pq_index(
                         _swap_dir_atomic(
                             spark, staged, f"{archive_path}/batch={tag_}"
                         )
-                src = spark.read.parquet(archive_path)
                 ivf_pq_compact_index(
-                    src, index_path,
+                    spark.read.parquet(archive_path), index_path,
                     coarse_iters=coarse_iters, pq_iters=pq_iters, key=key,
                     id_col="id", vec_col="v", batch_col="batch",
                     gc_keep_last=compact_gc_keep_last,
                     _fence_floor=fence_floor,
                 )
-                root = _resolve_index_root(spark, index_path)
-                jvm_path, fs = _index_fs(spark, root)
+        # archive the raw batch BEFORE its codes (idempotent: its own dir
+        # is overwritten; archive ⊇ committed codes is the recompaction
+        # invariant)
+        rows.write.mode("overwrite").parquet(f"{archive_path}/batch={tag}")
 
-        # 2) archive the raw batch FIRST (idempotent: own dir overwritten;
-        #    archive ⊇ committed codes is the recompaction invariant)
-        raw = _pq_base(batch_df, id_col, vec_col)
-        raw.write.mode("overwrite").parquet(f"{archive_path}/batch={tag}")
-
-        base = raw.persist()
-        try:
-            if fs.exists(jvm_path(f"{root}/pq_codebooks")):
-                cents = _load_centroids(spark, root)
-                books = _load_codebooks(spark, root)
-                _check_batch_dim(base, len(cents[0]), "incremental_pq_index")
-                # OPQ index (bootstrapped with opq=True, or upgraded by a
-                # rotated compaction): centroids/codebooks live in rotated
-                # space — rotate the batch before assign/encode.  The RAW
-                # archive stays unrotated (original space is the
-                # source-of-truth; compaction re-rotates from the sidecar).
-                R = _load_rotation(spark, root)
-                enc_base = (
-                    rotate_vectors(base, R, vec_col="v")
-                    if R is not None else base
-                )
-            else:
-                # bootstrap: deterministic train (coarse + residual PQ),
-                # optionally after a parametric-OPQ rotation trained on
-                # the bootstrap batch (deterministic too — retry-safe)
-                R = (
-                    opq_train_rotation(base, m, vec_col="v")
-                    if opq else None
-                )
-                enc_base = (
-                    rotate_vectors(base, R, vec_col="v")
-                    if R is not None else base
-                )
-                cents = _ivf_train(enc_base, n_centroids, coarse_iters, key)
-                assigned0 = _ivf_assign_pass(enc_base, cents)
-                books = pq_train(
-                    _residual_pass(assigned0, cents),
-                    m, n_codes, pq_iters, key, id_col="id", vec_col="r",
-                )
-                _put_sidecar(spark, root, "centroids", cents)
-                if R is not None:
-                    _put_sidecar(spark, root, "rotation", R.tolist())
-                # codebooks last: their existence marks a complete bootstrap
-                _put_sidecar(spark, root, "pq_codebooks", books.tolist())
-                # sidecar: id type + dim + append sequence (a re-bootstrap
-                # over existing codes must not roll the sequence back —
-                # same self-heal as incremental_index)
-                _write_index_meta_atomic(
-                    spark, root,
-                    batch_df.schema[id_col].dataType.simpleString(),
-                    len(cents[0]), _append_seq(spark, root, "codes")[0],
-                )
-
-            assigned = _ivf_assign_pass(enc_base, cents)
-            (
-                _residual_encode_pass(assigned, cents, books)
-                .withColumn("batch", F.lit(tag))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("centroid", "batch")
-                .parquet(f"{root}/codes")
-            )
-            if not fs.exists(jvm_path(f"{root}/drift_baseline")):
-                # baseline over the bootstrap codes — without it the drift
-                # metric has no denominator and the trigger can never fire
-                _write_pq_drift_baseline(spark, root, books)
-        finally:
-            base.unpersist()
-
-    return _foreach_batch(stream, checkpoint_path, handle)
+    return _index_sink(
+        stream, index_path, checkpoint_path, "incremental_pq_index",
+        _PqRows(m, n_codes, pq_iters, key, opq), id_col, vec_col,
+        n_centroids, coarse_iters, key, on_fenced_replay, maintain,
+    )
 
 
 def incremental_postings(
