@@ -980,3 +980,95 @@ def test_ivf_pq_index_without_index_meta_refuses_writes(spark, tmp_path):
 
     P.ivf_pq_compact_index(df, idx)
     assert P.ivf_pq_append_index(more, idx) == 10
+
+
+def test_incremental_pq_index_refuses_recompaction_dropping_rows(spark, tmp_path):
+    """The sink's drift-triggered recompaction sources only its raw
+    archive.  Streaming into a batch-built, appended index leaves rows
+    the archive lacks (tags ``full``, ``append-1``), so the recompaction
+    is refused loudly and every row stays in the index — instead of a new
+    version silently holding only the archived ``stream-0`` rows.  Rows
+    are matched by id, not by tag: once the archive holds them, under any
+    tag, the retried micro-batch compacts and keeps every row."""
+    import shutil
+
+    from vectordb_watermark_spark.operators import similarity as S
+    from vectordb_watermark_spark.streaming.curation import incremental_pq_index
+
+    idx, arc = str(tmp_path / "pq_built"), str(tmp_path / "pq_built_arc")
+    src = tmp_path / "pq_built_src"
+    src.mkdir()
+    rows = _rows(23, range(90))
+
+    def frame(part):
+        return spark.createDataFrame(part, "id long, emb array<float>")
+
+    P.ivf_pq_write_index(frame(rows[:60]), idx, n_centroids=4, m=4, n_codes=8)
+    shifted = [(i, [x + 3.0 for x in v]) for i, v in rows[60:70]]
+    P.ivf_pq_append_index(frame(shifted), idx)
+
+    def run(part, threshold):
+        """One availableNow run of the sink over ``src`` with one
+        checkpoint, so a failed micro-batch is retried by the next run."""
+        if part:
+            stage = tmp_path / f"stage_{part[0][0]}"
+            frame(part).coalesce(1).write.parquet(str(stage))
+            shutil.copy(next(stage.glob("part-*.parquet")), src / f"{part[0][0]}.parquet")
+        stream = spark.readStream.schema("id long, emb array<float>").parquet(str(src))
+        incremental_pq_index(
+            stream, idx, arc, str(tmp_path / "pq_built_ck"), n_centroids=4, m=4,
+            n_codes=8, compact_code_tv_threshold=threshold,
+        ).trigger(availableNow=True).start().awaitTermination(120)
+
+    def ids():
+        return {
+            r["id"]
+            for r in P.ivf_pq_query_index(spark, idx, rows[0][1], k=100, n_probe=4).collect()
+        }
+
+    run(rows[70:80], None)
+    with pytest.raises(Exception, match=r"\['append-1', 'full'\]"):
+        run(rows[80:], 0.0)
+    assert S._current_index_version(spark, idx) is None
+    assert ids() == set(range(80))
+
+    frame(rows[:60] + shifted).withColumnRenamed("emb", "v").write.parquet(
+        f"{arc}/batch=backfill"
+    )
+    run([], 0.0)
+    assert S._current_index_version(spark, idx) == 1
+    assert ids() == set(range(90))
+
+
+def test_incremental_index_restores_lost_index_meta(spark, tmp_path):
+    """A raw IVF index that lost its index_meta sidecar (a crash inside
+    its swap, or a stream bootstrap that wrote the centroids first) keeps
+    streaming: the micro-batch re-derives the sidecar from the batch tags
+    and lands beside the stored rows."""
+    import os
+
+    from vectordb_watermark_spark.operators import similarity as S
+    from vectordb_watermark_spark.streaming.curation import incremental_index
+
+    idx = str(tmp_path / "ivf_lost_meta")
+    rows = _rows(29, range(40))
+
+    def frame(part):
+        return spark.createDataFrame(part, "id long, emb array<float>")
+
+    S.ivf_write_index(frame(rows[:20]), idx, n_centroids=4, n_iters=1)
+    S.ivf_append_index(frame(rows[20:30]), idx)
+    os.remove(f"{idx}/index_meta")
+    _one_micro_batch(
+        spark, tmp_path, rows[30:],
+        lambda s, ck: incremental_index(s, idx, ck, n_centroids=4),
+    )
+    assert S._load_index_meta(spark, idx) == {
+        "id_type": "bigint", "dim": 8, "next_append_seq": 2,
+    }
+    got = {
+        r["id"]
+        for r in S.ivf_query_index(spark, idx, rows[0][1], k=100, n_probe=4).collect()
+    }
+    assert got == set(range(40))
+    assert S.ivf_append_index(frame(_rows(30, range(40, 45))), idx) == 5

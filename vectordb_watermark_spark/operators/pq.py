@@ -46,6 +46,8 @@ vector DB); cited pattern is the public FAISS/ScaNN architecture.
 
 from __future__ import annotations
 
+from dataclasses import dataclass, replace
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -504,32 +506,35 @@ def _residual_pass(assigned: DataFrame, cents: list[list[float]]) -> DataFrame:
     return assigned.mapInArrow(kernel, schema=f"id {id_type}, r array<float>")
 
 
+@dataclass(frozen=True, eq=False)
 class _PqRows:
     """The IVF-PQ payload of the shared index lifecycle
     (``similarity._RawRows`` documents the interface): rows hold the
     residual PQ codes, an optional OPQ rotation pre-transforms the
     vectors, residual codebooks are trained after the coarse centroids,
     and the drift baseline is the decoded residual energy and code
-    histogram of the written codes."""
+    histogram of the written codes.  ``books`` and ``R`` are the
+    codebooks and the OPQ rotation, set only on the payloads that
+    ``prepare`` and ``train`` return."""
+
+    m: int | None = None
+    n_codes: int | None = None
+    iters: int = 3
+    key: str = "ivfpq"
+    opq: bool = False
+    opq_iters: int = 0
+    opq_sample_fraction: float | None = None
+    books: np.ndarray | None = None
+    R: np.ndarray | None = None
 
     table = "codes"
     marker = "pq_codebooks"
-
-    def __init__(
-        self, m=None, n_codes=None, iters=3, key="ivfpq", opq=False,
-        opq_iters=0, opq_sample_fraction=None,
-    ):
-        self.m, self.n_codes, self.iters, self.key = m, n_codes, iters, key
-        self.opq, self.opq_iters = opq, opq_iters
-        self.opq_sample_fraction = opq_sample_fraction
-        self.books = self.R = None
-
     # cast to array<float> FIRST: append-time and build-time encoding must
     # see bit-identical inputs, or a float64 source column could flip
     # argmin ties and diverge appended codes from a rebuild's (ADVICE r8)
     rows = staticmethod(_pq_base)
 
-    def prepare(self, spark, base: DataFrame, root: str | None) -> DataFrame:
+    def prepare(self, spark, base: DataFrame, root: str | None):
         """Load the codebooks stored at ``root`` (an unset ``m`` /
         ``n_codes`` keeps their geometry) and rotate into the index's OPQ
         space: the rotation stored at ``root`` (compaction never silently
@@ -537,29 +542,32 @@ class _PqRows:
         trained on ``base`` when ``opq``."""
         from vectordb_watermark_spark.operators import opq as O
 
+        p = self
         if root is not None:
-            self.books = _load_codebooks(spark, root)
-            self.m = self.m or self.books.shape[0]
-            self.n_codes = self.n_codes or self.books.shape[1]
-        self.R = None if root is None else _load_rotation(spark, root)
-        if self.R is None and self.opq:
-            self.R = O.opq_train_rotation(base, self.m, vec_col="v")
-            if self.opq_iters > 0:
-                self.R = O.opq_refine_rotation(
-                    base, self.m, R0=self.R, n_codes=self.n_codes,
-                    n_iter=self.opq_iters, kmeans_iters=self.iters,
-                    key=self.key, id_col="id", vec_col="v",
-                    sample_fraction=self.opq_sample_fraction,
+            books = _load_codebooks(spark, root)
+            p = replace(
+                p, books=books, R=_load_rotation(spark, root),
+                m=p.m or books.shape[0], n_codes=p.n_codes or books.shape[1],
+            )
+        if p.R is None and p.opq:
+            R = O.opq_train_rotation(base, p.m, vec_col="v")
+            if p.opq_iters > 0:
+                R = O.opq_refine_rotation(
+                    base, p.m, R0=R, n_codes=p.n_codes,
+                    n_iter=p.opq_iters, kmeans_iters=p.iters,
+                    key=p.key, id_col="id", vec_col="v",
+                    sample_fraction=p.opq_sample_fraction,
                 )
-        return base if self.R is None else O.rotate_vectors(base, self.R, vec_col="v")
+            p = replace(p, R=R)
+        return (base if p.R is None else O.rotate_vectors(base, p.R, vec_col="v")), p
 
-    def train(self, assigned: DataFrame, cents) -> DataFrame:
+    def train(self, assigned: DataFrame, cents):
         assigned = assigned.persist()
-        self.books = pq_train(
+        books = pq_train(
             _residual_pass(assigned.select("id", "v", "centroid"), cents),
             self.m, self.n_codes, self.iters, self.key, id_col="id", vec_col="r",
         )
-        return assigned
+        return assigned, replace(self, books=books)
 
     def encode(self, assigned: DataFrame, cents, extra=()) -> DataFrame:
         return _residual_encode_pass(assigned, cents, self.books, extra=extra)
@@ -638,10 +646,10 @@ def ivf_pq_write_index(
     """
     from vectordb_watermark_spark.operators.similarity import _build_index
 
-    payload = _PqRows(m, n_codes, pq_iters, key, opq, opq_iters, opq_sample_fraction)
-    cents = _build_index(
-        df.sparkSession, path, payload, _pq_base(df, id_col, vec_col),
-        n_centroids, coarse_iters, key, compact=False,
+    cents, payload = _build_index(
+        df.sparkSession, path,
+        _PqRows(m, n_codes, pq_iters, key, opq, opq_iters, opq_sample_fraction),
+        _pq_base(df, id_col, vec_col), n_centroids, coarse_iters, key, compact=False,
     )
     return cents, payload.books
 
@@ -722,12 +730,12 @@ def ivf_pq_compact_index(
         F.col(vec_col).cast("array<float>").alias("v"),
         *([F.col(batch_col).cast("string").alias("batch")] if batch_col else []),
     )
-    payload = _PqRows(m, n_codes, pq_iters, key, opq)
     # _fence_floor: the streaming sink pre-folds its raw archive (so this
     # source no longer CONTAINS the victims) and passes the victim
     # watermark it computed doing so — committed here with the version
-    cents = _build_index(
-        df.sparkSession, path, payload, base, n_centroids, coarse_iters, key,
+    cents, payload = _build_index(
+        df.sparkSession, path, _PqRows(m, n_codes, pq_iters, key, opq), base,
+        n_centroids, coarse_iters, key,
         compact=True, tag=None if batch_col is not None else "full",
         gc_keep_last=gc_keep_last, fence_floor=_fence_floor,
     )

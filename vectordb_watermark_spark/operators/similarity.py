@@ -989,13 +989,16 @@ def _load_centroids(spark, path: str) -> list[list[float]]:
     return [[float(x) for x in c] for c in cents]
 
 
+def _ivf_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The ``(id, v)`` projection of a raw-vector source."""
+    return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+
+
 def _ivf_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Persisted ``(id, v)`` projection shared by every IVF build pass."""
     from pyspark import StorageLevel
 
-    return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    return _ivf_rows(df, id_col, vec_col).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _ivf_train(
@@ -1140,28 +1143,30 @@ class _RawRows:
     - ``table``: the rows directory; ``marker``: the sidecar a stream
       bootstrap writes last (its existence marks a complete bootstrap);
     - ``rows(df, id_col, vec_col)``: the ``(id, v)`` projection;
-    - ``prepare(spark, base, root)``: load the payload sidecars of the
-      index stored at ``root`` (None: a new index), then pre-transform
-      ``base`` into index space;
-    - ``train(assigned, cents)``: training after the coarse centroids,
-      over the assignment pass (returned, maybe persisted);
+    - ``prepare(spark, base, root) -> (base, payload)``: pre-transform
+      ``base`` into index space, and return the payload holding the
+      artifacts of the index stored at ``root`` (None: a new index);
+    - ``train(assigned, cents) -> (assigned, payload)``: training after
+      the coarse centroids, over the assignment pass (returned, maybe
+      persisted), and the payload holding what it trained;
     - ``encode(assigned, cents, extra)``: the rows written per
       assignment-pass row, ``extra`` columns riding through;
     - ``put_sidecars(spark, root)`` and ``put_baseline(spark, root, base,
       cents)``: the payload's sidecars and its drift baseline (called
-      while ``base`` is still cached, after the rows are written)."""
+      while ``base`` is still cached, after the rows are written).
+
+    A payload is never changed in place: ``prepare`` and ``train`` return
+    a new one, and only the returned one can encode or write sidecars."""
 
     table = "vectors"
     marker = "centroids"
+    rows = staticmethod(_ivf_rows)
 
-    def rows(self, df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-        return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    def prepare(self, spark, base: DataFrame, root: str | None):
+        return base, self
 
-    def prepare(self, spark, base: DataFrame, root: str | None) -> DataFrame:
-        return base
-
-    def train(self, assigned: DataFrame, cents) -> DataFrame:
-        return assigned
+    def train(self, assigned: DataFrame, cents):
+        return assigned, self
 
     def encode(self, assigned: DataFrame, cents, extra=()) -> DataFrame:
         return assigned
@@ -1205,10 +1210,11 @@ def _build_index(
     tag: str | None = "full",
     gc_keep_last: int | None = 1,
     fence_floor: int | None = None,
-) -> list[list[float]]:
+):
     """The one build body of both index kinds — a write
     (``compact=False``) or a compaction of the index at ``path`` from
-    ``base``'s ``(id, v[, batch])`` rows; returns the centroids.
+    ``base``'s ``(id, v[, batch])`` rows; returns the centroids and the
+    trained payload.
 
     Rows are tagged ``tag``, or keep their own ``batch`` column when
     ``tag`` is None; a compaction's ``n_centroids=None`` keeps the stored
@@ -1233,7 +1239,7 @@ def _build_index(
         # dirs are GC'd once their seq is stale
         next_seq = (cur_seq or 0) + 1
         root = _stage_index_version(spark, path, next_seq)
-    base = payload.prepare(spark, base, cur_root if compact else None)
+    base, payload = payload.prepare(spark, base, cur_root if compact else None)
     seq, appends, fence = 1, [], None
     if compact:
         # FOLD tombstones: deleted rows are dropped from the rebuilt
@@ -1271,7 +1277,7 @@ def _build_index(
             base, cents, extra=() if tag is not None else ("batch",)
         )
         try:
-            assigned = payload.train(assigned, cents)
+            assigned, payload = payload.train(assigned, cents)
             _write_rows(payload, assigned, cents, root, tag, "overwrite")
         finally:
             assigned.unpersist()
@@ -1305,7 +1311,7 @@ def _build_index(
         _publish_index_version(spark, path, next_seq, root)
         if gc_keep_last is not None:
             _gc_index_versions(spark, path, keep_last=gc_keep_last)
-    return cents
+    return cents, payload
 
 
 def _check_dim(rows: DataFrame, root: str, cents, what: str) -> int:
@@ -1337,7 +1343,7 @@ def _append_index(df: DataFrame, path: str, payload, id_col: str, vec_col: str) 
     root = _resolve_index_root(spark, path)
     cents = _load_centroids(spark, root)
     rows = payload.rows(df, id_col, vec_col)
-    base = payload.prepare(spark, rows, root)
+    base, payload = payload.prepare(spark, rows, root)
     seq, _ = _append_seq(
         spark, root, payload.table,
         claim=(
@@ -1395,11 +1401,10 @@ def ivf_write_index(
     semantics as :func:`ivf_compact_index`.  Either way a rebuild restarts
     the append sequence at 1.
     """
-    payload = _RawRows()
     return _build_index(
-        df.sparkSession, path, payload, payload.rows(df, id_col, vec_col),
+        df.sparkSession, path, _RawRows(), _ivf_rows(df, id_col, vec_col),
         n_centroids, n_iters, key, compact=False,
-    )
+    )[0]
 
 
 def _write_index_meta_atomic(
@@ -1465,15 +1470,8 @@ def _append_seq(
                 f"written before both index kinds shared the "
                 f"centroid=X/batch=Y layout) — rebuild or compact it once"
             ) from exc
-    used = [
-        int(str(t).split("-", 1)[1])
-        for t in tags or ()
-        if str(t).startswith("append-")
-    ]
-    if meta is not None:
-        seq = int(meta["next_append_seq"])
-    else:
-        seq = max(used, default=0) + 1
+    used = _tag_ids(tags or (), "append")
+    seq = int(meta["next_append_seq"]) if meta is not None else max(used, default=0) + 1
     if claim is None:
         return seq, used
     new_t, dim = claim
@@ -1519,14 +1517,15 @@ def _load_fold_fence(spark, path: str) -> int | None:
     return None if fence is None else int(fence)
 
 
+def _tag_ids(tags, kind: str) -> list[int]:
+    """The ``N`` of every ``{kind}-N`` batch tag among ``tags``."""
+    return [int(str(t).split("-", 1)[1]) for t in tags if str(t).startswith(f"{kind}-")]
+
+
 def _folded_stream_fence(prior: int | None, victim_tags) -> int | None:
     """Next fence value: max of the carried-forward fence and the
     ``stream-N`` ids among the victim-containing batch tags."""
-    ids = [
-        int(str(t).split("-", 1)[1])
-        for t in victim_tags
-        if str(t).startswith("stream-")
-    ]
+    ids = _tag_ids(victim_tags, "stream")
     if prior is not None:
         ids.append(int(prior))
     return max(ids) if ids else None
@@ -1772,7 +1771,7 @@ def ivf_compact_index(
     return _build_index(
         spark, path, _RawRows(), src, n_centroids, n_iters, key,
         compact=True, tag=None, gc_keep_last=gc_keep_last,
-    )
+    )[0]
 
 
 def ivf_query_index(

@@ -209,8 +209,9 @@ def _index_sink(
     maintain,
 ):
     """The one ``foreachBatch`` handler of both streaming index sinks;
-    ``payload`` is ``similarity._RawRows`` or ``pq._PqRows``.  Per
-    micro-batch: the replay fence; the sink's own ``maintain(spark, root,
+    ``payload`` is ``similarity._RawRows`` or ``pq._PqRows``, prepared
+    afresh per micro-batch.  Per micro-batch: the replay fence; the
+    ``index_meta`` repair; the sink's own ``maintain(spark, root,
     ready, rows, tag)`` (its drift trigger and compaction call) BEFORE any
     write — foreachBatch handlers are serialized per stream, so between
     batches is the fence compaction needs; then the bootstrap (the first
@@ -243,14 +244,17 @@ def _index_sink(
         _check_replay_fence(spark, root, batch_id, on_fenced_replay, sink)
         jvm_path, fs = _index_fs(spark, root)
         ready = fs.exists(jvm_path(f"{root}/{payload.marker}"))
-        if ready and _load_index_meta(spark, root) is None:
-            raise FileNotFoundError(
-                f"{sink}: index at {root} has no index_meta sidecar (an "
-                f"IVF-PQ index written before both index kinds shared the "
-                f"centroid=X/batch=Y layout, or a crash inside the sidecar's "
-                f"swap) — rebuild or compact it"
-            )
         rows = payload.rows(batch_df, id_col, vec_col)
+        id_type = rows.schema["id"].dataType.simpleString()
+        if ready and _load_index_meta(spark, root) is None:
+            # a crash inside the sidecar's swap, or a raw IVF index
+            # bootstrapped before index_meta preceded the centroids: re-derive
+            # it from the tags as an append does.  Flat IVF-PQ codes (written
+            # before both kinds shared one layout) carry no tags and raise.
+            _write_index_meta_atomic(
+                spark, root, id_type, len(_load_centroids(spark, root)[0]),
+                _append_seq(spark, root, payload.table)[0],
+            )
         maintain(spark, root, ready, rows, tag)
         root = _resolve_index_root(spark, index_path)  # maybe compacted
         base = rows.persist(StorageLevel.MEMORY_AND_DISK)
@@ -261,14 +265,14 @@ def _index_sink(
                 # instead of silently misassigning every later batch
                 cents = _load_centroids(spark, root)
                 _check_dim(base, root, cents, f"{sink}: batch")
-                enc_base = payload.prepare(spark, base, root)
+                enc_base, p = payload.prepare(spark, base, root)
                 assigned = _ivf_assign_pass(enc_base, cents)
             else:
                 # bootstrap: keyed-hash-seeded training, so a retried
                 # bootstrap rewrites identical artifacts
-                enc_base = payload.prepare(spark, base, None)
+                enc_base, p = payload.prepare(spark, base, None)
                 cents = _ivf_train(enc_base, n_centroids, n_iters, key)
-                assigned = payload.train(_ivf_assign_pass(enc_base, cents), cents)
+                assigned, p = p.train(_ivf_assign_pass(enc_base, cents), cents)
                 # index_meta BEFORE the marker sidecar (centroids or
                 # pq_codebooks, written last), so a complete bootstrap
                 # always has it.  A re-bootstrap over existing rows must
@@ -276,19 +280,19 @@ def _index_sink(
                 # append into an already-populated append-1 tag): the
                 # sidecar's, else the directory listing's, wins.
                 _write_index_meta_atomic(
-                    spark, root, base.schema["id"].dataType.simpleString(),
-                    len(cents[0]), _append_seq(spark, root, payload.table)[0],
+                    spark, root, id_type, len(cents[0]),
+                    _append_seq(spark, root, payload.table)[0],
                 )
                 _put_sidecar(spark, root, "centroids", cents)
-                payload.put_sidecars(spark, root)
+                p.put_sidecars(spark, root)
             try:
-                _write_rows(payload, assigned, cents, root, tag, "dynamic")
+                _write_rows(p, assigned, cents, root, tag, "dynamic")
             finally:
                 assigned.unpersist()
             if not fs.exists(jvm_path(f"{root}/drift_baseline")):
                 # without a baseline the drift metric has no denominator
                 # and the drift-triggered compaction can never fire
-                payload.put_baseline(spark, root, enc_base, cents)
+                p.put_baseline(spark, root, enc_base, cents)
         finally:
             base.unpersist()
 
@@ -410,9 +414,11 @@ def incremental_pq_index(
 ):
     """Streaming IVF-PQ index maintenance sink — the compressed twin of
     :func:`incremental_index`, run by the same handler.  Returns the
-    DataStreamWriter (call ``.start()``).  The index may also be built by
-    ``ivf_pq_write_index`` and appended by ``ivf_pq_append_index``: all
-    three share the ``centroid=X/batch=Y/`` codes layout.
+    DataStreamWriter (call ``.start()``).  ``ivf_pq_write_index``,
+    ``ivf_pq_append_index`` and this sink share the ``centroid=X/batch=Y/``
+    codes layout, so the sink can stream into a batch-built index; its
+    drift-triggered recompaction then refuses (see below) unless the
+    archive holds those rows too.
 
     - **bootstrap**: the first batch trains the coarse centroids AND the
       residual PQ codebooks (keyed-hash seeded — deterministic, so a
@@ -422,9 +428,10 @@ def incremental_pq_index(
     - **steady state**: each batch is assigned to the nearest EXISTING
       centroid and residual-encoded against the STORED codebooks (two
       Arrow passes, one source scan — the ``ivf_pq_append_index``
-      freshness trade), landing under ``batch=stream-N``.  An index
-      without ``index_meta`` (an IVF-PQ index written before the kinds
-      shared one layout) fails the micro-batch: rebuild or compact it;
+      freshness trade), landing under ``batch=stream-N``.  A lost
+      ``index_meta`` is re-derived from the batch tags; an IVF-PQ index
+      written before the kinds shared one layout has none and fails the
+      micro-batch: rebuild or compact it;
     - **idempotence**: dynamic partition overwrite on ``(centroid,
       batch)`` — a checkpoint-retried micro-batch replaces exactly its
       own ``batch=stream-N`` subpartitions instead of double-appending;
@@ -448,6 +455,12 @@ def incremental_pq_index(
       UNSATURATED trigger; the energy ratio saturates at training-scale
       codewords — exceeds the threshold.  Tags survive the rebuild, so
       a retry racing a compaction still overwrites its own partitions.
+      The archive is the recompaction's ONLY source, so when the index
+      holds live rows whose ids the archive lacks (``full`` rows from
+      ``ivf_pq_write_index``, ``append-N`` rows from
+      ``ivf_pq_append_index``) the micro-batch fails instead of
+      dropping them: archive their raw vectors, or run without the
+      threshold.
       GC keeps the previous version by default (``compact_gc_keep_last=2``)
       because streaming compactions are routine, not rare maintenance.
 
@@ -486,6 +499,27 @@ def incremental_pq_index(
                 spark, index_path, sample_fraction=drift_sample_fraction
             )
             if d["code_tv"] is not None and d["code_tv"] > compact_code_tv_threshold:
+                # the archive is the compaction's ONLY source: live rows
+                # it lacks (written by ivf_pq_write_index or
+                # ivf_pq_append_index) would vanish from the new version —
+                # refuse instead.  Matched by id, not by tag: a compaction
+                # without batch_col re-tags archived rows "full".
+                tomb = _load_tombstones(spark, root)
+                lost = spark.read.parquet(f"{root}/codes").select("id", "batch")
+                for gone in (tomb, _read_batches(spark, archive_path, None)):
+                    if gone is not None:
+                        lost = lost.join(gone.select("id"), "id", "left_anti")
+                missing = sorted(
+                    r["batch"] for r in lost.select("batch").distinct().collect()
+                )
+                if missing:
+                    raise ValueError(
+                        f"incremental_pq_index: recompacting from the raw "
+                        f"archive {archive_path} would drop the index rows it "
+                        f"lacks, of batch tags {missing}: archive their (id, v) "
+                        f"rows under {archive_path}/batch=<tag>/, or unset "
+                        f"compact_code_tv_threshold"
+                    )
                 # tombstones must be folded into the ARCHIVE too, not just
                 # the codes: the compaction clears the tombstone set, so a
                 # LATER recompaction sourcing an unfolded archive would
@@ -495,7 +529,6 @@ def incremental_pq_index(
                 # swap, and a crash mid-fold self-heals — the tombstones
                 # are still in place until the compaction commits, so the
                 # retry just folds the remaining dirs.
-                tomb = _load_tombstones(spark, root)
                 fence_floor = None
                 if tomb is not None:
                     arc = spark.read.parquet(archive_path)
